@@ -104,12 +104,25 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Round-robin repartition an under-partitioned input to the session's
-    parallelism. Single-file local inputs arrive as one task (a parquet
-    scan cannot split below a row-group boundary); CPU-heavy scalar
-    stages (hashing, regex, per-row lambdas) must not serialize on it.
-    On a real cluster the source is already split, so this is a no-op.
+def _spread(
+    spark: SparkSession, df: DataFrame, key: str | None = None
+) -> DataFrame:
+    """Repartition an under-partitioned input to the session's parallelism.
+    Single-file local inputs arrive as one task (a parquet scan cannot
+    split below a row-group boundary); CPU-heavy scalar stages (hashing,
+    regex, per-row lambdas) must not serialize on it. On a real cluster
+    the source is already split, so this is a no-op.
+
+    Without ``key`` the repartition is round-robin. With ``key`` it is a
+    hash repartition on that column, for an aggregate above it (guide
+    §2.5 input skew): a keyless repartition first pays
+    sortBeforeRepartition's local sort of the whole input ON the single
+    scan task (measured a net LOSS on every scan->aggregate query), while
+    hash partitioning is deterministic per row and ships rows straight
+    out (measured 1.22 -> 0.86 s on the Q1 aggregate at sf0.1). Partial
+    aggregation still runs before the SECOND (groupBy) exchange; the
+    catalog's exact scaled-long convention makes the regrouped partial
+    sums bit-identical.
 
     r16: frames straight from sources/parquet.load_table carry the
     footer-derived effective split count (_ff_scan_splits), so the
@@ -122,30 +135,11 @@ def _spread(spark: SparkSession, df: DataFrame) -> DataFrame:
     splits = getattr(df, "_ff_scan_splits", None)
     if splits is None:
         splits = df.rdd.getNumPartitions()
-    if splits < max(2, target // 2):
+    if splits >= max(2, target // 2):
+        return df
+    if key is None:
         return df.repartition(target)
-    return df
-
-
-def _spread_hash(spark: SparkSession, df: DataFrame, key: str) -> DataFrame:
-    """Hash-repartition an under-partitioned input on ``key`` so the
-    aggregate above it parallelizes (guide §2.5 input skew: the testdata
-    tables are single-row-group files — one scan task no matter the split
-    count). Hash, NOT round-robin: a keyless repartition first pays
-    sortBeforeRepartition's local sort of the whole input ON the single
-    scan task (measured a net LOSS on every scan->aggregate query), while
-    hash partitioning is deterministic per row and ships rows straight
-    out (measured 1.22 -> 0.86 s on the Q1 aggregate at sf0.1). Partial
-    aggregation still runs before the SECOND (groupBy) exchange; the
-    catalog's exact scaled-long convention makes the regrouped partial
-    sums bit-identical. No-op on inputs that can already parallelize."""
-    target = spark.sparkContext.defaultParallelism
-    splits = getattr(df, "_ff_scan_splits", None)
-    if splits is None:
-        splits = df.rdd.getNumPartitions()
-    if splits < max(2, target // 2):
-        return df.repartition(target, F.col(key))
-    return df
+    return df.repartition(target, F.col(key))
 
 
 # ===========================================================================
@@ -641,7 +635,7 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r17: keyed on l_shipdate (already in the filter) instead of
     # l_orderkey so the repartition key never widens the scan's
     # ReadSchema — 7 columns, not 8 (tests/test_scan_pushdown.py).
-    li = _spread_hash(spark, _t(spark, sf_dir, "lineitem"), "l_shipdate")
+    li = _spread(spark, _t(spark, sf_dir, "lineitem"), key="l_shipdate")
     qty = F.col("l_quantity").cast("long")
     price_c = F.round(F.col("l_extendedprice") * 100).cast("long")
     disc_p = F.round(F.col("l_discount") * 100).cast("long")

@@ -23,6 +23,13 @@ from pyspark.sql import functions as F
 from ..functions import text as TX
 from ..functions import vectors as V
 from ..operators import similarity as SIM
+from ..operators.dedup import (
+    JACCARD_THRESHOLD,
+    band_rows,
+    blocked_pairs,
+    jaccard_pairs,
+    shingle_sets,
+)
 from .catalog import _register, _register_retired, _spread, _t
 from .northstar import (
     _NEAR_CORPUS_SQL,
@@ -1387,7 +1394,7 @@ _INC_BATCH_MOD = "% 5 = 4"  # ~20% of the near corpus plays the increment
     "doc (doc_id order = arrival order within the increment); matched_id "
     "is the smallest eligible partner, n_matches the eligible-partner "
     "count. 100 TB shape: the base corpus's LSH band table is a PERSISTED "
-    "index bucketed by band_key (minhash_bands_from in plans/northstar.py; "
+    "index bucketed by band_key (band_rows in operators/dedup.py; "
     "write/probe with a zero-Exchange index side pinned by "
     "tests/test_dedup_index.py) — each increment computes signatures for "
     "ITS OWN docs only and probes the index, so per-increment cost is "
@@ -2233,18 +2240,14 @@ def q_embedding_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # final projection; it materializes once inside the final job and the
     # self-join is a pure cid-key shuffle (same measured pattern as the
     # LSH band table).
-    a = cells.alias("a")
-    b = cells.alias("b")
+    va = cells.select(F.col("vec_id").alias("a_id"), F.col("vn").alias("a_vn"))
+    vb = cells.select(F.col("vec_id").alias("b_id"), F.col("vn").alias("b_vn"))
     dups = (
-        a.join(
-            b,
-            (F.col("a.cid") == F.col("b.cid"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .filter(
-            F.round(V.dot(F.col("a.vn"), F.col("b.vn")), 6) >= _SEM_TAU
-        )
-        .select(F.col("b.vec_id").alias("vec_id"))
+        blocked_pairs(cells, "vec_id", ("cid",))
+        .join(va, "a_id")
+        .join(vb, "b_id")
+        .filter(F.round(V.dot(F.col("a_vn"), F.col("b_vn")), 6) >= _SEM_TAU)
+        .select(F.col("b_id").alias("vec_id"))
         .dropDuplicates()
     )
     return cells.select("vec_id", "cid").join(
@@ -4508,7 +4511,6 @@ _LSH_RECALL_SAMPLE_MOD = 29
 
 def _lsh_recall_oracle() -> str:
     from .northstar import (
-        _JACCARD_THRESHOLD,
         _NEAR_CORPUS_SQL,
         _SQL_SHINGLES,
         _SQL_TOKS,
@@ -4538,7 +4540,7 @@ def _lsh_recall_oracle() -> str:
       JOIN sizes sa ON sa.doc_id = i.a_id
       JOIN sizes sb ON sb.doc_id = i.b_id
       WHERE CAST(i.inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.inter)
-              >= {_JACCARD_THRESHOLD}
+              >= {JACCARD_THRESHOLD}
     ),
     lsh AS (
       SELECT a_id, b_id FROM ({_near_dup_oracle()})
@@ -4572,16 +4574,13 @@ def _lsh_recall_oracle() -> str:
     tags=("dedup", "northstar", "measured"),
 )
 def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .northstar import _JACCARD_THRESHOLD, _near_corpus
+    from .northstar import _near_corpus
 
     corpus = _spread(spark, _near_corpus(spark, sf_dir))
     toks = corpus.select(
         "doc_id", TX.tokens(F.col("text")).alias("toks")
     ).localCheckpoint(eager=False)
-    shin = toks.select(
-        "doc_id",
-        F.array_distinct(TX.shingles(F.col("toks"), 3)).alias("sh"),
-    ).localCheckpoint(eager=False)
+    shin = shingle_sets(toks)
     sizes = shin.select("doc_id", F.size("sh").alias("n_sh"))
     post = shin.select(
         "doc_id", F.explode("sh").alias("s")
@@ -4607,7 +4606,7 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(
             F.col("inter").cast("double")
             / (F.col("na") + F.col("nb") - F.col("inter"))
-            >= F.lit(_JACCARD_THRESHOLD)
+            >= F.lit(JACCARD_THRESHOLD)
         )
         .select("a_id", "b_id")
         .localCheckpoint(eager=False)
@@ -5567,7 +5566,10 @@ def q_embedding_tombstone_ingest(
 # contract, ids content-immutable), dup_hist (fingerprint accepted under
 # another id), else accepted.
 # ===========================================================================
-from ..streaming.corpus import _DEFAULT_BUCKETS as _CORPUS_N_BUCKETS  # noqa: E402
+from ..streaming.corpus import (  # noqa: E402
+    _DEFAULT_BUCKETS as _CORPUS_N_BUCKETS,
+    _token_frame,
+)
 # imported, not copied: the twin's bucket column must stay the production
 # partition key even if the store default is retuned
 
@@ -5708,6 +5710,45 @@ def q_docs_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the batch detector's own parameters, so the accepted-corpus invariant
 # is checkable by running docs_near_dup_pairs over the store).
 # ===========================================================================
+def _near_dup_drops(batch: DataFrame, hist: DataFrame) -> DataFrame:
+    """(doc_id, _nd) for the batch docs of two (doc_id, text) frames that
+    lose an in-batch verified pair (the lowest doc_id wins) or verify
+    against ANY history doc: the near-dup tier of
+    NearDupCorpusStore.ingest_batch, built from the same operators/dedup
+    functions the store calls, so spec fidelity is by construction.
+
+    ONE tagged shingle->minhash->band pipeline serves both sides (r16,
+    guide §1.2 / §2.4): the per-row values are pure functions of text,
+    the id sets are disjoint (a batch id present in history classifies
+    'replayed' and never reaches the near tier), and the tag filters
+    recover exactly the two per-side frames with half the barriers (each
+    is a full Catalyst pass)."""
+    tagged = batch.withColumn("_side", F.lit("b")).unionByName(
+        hist.withColumn("_side", F.lit("h"))
+    )
+    shin_all = shingle_sets(_token_frame(tagged, ("_side",)), carry=("_side",))
+    bands_all = band_rows(shin_all, carry=("_side",)).localCheckpoint(
+        eager=False
+    )
+
+    def side(df: DataFrame, tag: str) -> DataFrame:
+        return df.filter(F.col("_side") == tag).drop("_side")
+
+    shin, hshin = side(shin_all, "b"), side(shin_all, "h")
+    bands, hbands = side(bands_all, "b"), side(bands_all, "h")
+    blocks = ("band_idx", "band_key")
+    drop_in = jaccard_pairs(
+        blocked_pairs(bands, "doc_id", blocks), shin, shin, JACCARD_THRESHOLD
+    ).select(F.col("b_id").alias("doc_id"))
+    drop_h = jaccard_pairs(
+        blocked_pairs(bands, "doc_id", blocks, other=hbands),
+        shin,
+        hshin,
+        JACCARD_THRESHOLD,
+    ).select(F.col("a_id").alias("doc_id"))
+    return drop_in.unionByName(drop_h).distinct().withColumn("_nd", F.lit(True))
+
+
 def _sql_band_rows(mh_cte: str) -> str:
     return " UNION ALL ".join(
         f"SELECT doc_id, {b} AS band_idx, "
@@ -5827,15 +5868,6 @@ def _docs_near_dup_ingest_oracle() -> str:
     tags=("dedup", "northstar", "streaming-twin"),
 )
 def q_docs_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The Spark side reuses the STORE'S OWN tier functions (_shingle_sets,
-    # _band_rows, _verify_pairs) so spec fidelity is by construction, not
-    # by transcription.
-    from ..streaming.corpus import (  # noqa: PLC0415
-        _band_rows,
-        _shingle_sets,
-        _verify_pairs,
-    )
-
     d = _spread(spark, _t(spark, sf_dir, "documents")).select("doc_id", "text")
     fp = TX.md5_long(F.col("text"))
 
@@ -5902,63 +5934,7 @@ def q_docs_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_ok = excls.filter(F.col("ex_status").isNull()).select(
         "doc_id", "text"
     )
-    # r16 (guide §1.2 / §2.4): ONE tagged shingle->minhash->band pipeline
-    # for both sides instead of two parallel ones — the per-row values are
-    # pure functions of text, the id sets are disjoint (a batch id present
-    # in history classifies 'replayed' and never reaches exact_ok), and
-    # the tag filters recover exactly the old two frames. Halves the
-    # pipeline's localCheckpoint barriers (each is a full Catalyst pass).
-    tagged = exact_ok.withColumn("_side", F.lit("b")).unionByName(
-        hist.select("doc_id", "text").withColumn("_side", F.lit("h"))
-    )
-    shin_all = _shingle_sets(tagged, carry=("_side",))
-    bands_all = _band_rows(shin_all, carry=("_side",)).localCheckpoint(
-        eager=False
-    )
-    shin = shin_all.filter(F.col("_side") == "b").drop("_side")
-    hshin = shin_all.filter(F.col("_side") == "h").drop("_side")
-    bands = bands_all.filter(F.col("_side") == "b").drop("_side")
-    hbands = bands_all.filter(F.col("_side") == "h").drop("_side")
-
-    a, b = bands.alias("a"), bands.alias("b")
-    cand_in = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id")
-        )
-        .dropDuplicates()
-    )
-    sa = shin.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"))
-    sb = shin.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
-    drop_in = (
-        _verify_pairs(cand_in, sa, sb)
-        .select(F.col("b_id").alias("doc_id"))
-        .distinct()
-    )
-    cand_h = (
-        bands.join(
-            hbands.withColumnRenamed("doc_id", "h_id"),
-            ["band_idx", "band_key"],
-        )
-        .select(F.col("doc_id").alias("a_id"), F.col("h_id").alias("b_id"))
-        .dropDuplicates()
-    )
-    hb = hshin.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
-    drop_h = (
-        _verify_pairs(cand_h, sa, hb)
-        .select(F.col("a_id").alias("doc_id"))
-        .distinct()
-    )
-    dropped = (
-        drop_in.unionByName(drop_h)
-        .distinct()
-        .withColumn("_nd", F.lit(True))
-    )
+    dropped = _near_dup_drops(exact_ok, hist.select("doc_id", "text"))
     # shuffle_hash: dropped is corpus-derived (candidate near-dups) — at a
     # corpus-scale micro-batch it must never be statically broadcast.
     return excls.join(dropped.hint("shuffle_hash"), "doc_id", "left").select(
@@ -6359,11 +6335,6 @@ def q_docs_curated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the store's gates-first order). Built from the store's own tier
     functions plus streaming/curation's gate definitions, so spec
     fidelity is by construction."""
-    from ..streaming.corpus import (  # noqa: PLC0415
-        _band_rows,
-        _shingle_sets,
-        _verify_pairs,
-    )
     from ..streaming.curation import quality_accept  # noqa: PLC0415
 
     d = _spread(spark, _t(spark, sf_dir, "documents")).select("doc_id", "text")
@@ -6396,7 +6367,8 @@ def q_docs_curated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the `btoks` rebuild below (braw.filter(% 10 != 9) tokenized inline)
     # is exactly "everything not already tokenized in toks_all".
     _plant_ids = [i for i, _ in hist_plant_rows + batch_plant_rows] + [9_000_007]
-    assert all(i % 10 != 9 for i in _plant_ids), "plant id in the corpus-batch class"
+    if any(i % 10 == 9 for i in _plant_ids):
+        raise ValueError("plant id in the corpus-batch class (doc_id % 10 == 9)")
     hist_plants = spark.createDataFrame(hist_plant_rows, "doc_id long, text string")
     batch_plants = spark.createDataFrame(batch_plant_rows, "doc_id long, text string")
 
@@ -6434,7 +6406,7 @@ def q_docs_curated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # barrier and no second tokenize of the batch slice.
     # r17 (ADVICE): the inline-tokenize slice is the EXACT complement of
     # the toks_all slice (doc_id % 10 != 9) instead of the 8M magic
-    # number; the plant-id class assertion above guarantees equivalence.
+    # number; the plant-id class check above guarantees equivalence.
     btoks = toks_all.filter(F.col("doc_id") % 10 == 9).unionByName(
         braw.filter(F.col("doc_id") % 10 != 9).select(
             "doc_id", TX.tokens(F.col("text")).alias("toks")
@@ -6489,67 +6461,7 @@ def q_docs_curated_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_ok = excls.filter(F.col("ex_status").isNull()).select(
         "doc_id", "text"
     )
-    # r16: ONE tagged shingle->band pipeline for batch + live history
-    # (same consolidation as docs_near_dup_ingest — ids are disjoint
-    # because a batch id present in live classifies 'replayed'; per-row
-    # values unchanged; halves the band-tier barriers).
-    tagged = exact_ok.withColumn("_side", F.lit("b")).unionByName(
-        live.select("doc_id", "text").withColumn("_side", F.lit("h"))
-    )
-    shin_all = _shingle_sets(tagged, carry=("_side",))
-    bands_all = _band_rows(shin_all, carry=("_side",)).localCheckpoint(
-        eager=False
-    )
-    shin = shin_all.filter(F.col("_side") == "b").drop("_side")
-    lshin = shin_all.filter(F.col("_side") == "h").drop("_side")
-    bands = bands_all.filter(F.col("_side") == "b").drop("_side")
-    lbands = bands_all.filter(F.col("_side") == "h").drop("_side")
-
-    a, b = bands.alias("a"), bands.alias("b")
-    cand_in = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id")
-        )
-        .dropDuplicates()
-    )
-    sa = shin.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"))
-    sb = shin.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
-    drop_in = (
-        _verify_pairs(cand_in, sa, sb)
-        .select(F.col("b_id").alias("doc_id"))
-        .dropDuplicates()
-    )
-    cand_h = (
-        bands.alias("a")
-        .join(
-            lbands.alias("h"),
-            (F.col("a.band_idx") == F.col("h.band_idx"))
-            & (F.col("a.band_key") == F.col("h.band_key")),
-        )
-        .select(
-            F.col("a.doc_id").alias("a_id"), F.col("h.doc_id").alias("b_id")
-        )
-        .dropDuplicates()
-    )
-    hb = lshin.select(
-        F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh")
-    )
-    drop_h = (
-        _verify_pairs(cand_h, sa, hb)
-        .select(F.col("a_id").alias("doc_id"))
-        .dropDuplicates()
-    )
-    dropped = (
-        drop_in.unionByName(drop_h)
-        .distinct()
-        .withColumn("_nd", F.lit(True))
-    )
+    dropped = _near_dup_drops(exact_ok, live.select("doc_id", "text"))
     return (
         gated.join(
             excls.select("doc_id", "ex_status").hint("shuffle_hash"),

@@ -22,6 +22,14 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TX
 from ..functions import vectors as V
+from ..operators.dedup import (
+    JACCARD_THRESHOLD,
+    N_MINHASH,
+    band_rows,
+    blocked_pairs,
+    jaccard_pairs,
+    shingle_sets,
+)
 from .catalog import _register, _register_retired, _spread, _t
 
 # ---------------------------------------------------------------------------
@@ -48,9 +56,6 @@ def _sql_minhash(seed: int) -> str:
     a, b = TX.MINHASH_COEFFS[seed]
     return f"list_min(list_transform(hs, h -> (h * {a} + {b}) % {TX.MINHASH_PRIME}))"
 
-
-_N_MINHASH = 8
-_JACCARD_THRESHOLD = 0.5
 
 # Above this many candidate pairs, verify joins fall back to shuffle joins:
 # a broadcast of an unbounded candidate set is a driver/executor memory cliff
@@ -398,10 +403,10 @@ def _near_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     hsh AS (SELECT doc_id, {_SQL_BASE_HASHES} AS hs FROM shin)
     {" UNION ALL ".join(
         f"SELECT doc_id, {s} AS seed, {_sql_minhash(s)} AS minhash FROM hsh"
-        for s in range(_N_MINHASH)
+        for s in range(N_MINHASH)
     )}
     """,
-    f"MinHash signatures ({_N_MINHASH} permutations, md5-derived hash "
+    f"MinHash signatures ({N_MINHASH} permutations, md5-derived hash "
     "family) over word-trigram shingles, exploded to (doc_id, seed, minhash). "
     "Documents with <3 tokens get NULL signatures",
     reference="[NORTH-STAR] MinHash (Broder'97) on Spark higher-order functions",
@@ -425,7 +430,7 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(s).alias("seed"),
                 TX.minhash_from_hashes(F.col("hs"), s).alias("minhash"),
             )
-            for s in range(_N_MINHASH)
+            for s in range(N_MINHASH)
         ]
     )
     return df.select("doc_id", F.explode(pairs).alias("u")).select(
@@ -434,12 +439,12 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _near_dup_oracle() -> str:
-    mh_cols = ", ".join(f"{_sql_minhash(s)} AS mh{s}" for s in range(_N_MINHASH))
+    mh_cols = ", ".join(f"{_sql_minhash(s)} AS mh{s}" for s in range(N_MINHASH))
     band_selects = " UNION ALL ".join(
         f"SELECT doc_id, {b} AS band_idx, "
         f"md5(CAST(mh{2*b} AS VARCHAR) || '_' || CAST(mh{2*b+1} AS VARCHAR)) AS band_key "
         f"FROM mh"
-        for b in range(_N_MINHASH // 2)
+        for b in range(N_MINHASH // 2)
     )
     return f"""
     WITH corpus AS ({_NEAR_CORPUS_SQL}),
@@ -466,7 +471,7 @@ def _near_dup_oracle() -> str:
     SELECT a_id, b_id,
            round(CAST(inter AS DOUBLE) / (na + nb - inter), 6) AS jaccard
     FROM verified
-    WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= {_JACCARD_THRESHOLD}
+    WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= {JACCARD_THRESHOLD}
     """
 
 
@@ -488,51 +493,6 @@ def q_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def shingle_frame(corpus_toks: DataFrame) -> DataFrame:
-    """(doc_id, sh): distinct word-trigram shingles per doc, behind a lazy
-    materialization barrier (many consumers re-reference it)."""
-    return corpus_toks.select(
-        "doc_id", F.array_distinct(TX.shingles(F.col("toks"), 3)).alias("sh")
-    ).localCheckpoint(eager=False)
-
-
-def minhash_bands_from(shin: DataFrame) -> DataFrame:
-    """(doc_id, band_idx, band_key) LSH band table from a shingle frame —
-    the unit a PERSISTED dedup index stores: at 100 TB the corpus's band
-    table is written once, bucketed by band_key (operators tested in
-    tests/test_dedup_index.py), and each new crawl increment probes it
-    with only ITS OWN bands — no corpus-side recompute or shuffle."""
-    # Barrier: keep the single md5 base-hash pass out of the 8 inlined
-    # minhash columns (8x md5 otherwise).
-    hsh = shin.select(
-        "doc_id", TX.shingle_base_hashes(F.col("sh")).alias("hs")
-    ).localCheckpoint(eager=False)
-    mh = hsh.select(
-        "doc_id",
-        *[TX.minhash_from_hashes(F.col("hs"), s).alias(f"mh{s}") for s in range(_N_MINHASH)],
-    )
-    return mh.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.md5(
-                            F.concat(
-                                F.col(f"mh{2*b}").cast("string"),
-                                F.lit("_"),
-                                F.col(f"mh{2*b+1}").cast("string"),
-                            )
-                        ).alias("band_key"),
-                    )
-                    for b in range(_N_MINHASH // 2)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_idx", "band.band_key")
-
-
 def near_dup_pairs_from(corpus_toks: DataFrame) -> DataFrame:
     """MinHash-LSH verified near-dup pairs over a (doc_id, toks) frame.
 
@@ -540,54 +500,19 @@ def near_dup_pairs_from(corpus_toks: DataFrame) -> DataFrame:
     to inlining the tokenizer); docs_curation_funnel feeds a materialized
     token frame so the corpus is tokenized exactly once across stages.
     """
-    # Barrier: downstream references shingles many times (hash pass + both
-    # sides of the verify join + intersection sizes); without
-    # materialization CollapseProject re-derives tokenize+shingle per
-    # occurrence (measured 45s in the verify stage alone at sf0.1).
-    shin = shingle_frame(corpus_toks)
-    bands = minhash_bands_from(shin)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .dropDuplicates()
-        # Lazy barrier: materialized once at first use (still a single band
-        # join however many consumers), without forcing a separate
-        # driver-synchronous job at construction time.
-        .localCheckpoint(eager=False)
-    )
-    sa = shin.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"))
-    sb = shin.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
-    # Materialize the per-pair set sizes so the jaccard expression (used by
-    # both the output column and the threshold filter) never re-runs the
-    # array intersection.
+    shin = shingle_sets(corpus_toks)
+    # Lazy barrier: materialized once at first use (still a single band
+    # join however many consumers), without forcing a separate
+    # driver-synchronous job at construction time.
+    cand = blocked_pairs(
+        band_rows(shin), "doc_id", ("band_idx", "band_key")
+    ).localCheckpoint(eager=False)
     # Candidates are normally orders of magnitude smaller than the corpus
     # (that is the point of LSH): broadcast them so the shingle table streams
     # through both joins without shuffling — but only below the size guard
     # (_broadcast_if_small), since a high-dup-rate corpus can produce a
     # candidate set too large to broadcast.
-    verified = (
-        _broadcast_if_small(cand).join(sa, "a_id")
-        .join(sb, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            F.size(F.array_intersect("a_sh", "b_sh")).alias("inter"),
-            F.size("a_sh").alias("na"),
-            F.size("b_sh").alias("nb"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    jac = F.col("inter").cast("double") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return verified.filter(jac >= _JACCARD_THRESHOLD).select(
-        "a_id", "b_id", F.round(jac, 6).alias("jaccard")
-    )
+    return jaccard_pairs(_broadcast_if_small(cand), shin, shin, JACCARD_THRESHOLD)
 
 
 # SQL twin of TX.char_gram_hashes' polynomial gram code (r12): exact
@@ -778,27 +703,11 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     grams = (
         hashed.join(cand_ids, "doc_id", "semi")
-        .select("doc_id", F.array_distinct("hs").alias("ghs"))
+        .select("doc_id", F.array_distinct("hs").alias("sh"))
         .localCheckpoint(eager=False)  # small: candidate docs only
     )
-    ga = grams.select(F.col("doc_id").alias("a_id"), F.col("ghs").alias("a_g"))
-    gb = grams.select(F.col("doc_id").alias("b_id"), F.col("ghs").alias("b_g"))
-    verified = (
-        _broadcast_if_small(cand)
-        .join(ga, "a_id")
-        .join(gb, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            F.size(F.array_intersect("a_g", "b_g")).alias("inter"),
-            F.size("a_g").alias("na"),
-            F.size("b_g").alias("nb"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    jac = F.col("inter").cast("double") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return verified.filter(jac >= _NGRAM_JACCARD_THRESHOLD).select(
-        "a_id", "b_id", F.round(jac, 6).alias("jaccard")
+    return jaccard_pairs(
+        _broadcast_if_small(cand), grams, grams, _NGRAM_JACCARD_THRESHOLD
     )
 
 
@@ -963,17 +872,8 @@ def q_simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("b"),
     ).select("doc_id", "b.combo", "b.key")
-    a, b = keys.alias("a"), keys.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.combo") == F.col("b.combo"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)  # materialized: size probe + verify join
+    cand = blocked_pairs(keys, "doc_id", ("combo", "key")).localCheckpoint(
+        eager=True  # materialized: size probe + verify join
     )
     sa = sh.select(F.col("doc_id").alias("a_id"), F.col("simhash").alias("a_sim"))
     sb = sh.select(F.col("doc_id").alias("b_id"), F.col("simhash").alias("b_sim"))
@@ -1206,18 +1106,8 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (vec_id, band, bucket) table first makes the join a pure long-key
     # shuffle. A lazy checkpoint does NOT help here — it materializes
     # within the join job's stages and pays the same fused cost.
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("a_id"), F.col("b.vec_id").alias("b_id"))
-        .dropDuplicates()
-        .localCheckpoint(eager=True)  # materialize once: reused by count + joins
+    cand = blocked_pairs(bands, "vec_id", ("band_idx", "bucket")).localCheckpoint(
+        eager=True  # materialize once: reused by count + joins
     )
     na = normed.select(F.col("vec_id").alias("a_id"), F.col("vn").alias("a_vn"))
     nb = normed.select(F.col("vec_id").alias("b_id"), F.col("vn").alias("b_vn"))

@@ -16,7 +16,6 @@ from .catalog import (
     _register,
     _register_retired,
     _spread,
-    _spread_hash,
     _t,
 )
 from .northstar import _sql_md5_long
@@ -1331,10 +1330,10 @@ def q_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("J1", "A6", "bench"),
 )
 def q_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r16: hash-spread (see q_rollup_lineitem / catalog._spread_hash).
+    # r16: hash-spread (see q_rollup_lineitem / catalog._spread).
     # r17: keyed on l_partkey (the join key, already scanned) so the
     # repartition never widens the scan's ReadSchema.
-    li = _spread_hash(spark, _t(spark, sf_dir, "lineitem"), "l_partkey")
+    li = _spread(spark, _t(spark, sf_dir, "lineitem"), key="l_partkey")
     part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_type")
     rev = F.round(F.col("l_extendedprice") * 100).cast("long") * (
         100 - F.round(F.col("l_discount") * 100).cast("long")
@@ -1374,10 +1373,10 @@ def q_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("J1", "A6", "bench"),
 )
 def q_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r16: hash-spread (see q_rollup_lineitem / catalog._spread_hash).
+    # r16: hash-spread (see q_rollup_lineitem / catalog._spread).
     # r17: keyed on l_suppkey (the join key, already scanned) so the
     # repartition never widens the scan's ReadSchema.
-    li = _spread_hash(spark, _t(spark, sf_dir, "lineitem"), "l_suppkey")
+    li = _spread(spark, _t(spark, sf_dir, "lineitem"), key="l_suppkey")
     s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     rev = F.round(F.col("l_extendedprice") * 100).cast("long") * (
@@ -1810,10 +1809,10 @@ def q_promo_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_rollup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16: hash-spread the single-row-group fact scan (guide §2.5) so the
     # partial aggregate parallelizes; exact long sums make the regrouped
-    # partials bit-identical. See catalog._spread_hash.
+    # partials bit-identical. See catalog._spread.
     # r17: keyed on l_extendedprice (already aggregated, near-unique) so
     # the repartition never widens the scan's ReadSchema.
-    li = _spread_hash(spark, _t(spark, sf_dir, "lineitem"), "l_extendedprice")
+    li = _spread(spark, _t(spark, sf_dir, "lineitem"), key="l_extendedprice")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.grouping("l_returnflag").cast("integer").alias("g_flag"),
         F.grouping("l_linestatus").cast("integer").alias("g_status"),
@@ -2033,8 +2032,8 @@ def q_returned_item_revenue_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("A6", "subquery", "tpch"),
 )
 def q_brand_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r16: hash-spread (see q_rollup_lineitem / catalog._spread_hash).
-    li = _spread_hash(spark, _t(spark, sf_dir, "lineitem"), "l_partkey")
+    # r16: hash-spread (see q_rollup_lineitem / catalog._spread).
+    li = _spread(spark, _t(spark, sf_dir, "lineitem"), key="l_partkey")
     part = _t(spark, sf_dir, "part")
     pq = li.groupBy("l_partkey").agg(
         (
@@ -2369,10 +2368,10 @@ def q_events_key_skew_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("timeseries", "window", "A6"),
 )
 def q_monthly_revenue_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r16: hash-spread (see q_rollup_lineitem / catalog._spread_hash).
+    # r16: hash-spread (see q_rollup_lineitem / catalog._spread).
     # r17: keyed on l_shipdate (already grouped on) so the repartition
     # never widens the scan's ReadSchema.
-    li = _spread_hash(spark, _t(spark, sf_dir, "lineitem"), "l_shipdate")
+    li = _spread(spark, _t(spark, sf_dir, "lineitem"), key="l_shipdate")
     monthly = li.groupBy(
         F.to_date(F.date_trunc("month", F.col("l_shipdate"))).alias("month")
     ).agg(

@@ -48,19 +48,14 @@ _RG_CACHE: dict[tuple[str, int, float], int] = {}
 
 
 def _max_partition_bytes(spark: SparkSession) -> int:
-    """spark.sql.files.maxPartitionBytes as an int (default 128 MiB)."""
+    """spark.sql.files.maxPartitionBytes in bytes, as the JVM parses it
+    (every byte-string suffix Spark accepts). 128 MiB, Spark's default,
+    for sessions without a JVM handle (Spark Connect)."""
     try:
-        raw = str(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b"))
-        raw = raw.strip().lower()
-        mult = 1
-        for suffix, m in (("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-                          ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1)):
-            if raw.endswith(suffix):
-                raw, mult = raw[: -len(suffix)], m
-                break
-        return int(raw) * mult
-    except Exception:
+        jss = spark._jsparkSession
+    except AttributeError:
         return 128 * 1024 * 1024
+    return jss.sessionState().conf().filesMaxPartitionBytes()
 
 
 def _scan_splits(path: str, max_part_bytes: int = 128 * 1024 * 1024) -> int | None:

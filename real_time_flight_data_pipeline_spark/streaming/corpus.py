@@ -82,8 +82,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.text import md5_long
+from ..functions.text import md5_long, tokens
 from ..operators import partstore as PS
+from ..operators.dedup import (
+    JACCARD_THRESHOLD,
+    band_rows,
+    blocked_pairs,
+    jaccard_pairs,
+    shingle_sets,
+)
 
 CORPUS_SCHEMA = T.StructType(
     [
@@ -624,15 +631,8 @@ def run_file_replay_corpus(
 
 # ---------------------------------------------------------------------------
 # Near-dup screening tier: MinHash-LSH against the accepted-corpus history.
-# Same parameters as the batch detector (plans/northstar.near_dup_pairs_from:
-# 3-token shingles, 8 minhashes, 4 bands x 2 rows, Jaccard >= 0.5) so the
-# accepted-corpus invariant — no two accepted documents are near-dups — is
-# checkable by running that exact batch detector over the store.
+# This store and the batch detector call the same operators/dedup functions.
 # ---------------------------------------------------------------------------
-_N_MINHASH = 8
-_SHINGLE_K = 3
-_JACCARD_THRESHOLD = 0.5
-
 BANDS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -650,86 +650,14 @@ _BANDS_READ_SCHEMA = T.StructType(
 )
 
 
-def _shingle_sets(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
-    """(doc_id, *carry, sh): distinct 3-token shingles, behind a barrier
-    (the set feeds hashing AND the verify join — same CollapseProject
-    guard as the batch detector). ``carry`` names passthrough columns
-    (r16: the ingest twins tag batch/history sides and run BOTH through
-    ONE pipeline, halving the barrier count; shingles are per-row
-    functions of text, so the values are unchanged)."""
-    from ..functions import text as TX
-
-    # Tokenize behind its own barrier first: shingles() references the
-    # token array 3x per gram, so an inline tokens(text) re-runs the
-    # split per reference (the same CollapseProject trap the batch
-    # detector guards; measured 2.3x on the minhash stage, r12).
-    toks = docs.select(
-        "doc_id", *carry, TX.tokens(F.col("text")).alias("toks")
+def _token_frame(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """(doc_id, *carry, toks) behind a barrier: shingles() references the
+    token array 3x per gram, so an inline tokens(text) re-runs the split
+    per reference (measured 2.3x on the minhash stage, r12). Shared with
+    the ingest spec twins in plans/llm_ext.py."""
+    return docs.select(
+        "doc_id", *carry, tokens(F.col("text")).alias("toks")
     ).localCheckpoint(eager=False)
-    return toks.select(
-        "doc_id",
-        *carry,
-        F.array_distinct(TX.shingles(F.col("toks"), _SHINGLE_K)).alias("sh"),
-    ).localCheckpoint(eager=False)
-
-
-def _band_rows(shin: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
-    """(doc_id, *carry, band_idx, band_key) LSH band table from shingle
-    sets."""
-    from ..functions import text as TX
-
-    hsh = shin.select(
-        "doc_id", *carry, TX.shingle_base_hashes(F.col("sh")).alias("hs")
-    ).localCheckpoint(eager=False)
-    mh = hsh.select(
-        "doc_id",
-        *carry,
-        *[
-            TX.minhash_from_hashes(F.col("hs"), s).alias(f"mh{s}")
-            for s in range(_N_MINHASH)
-        ],
-    )
-    return mh.select(
-        "doc_id",
-        *carry,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.md5(
-                            F.concat(
-                                F.col(f"mh{2*b}").cast("string"),
-                                F.lit("_"),
-                                F.col(f"mh{2*b+1}").cast("string"),
-                            )
-                        ).alias("band_key"),
-                    )
-                    for b in range(_N_MINHASH // 2)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", *carry, "band.band_idx", "band.band_key")
-
-
-def _verify_pairs(cand: DataFrame, sa: DataFrame, sb: DataFrame) -> DataFrame:
-    """Exact-Jaccard verify of (a_id, b_id) candidates against shingle sets
-    sa(a_id, a_sh) / sb(b_id, b_sh); returns pairs at or above threshold."""
-    verified = (
-        cand.join(sa, "a_id")
-        .join(sb, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            F.size(F.array_intersect("a_sh", "b_sh")).alias("inter"),
-            F.size("a_sh").alias("na"),
-            F.size("b_sh").alias("nb"),
-        )
-    )
-    jac = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
-    )
-    return verified.filter(jac >= _JACCARD_THRESHOLD)
 
 
 class NearDupCorpusStore(CorpusStore):
@@ -830,28 +758,14 @@ class NearDupCorpusStore(CorpusStore):
             F.count("*").alias("n")).collect()}
         exact_ok = cls.filter(F.col("status") == "accepted").drop("status")
 
-        shin = _shingle_sets(exact_ok)
-        bands = _band_rows(shin).localCheckpoint(eager=True)
+        shin = shingle_sets(_token_frame(exact_ok))
+        bands = band_rows(shin).localCheckpoint(eager=True)
+        blocks = ("band_idx", "band_key")
 
         # In-batch near-dups: keep the lowest doc_id of any verified pair.
-        a, b = bands.alias("a"), bands.alias("b")
-        cand_in = (
-            a.join(
-                b,
-                (F.col("a.band_idx") == F.col("b.band_idx"))
-                & (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id")
-            )
-            .dropDuplicates()
-        )
-        sa = shin.select(F.col("doc_id").alias("a_id"), F.col("sh").alias("a_sh"))
-        sb = shin.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh"))
-        drop_in = (
-            _verify_pairs(cand_in, sa, sb).select(F.col("b_id").alias("doc_id")).distinct()
-        )
+        drop_in = jaccard_pairs(
+            blocked_pairs(bands, "doc_id", blocks), shin, shin, JACCARD_THRESHOLD
+        ).select(F.col("b_id").alias("doc_id"))
 
         # vs-history near-dups: batch doc drops if it verifies against ANY
         # accepted doc. The band join reads only the batch's band buckets;
@@ -865,15 +779,9 @@ class NearDupCorpusStore(CorpusStore):
             if tombs is not None
             else hist_bands
         )
-        cand_hist = (
-            bands.join(
-                live_bands.withColumnRenamed("doc_id", "h_id"),
-                ["band_idx", "band_key"],
-            )
-            .select(F.col("doc_id").alias("a_id"), F.col("h_id").alias("b_id"))
-            .dropDuplicates()
-            .localCheckpoint(eager=True)
-        )
+        cand_hist = blocked_pairs(
+            bands, "doc_id", blocks, other=live_bands
+        ).localCheckpoint(eager=True)
         # Guard-scan-verify on the band layout (same contract as the docs
         # layout in _classified): the candidate join has materialized; any
         # marker present now means a compaction raced it.
@@ -883,12 +791,9 @@ class NearDupCorpusStore(CorpusStore):
             "doc_id",
             "semi",
         )
-        hb = _shingle_sets(hist_slice).select(
-            F.col("doc_id").alias("b_id"), F.col("sh").alias("b_sh")
-        )
-        drop_hist = (
-            _verify_pairs(cand_hist, sa, hb).select(F.col("a_id").alias("doc_id")).distinct()
-        )
+        drop_hist = jaccard_pairs(
+            cand_hist, shin, shingle_sets(_token_frame(hist_slice)), JACCARD_THRESHOLD
+        ).select(F.col("a_id").alias("doc_id"))
 
         dropped = drop_in.unionByName(drop_hist).distinct()
         survivors = exact_ok.join(dropped, "doc_id", "left_anti").localCheckpoint(

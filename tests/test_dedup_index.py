@@ -20,9 +20,9 @@ import uuid
 from pyspark.sql import functions as F
 
 from real_time_flight_data_pipeline_spark.functions import text as TX
-from real_time_flight_data_pipeline_spark.plans.northstar import (
-    minhash_bands_from,
-    shingle_frame,
+from real_time_flight_data_pipeline_spark.operators.dedup import (
+    band_rows,
+    shingle_sets,
 )
 from real_time_flight_data_pipeline_spark.sources.parquet import load_table
 
@@ -31,7 +31,7 @@ from .conftest import SF_SMOKE
 
 def _bands(df):
     toks = df.select("doc_id", TX.tokens(F.col("text")).alias("toks"))
-    return minhash_bands_from(shingle_frame(toks)).select(
+    return band_rows(shingle_sets(toks)).select(
         "doc_id",
         F.concat_ws(":", F.col("band_idx").cast("string"), "band_key").alias(
             "band"

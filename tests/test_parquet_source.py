@@ -10,7 +10,12 @@ means the next Spark bump can't silently regress it (r4's failure mode).
 
 from __future__ import annotations
 
-from real_time_flight_data_pipeline_spark.sources.parquet import load_table
+import pytest
+
+from real_time_flight_data_pipeline_spark.sources.parquet import (
+    _max_partition_bytes,
+    load_table,
+)
 
 from .conftest import SF_CORRECT
 
@@ -28,3 +33,19 @@ def test_events_ts_survives_unix_micros_and_watermark(spark):
     ev.select(F.unix_micros("ts").alias("us")).limit(1).collect()
     # withWatermark requires TIMESTAMP (what killed the streaming tests)
     ev.withWatermark("ts", "1 hour").limit(1).collect()
+
+
+@pytest.mark.parametrize(
+    "raw, expected",
+    [("64m", 64 << 20), ("1t", 1 << 40), ("134217728", 128 << 20)],
+)
+def test_max_partition_bytes_reads_spark_byte_strings(spark, raw, expected):
+    """The split probe must see the value Spark plans with, for every
+    byte-string suffix Spark accepts (``t`` included)."""
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, raw)
+    try:
+        assert _max_partition_bytes(spark) == expected
+    finally:
+        spark.conf.set(key, prev)
