@@ -8,7 +8,13 @@ layout. This module is that layout:
     <path>/coarse/   K rows (cid, cv)            — trained coarse codebook
     <path>/pq/       M*K rows (m, c, cs)         — trained PQ codebooks
     <path>/cells/    n rows (vec_id, codes),     — PQ-encoded corpus,
-                     directory-partitioned by cell
+                     cell=<N>/gen=<G>/part-*       partitioned by cell
+
+The cells layout is an operators/partstore append store: the build and
+every append write ``gen=0``, and compaction (run by the streaming
+maintainer, streaming/vector_index.py) merges one over-threshold
+generation of a cell at a time into ``gen+1``. Probes guard the swap
+window with ``partstore.await_no_swap_marker``.
 
 A probe reads the two tiny codebook tables plus ONLY the ``n_probe``
 probed cell partitions — the literal ``cell IN (...)`` filter is a static
@@ -38,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
+from . import partstore as _ps
 
 
 def build_ivfpq_index(spark: SparkSession, sf_dir: str, path: str) -> None:
@@ -82,10 +89,21 @@ def build_ivfpq_index(spark: SparkSession, sf_dir: str, path: str) -> None:
             ).alias("codes")
         )
     )
+    write_cells(
+        codes.join(cells.withColumnRenamed("cid", "cell"), "vec_id"),
+        path,
+        "overwrite",
+    )
+
+
+def write_cells(enc: DataFrame, path: str, mode: str = "append") -> None:
+    """Write encoded (vec_id, codes, cell) rows into the youngest
+    generation of their cells (``cell=N/gen=0/``), the only level writers
+    touch. Appending callers migrate a flat-layout index first."""
     (
-        codes.join(cells.withColumnRenamed("cid", "cell"), "vec_id")
-        .write.mode("overwrite")
-        .partitionBy("cell")
+        enc.withColumn("gen", F.lit(0))
+        .write.mode(mode)
+        .partitionBy("cell", "gen")
         .parquet(f"{path}/cells")
     )
 
@@ -176,215 +194,24 @@ def add_to_ivfpq_index(
     partitions. ``new_vectors`` must carry (vec_id, embedding). Cost is
     O(|batch|) broadcast dots + one |batch|-sized write; the catalog twin
     (embedding_incremental_index) holds the assign-without-retrain
-    semantics to the DuckDB oracle, this is the persisted-layout side."""
-    (
-        encode_batch(spark, path, new_vectors)
-        .write.mode("append")
-        .partitionBy("cell")
-        .parquet(f"{path}/cells")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Compaction / swap-guard machinery: generic since r13 (operators/partstore
-# carries the protocol + crash-safety invariants, shared with the corpus
-# store); these delegates keep the index tier's public API and bind it to
-# the index layout (<path>/cells, partition column "cell").
-# ---------------------------------------------------------------------------
-from . import partstore as _ps  # noqa: E402
-
-
-def _fs(spark: SparkSession, path: str):
-    """Hadoop FileSystem for ``path`` — see partstore._fs."""
-    return _ps._fs(spark, path)
-
-
-def await_stable_cells(
-    spark: SparkSession,
-    path: str,
-    cells: Sequence[int],
-    retries: int = 3,
-    wait_sec: float = 0.2,
-    marker_wait_sec: float = 10.0,
-) -> None:
-    """Reader-side guard for the compaction swap window (r11 verdict #2 /
-    ADVICE medium): wait out an in-flight swap that briefly hides a
-    needed cell dir; fail LOUD (run ``recover_compaction`` from the
-    writer) if a crashed swap left ``cells_old`` behind. Check-then-scan,
-    NOT atomic with the caller's subsequent read — see
-    partstore.await_stable_partitions for the residual race and the
-    single-writer contract.
-
-    Generational layouts (r13 verdict #7): a tiered swap parks a gen
-    SUB-level while the cell dir itself stays present, so the per-cell
-    existence probe cannot see the hole — when the parked entries carry
-    gen= sub-dirs (or the protocol cannot be positively adjudicated —
-    r15 ADVICE, medium) the coarse marker guard is used instead. Its
-    TOTAL budget is ``max(retries * wait_sec, marker_wait_sec)`` polled
-    at ``wait_sec`` — adjudication retries spend from the same budget
-    (r16 ADVICE: the budgets do not stack) — the caller's patience is
-    honored, floored at the measured in-flight tiered-pass duration
-    (~3 s at the 100x corpus).
-
-    A marker that stays 'empty' through the whole coarse budget (a
-    crashed swap that parked NOTHING — both recoveries degenerate to
-    dropping the skeleton, live tree complete) falls through to the
-    per-cell existence probe instead of raising (r16 ADVICE: the old
-    per-cell probe correctly passed this state; blocking every reader
-    until the writer's next recovery was an availability regression).
-    If a re-adjudication after the timeout finds a gen level WAS parked
-    meanwhile, it fails loud as before."""
-    import math  # noqa: PLC0415
-    import time  # noqa: PLC0415
-
-    root = f"{path}/cells"
-    try:
-        if _ps.has_swap_marker(spark, root):
-            t0 = time.monotonic()
-            proto = _adjudicate_marker(spark, root, retries, wait_sec)
-            if proto in ("tiered", "empty"):
-                poll = max(wait_sec, 0.05)
-                budget = max(retries * wait_sec, marker_wait_sec)
-                budget -= time.monotonic() - t0
-                try:
-                    _ps.await_no_swap_marker(
-                        spark,
-                        root,
-                        retries=max(0, math.ceil(max(budget, 0.0) / poll)),
-                        wait_sec=poll,
-                    )
-                    return  # swap completed within budget
-                except RuntimeError:
-                    # Persistent marker: re-adjudicate once. Still-empty
-                    # (or vanished) -> nothing is parked, the live tree
-                    # is complete by protocol; flat-parked -> the
-                    # per-cell probe below sees the hole itself. Only a
-                    # parked gen level (invisible to the probe) stays
-                    # loud.
-                    if _ps.parked_protocol(spark, root, "cell") == "tiered":
-                        raise
-        _ps.await_stable_partitions(
-            spark, root, "cell", cells, retries, wait_sec
-        )
-    except RuntimeError as e:
-        raise RuntimeError(
-            f"{e} — for this index, run recovery from the writer before "
-            "probing"
-        ) from None
-
-
-def _adjudicate_marker(
-    spark: SparkSession,
-    root: str,
-    retries: int = 3,
-    wait_sec: float = 0.2,
-) -> str:
-    """The swap marker's protocol, adjudicated from the PARKED ENTRIES
-    via ``partstore.parked_protocol`` (r15 ADVICE, medium): one of
-    ``"tiered"`` / ``"flat"`` / ``"none"`` (positive adjudications, the
-    latter also covering the marker vanishing mid-listing with
-    ``has_swap_marker`` re-confirming the swap completed) / ``"empty"``
-    (still ambiguous after retries — nothing parked yet, the
-    mkdirs-to-first-rename window or a parked-nothing crash). A
-    transient listing error is retried; persistent listing errors with
-    the marker still present raise. The caller routes ``"empty"``
-    CONSERVATIVELY to the coarse marker wait first — guessing 'flat'
-    outright would let the per-cell probe pass over a store missing a
-    parked gen level, the silent-missing-rows case this guard exists to
-    prevent — and only falls through to the per-cell probe after the
-    coarse budget confirms nothing ever gets parked."""
-    import time  # noqa: PLC0415
-
-    for attempt in range(retries + 1):
-        try:
-            proto = _ps.parked_protocol(spark, root, "cell")
-        except Exception:  # noqa: BLE001
-            if not _ps.has_swap_marker(spark, root):
-                return "none"  # swap completed mid-listing
-            if attempt >= retries:
-                raise  # marker present, listing keeps failing: fail loud
-            time.sleep(wait_sec)
-            continue
-        if proto != "empty":
-            return proto
-        # "empty": ambiguous window — retry, then let the caller wait.
-        if attempt < retries:
-            time.sleep(wait_sec)
-    return "empty"
-
-
-def _marker_is_tiered(
-    spark: SparkSession,
-    root: str,
-    retries: int = 3,
-    wait_sec: float = 0.2,
-) -> bool:
-    """Whether the marker routes to the coarse (tiered) wait — True for
-    a positive gen=-parked adjudication AND for a still-ambiguous
-    'empty' marker (see ``_adjudicate_marker``). Kept as the boolean
-    view the compaction tests pin; ``await_stable_cells`` uses the
-    protocol string so the empty case can fall through to the per-cell
-    probe after the coarse wait times out."""
-    return _adjudicate_marker(spark, root, retries, wait_sec) in (
-        "tiered",
-        "empty",
-    )
+    semantics to the DuckDB oracle, this is the persisted-layout side.
+    An index written in the older flat cell layout is migrated to the
+    generational one first (idempotent driver-side renames)."""
+    _ps.migrate_flat_to_tiered(spark, f"{path}/cells", "cell")
+    write_cells(encode_batch(spark, path, new_vectors), path)
 
 
 def cell_file_counts(spark: SparkSession, path: str) -> dict[int, int]:
-    """Parquet part-file count per cell partition of ``<path>/cells`` —
-    the fragmentation MONITORING counter. Layout-agnostic (r15 verdict
-    #5): on a generational layout the gen= sub-level files roll up into
-    the per-cell total, so the metric keeps reporting across the tiered
-    flip instead of reading 0. Driver-side listing of K directories (K =
-    coarse codebook size, small by construction). The whole-cell
-    compactor's own threshold input is partstore.partition_file_counts,
-    which fails loud on a tiered tree."""
-    return _ps.partition_file_counts_rollup(spark, f"{path}/cells", "cell")
-
-
-def recover_compaction(spark: SparkSession, path: str) -> None:
-    """Finish or roll back a compaction swap that crashed mid-flight —
-    see partstore.recover_partition_compaction for the three crash
-    states. Idempotent; called automatically by compact_index_cells."""
-    _ps.recover_partition_compaction(spark, f"{path}/cells", "cell")
-
-
-def compact_index_cells(
-    spark: SparkSession,
-    path: str,
-    max_files_per_cell: int = 8,
-    drop=None,
-    drop_key: str | None = None,
-) -> list[int]:
-    """Rewrite cells whose part-file count exceeds the bound into one file
-    each (r10 verdict #2). Micro-batch appends accrete small part-files
-    inside cell partitions; a probe of nprobe cells then opens O(batches)
-    files and the measured flat probe latency drifts. Content-preserving,
-    crash-safe (staged swap + fail-loud recovery), reading ONLY the
-    over-threshold cells — protocol and invariants in
-    partstore.compact_partitions. Returns the compacted cell ids.
-
-    Concurrency contract (r11 verdict #2, scope corrected r12 ADVICE):
-    the index has ONE writer — compaction must not run concurrently with
-    an in-flight append. Readers in THIS engine (probe_ivfpq_index, the
-    maintainer's pruned dedup scan) call ``await_stable_cells`` first,
-    which waits out swaps already in flight at guard time and fails loud
-    on a crashed one; a swap that STARTS after a reader's guard passed
-    can still race that reader's scan, so cross-session probes during an
-    active compaction are best-effort only. Deployments needing that
-    guarantee must serialize probes through the writer.
-
-    ``drop``/``drop_key``: tombstone fold — see partstore.
-    compact_partitions (r13 verdict #3)."""
-    return _ps.compact_partitions(
-        spark,
-        f"{path}/cells",
-        "cell",
-        max_files_per_cell,
-        drop=drop,
-        drop_key=drop_key,
-    )
+    """Parquet part-file count per cell of ``<path>/cells``, summed over
+    the cell's generations — the fragmentation MONITORING counter (the
+    compactor's own threshold input is the per-level
+    ``partstore.gen_file_counts``). Driver-side listing bounded by K
+    cells (the coarse codebook size) x live generations."""
+    counts: dict[int, int] = {}
+    levels = _ps.gen_file_counts(spark, f"{path}/cells", "cell")
+    for (cell, _), n in levels.items():
+        counts[cell] = counts.get(cell, 0) + n
+    return counts
 
 
 def _live_candidates(spark: SparkSession, path: str, cand: DataFrame) -> DataFrame:
@@ -452,9 +279,9 @@ def probe_ivfpq_index(
     )
 
     probed = probe_cells(spark, path, query_vec, n_probe)
-    # Reader-side compaction guard: never serve a silently cell-less
-    # result from inside (or after a crash of) a compaction swap.
-    await_stable_cells(spark, path, probed)
+    # Reader-side compaction guard: never serve a result missing a parked
+    # gen level from inside (or after a crash of) a compaction swap.
+    _ps.await_no_swap_marker(spark, f"{path}/cells")
     # ADC distance table, M*K rows: same fixed-point pipeline as the
     # catalog query's _pq_centd, with the query sliced engine-side.
     qs = spark.createDataFrame(
@@ -558,7 +385,7 @@ def probe_ivfpq_index_batch(
         .collect()
     ]
     union_cells = sorted({c for _, c in probed_pairs})
-    await_stable_cells(spark, path, union_cells)
+    _ps.await_no_swap_marker(spark, f"{path}/cells")
     # Per-query ADC tables, |queries| * M * K rows, all in one frame.
     qs = qdf.select(
         "qid",

@@ -1,49 +1,58 @@
-"""Generic partitioned APPEND store machinery (r12 verdict #1).
+"""Partitioned APPEND store machinery with generational compaction.
 
-The vector index tier (operators/ann_index.py, r10-r12) proved out a
-storage pattern this engine now needs twice: a directory-partitioned
-parquet dataset that grows by APPENDS into its partitions (never by
-rewriting the table), with small-file accretion bounded by threshold
-compaction through a crash-safe staged swap, and readers that guard the
-swap window. r12's verdict asked for the same commit model on the
-streaming corpus store (its pointer-flip rewrite was the engine's last
-O(table)-per-micro-batch cost), so the machinery is factored here ONCE,
-parameterized by the data root and partition column:
+Two stores in this engine grow by appends into directory partitions and
+never rewrite the table: the vector index (operators/ann_index.py,
+partitioned by coarse cell) and the streaming corpus store
+(streaming/corpus.py, partitioned by fingerprint and band hash bucket).
+Both use the ONE layout and commit protocol below, parameterized by the
+data root and partition column:
 
-    <root>/<part_col>=<v>/part-*.parquet    the live dataset
-    <root>_staged/                          compacted copies, fully
-                                            written before any swap
-    <root>_old/                             per-partition holding dir
-                                            during the two-rename swap
+    <root>/<part_col>=<v>/gen=<g>/part-*.parquet   the live dataset
+    <root>_staged_tmp/                             one stage job's output
+    <root>_staged/<part_col>=<v>/gen=<g+1>/        merged copies, each
+                                                   with a _SUCCESS witness
+    <root>_old/<part_col>=<v>/gen=<g>/             parked source levels
+                                                   during the swap
 
-The vector tier keeps its public API (ann_index.compact_index_cells etc.)
-as thin delegates; the corpus store (streaming/corpus.py) instantiates
-the same machinery over fingerprint buckets and LSH band buckets.
+Appends land in ``gen=0``. When a (partition, gen) level holds more
+part-files than the bound, ``tiered_compact_partitions`` merges that
+LEVEL ALONE into one file appended to ``gen+1``; the bigger generations
+above it are never read or rewritten. Per-row write amplification is
+O(levels) total, levels = log_T(partition/batch): the LSM tree's
+size-tiered policy, which also holds when a micro-batch scatters into
+every partition at once (the corpus store's hash buckets).
 
-Protocol (unchanged from ann_index r11/r12, where it is test-pinned by a
-9-test crash matrix in tests/test_index_compaction.py):
+Protocol:
 
-- compaction stages the compacted copy COMPLETELY, verifies every staged
-  partition materialized, then swaps each partition with two atomic
-  renames: (A) live -> <root>_old, (B) staged -> live;
+- the merged copy is staged COMPLETELY, with a ``_SUCCESS`` witness per
+  level, before anything live is touched; the source level is then
+  parked under ``<root>_old`` (outside the read root, so rows are never
+  readable twice), the merged file renames into live ``gen+1``, and the
+  parked level is dropped last;
 - every Hadoop ``FileSystem.rename`` return value is CHECKED — Hadoop
   reports most failures by returning False, and an unnoticed false
   before a delete of ``<root>_old`` would destroy the only copy;
-- ``recover_partition_compaction`` finishes or rolls back any
-  interrupted swap, idempotently, and is run first by the compactor;
-- readers call ``await_stable_partitions`` before scanning: a partition
-  dir is briefly absent between (A) and (B), and absent-while-
-  ``<root>_old``-exists is the only ambiguous state — wait it out, then
-  fail LOUD on a crashed swap rather than silently dropping data.
+- ``recover_tiered_compaction`` finishes (staged witness present) or
+  rolls back (witness absent) any interrupted swap, idempotently, and is
+  run first by the compactor and by each store's writer;
+- readers call ``await_no_swap_marker`` before scanning: partition dirs
+  never vanish mid-swap (only a gen level does), so the guard is the
+  marker itself — wait out an in-flight swap, then fail LOUD on a
+  crashed one rather than silently dropping rows.
 
-Residual race (documented, not closed): ``await_stable_partitions`` is
+A store written in the older FLAT layout (``<root>/<part_col>=<v>/
+part-*.parquet``) is migrated in place by ``migrate_flat_to_tiered``
+(driver-side renames into ``gen=0``), which every writer runs before its
+first append.
+
+Residual race (documented, not closed): the reader guard is
 check-then-scan, not atomic — a swap that STARTS after the guard passes
-but before the caller's scan lists directories can still hide a
-partition from that scan (r12 ADVICE, medium). Single-writer callers
-(the streaming maintainers, which compact only between their own
-triggers) never hit it; cross-session readers during an active
-compaction are best-effort only, and callers that need certainty re-run
-the guard AFTER their action materializes (``verify_stable_after``).
+but before the caller's scan lists directories can still hide a level
+from that scan. Single-writer callers (the streaming maintainers, which
+compact only between their own triggers) never hit it; cross-session
+readers during an active compaction are best-effort only, and callers
+that need certainty re-run the guard AFTER their action materializes
+(``verify_stable_after``).
 """
 
 from __future__ import annotations
@@ -73,56 +82,10 @@ def _rename_or_raise(fs, src, dst) -> None:
         raise OSError(f"rename failed: {src} -> {dst}")
 
 
-def await_stable_partitions(
-    spark: SparkSession,
-    root: str,
-    part_col: str,
-    values: Sequence[int],
-    retries: int = 3,
-    wait_sec: float = 0.2,
-) -> None:
-    """Reader-side guard for the compaction swap window: between rename
-    (A) and rename (B) a partition dir is briefly absent from ``root``; a
-    read at that instant would silently return results missing that
-    partition. A missing dir is only ambiguous while ``<root>_old``
-    exists (no swap in flight -> absent dir just means an empty
-    partition), so: if the swap marker is present AND a needed dir is
-    missing, wait for the in-flight swap's two renames to land and
-    re-check; if it stays missing the compactor crashed mid-swap — fail
-    LOUD and tell the caller to run recovery rather than serve
-    silently-wrong results. Readers never mutate the store, so recovery
-    is not run here (the single writer owns it).
-
-    NOT atomic with the caller's subsequent scan: a swap that begins
-    after this returns can still race the scan (r12 ADVICE, medium) —
-    see the module docstring for the single-writer contract and
-    ``verify_stable_after`` for the re-check pattern."""
-    fs, jvm = _fs(spark, root)
-    hp = jvm.org.apache.hadoop.fs.Path
-    missing: list[int] = []
-    for attempt in range(retries + 1):
-        if not fs.exists(hp(f"{root}_old")):
-            return
-        missing = [
-            v for v in values if not fs.exists(hp(f"{root}/{part_col}={v}"))
-        ]
-        if not missing:
-            return
-        if attempt < retries:
-            time.sleep(wait_sec)
-    raise RuntimeError(
-        f"partitions {part_col}={missing} are missing while a compaction "
-        f"swap marker ({root}_old) exists — a compactor crashed mid-swap; "
-        "run recovery from the writer before reading"
-    )
-
-
 def has_swap_marker(spark: SparkSession, root: str) -> bool:
     """Whether a compaction swap marker (``<root>_old``) currently exists —
-    one driver-side exists() check. Callers that guard-scan-verify capture
-    this BEFORE their scan so ``verify_stable_after`` flags only a swap
-    that STARTED during the scan, not a pre-existing crashed swap the
-    per-partition guard already adjudicated."""
+    one driver-side exists() check. The writers use it to decide whether
+    recovery has anything to do before they scan."""
     fs, jvm = _fs(spark, root)
     return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(f"{root}_old")))
 
@@ -146,11 +109,12 @@ def verify_stable_after(spark: SparkSession, root: str) -> None:
 
 def assert_no_swap_marker(spark: SparkSession, root: str) -> None:
     """Writer-side precondition (r12 ADVICE, medium): a scan that must
-    see EVERY partition (e.g. the strict-ids full-index id guard) cannot
-    rely on ``await_stable_partitions`` because it does not know which
-    partitions exist — a crashed swap that parked some partition in
-    ``<root>_old`` would silently hide that partition's rows. Fail loud
-    if the marker exists; the single writer runs recovery first."""
+    see EVERY partition (e.g. the strict full-index id guard) must not
+    run while a crashed swap has a level parked in ``<root>_old`` — that
+    level's rows would be silently missing. Unlike
+    ``await_no_swap_marker`` it does not wait: the caller is the single
+    writer, which ran recovery first, so a marker here is a cross-session
+    writer violating the contract. Fail loud."""
     fs, jvm = _fs(spark, root)
     if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{root}_old")):
         raise RuntimeError(
@@ -175,286 +139,21 @@ def _int_part_value(name: str) -> int | None:
         return None
 
 
-def partition_file_counts(
-    spark: SparkSession, root: str, part_col: str
-) -> dict[int, int]:
-    """Parquet part-file count per partition of ``root`` — the quantity
-    threshold FLAT-layout compaction bounds. Driver-side listing of the
-    partition directories (bounded by the partition-value domain, small by
-    construction for every instantiation: coarse cells, hash buckets).
-
-    Strictly the flat protocol's counter: on a GENERATIONAL layout it
-    RAISES instead of silently reading 0 for every partition (r15 verdict
-    #5 — a counter that reads 0 on exactly the layout that needs
-    monitoring is a footgun, and a 0 threshold reading would also make
-    ``compact_partitions`` silently no-op where the caller meant to
-    compact). Use ``gen_file_counts`` for per-level counts or
-    ``partition_file_counts_rollup`` for the layout-agnostic total."""
-    fs, jvm = _fs(spark, root)
-    hroot = jvm.org.apache.hadoop.fs.Path(root)
-    counts: dict[int, int] = {}
-    if not fs.exists(hroot):
-        return counts
-    prefix = f"{part_col}="
-    for st in fs.listStatus(hroot):
-        name = st.getPath().getName()
-        if not st.isDirectory() or not name.startswith(prefix):
-            continue
-        v = _int_part_value(name)
-        if v is None:
-            continue
-        n = 0
-        for f in fs.listStatus(st.getPath()):
-            fname = f.getPath().getName()
-            if (
-                f.isDirectory()
-                and fname.startswith("gen=")
-                and _int_part_value(fname) is not None
-            ):
-                raise ValueError(
-                    f"{root} carries gen= sub-levels (generational "
-                    "layout); the flat counter would read 0 everywhere — "
-                    "use gen_file_counts or partition_file_counts_rollup"
-                )
-            if fname.endswith(".parquet"):
-                n += 1
-        counts[v] = n
-    return counts
-
-
-def partition_file_counts_rollup(
-    spark: SparkSession, root: str, part_col: str
-) -> dict[int, int]:
-    """Layout-agnostic per-partition parquet file count — the MONITORING
-    counter (r15 verdict #5): loose files plus every integer ``gen=``
-    sub-level's files roll up into one number per partition, so a
-    fragmentation metric keeps reporting across the flat->tiered layout
-    flip instead of dropping to 0. Strays (non-integer partition or gen
-    dirs) are skipped, same as every other listing (r13 ADVICE, low)."""
-    fs, jvm = _fs(spark, root)
-    hroot = jvm.org.apache.hadoop.fs.Path(root)
-    counts: dict[int, int] = {}
-    if not fs.exists(hroot):
-        return counts
-    prefix = f"{part_col}="
-    for st in fs.listStatus(hroot):
-        name = st.getPath().getName()
-        if not st.isDirectory() or not name.startswith(prefix):
-            continue
-        v = _int_part_value(name)
-        if v is None:
-            continue
-        n = 0
-        for f in fs.listStatus(st.getPath()):
-            fname = f.getPath().getName()
-            if (
-                f.isDirectory()
-                and fname.startswith("gen=")
-                and _int_part_value(fname) is not None
-            ):
-                for g in fs.listStatus(f.getPath()):
-                    if g.getPath().getName().endswith(".parquet"):
-                        n += 1
-            elif fname.endswith(".parquet"):
-                n += 1
-        counts[v] = n
-    return counts
-
-
-def recover_partition_compaction(
-    spark: SparkSession, root: str, part_col: str
-) -> None:
-    """Finish or roll back a compaction swap that crashed mid-flight.
-
-    The swap protocol (``compact_partitions``) per over-threshold
-    partition is two atomic directory renames: (A) live dir ->
-    ``<root>_old``, then (B) staged dir -> live. Recovery is mechanical:
-      - old copy present AND live present -> crashed after (B): the swap
-        completed, drop the old copy.
-      - old present, live missing, staged present -> crashed between (A)
-        and (B): finish rename (B), then drop old.
-      - old present, live missing, staged missing -> cannot happen if
-        staging is written before any rename (it is); roll the old copy
-        back anyway — content is never lost.
-    Idempotent; called automatically at the top of compact_partitions."""
-    fs, jvm = _fs(spark, root)
-    hp = jvm.org.apache.hadoop.fs.Path
-    old_root = hp(f"{root}_old")
-    if not fs.exists(old_root):
-        # No swap in flight; a crash between staging and the first rename
-        # leaves only an orphan staging dir — safe to drop (content is
-        # still fully live) and cheaper than carrying it forever.
-        fs.delete(hp(f"{root}_staged"), True)
-        return
-    prefix = f"{part_col}="
-    for st in fs.listStatus(old_root):
-        name = st.getPath().getName()
-        if not name.startswith(prefix):
-            continue
-        live = hp(f"{root}/{name}")
-        staged = hp(f"{root}_staged/{name}")
-        # Each arm RENAME-CHECKS before any delete of the old copy: a
-        # false return from rename means the dir under <root>_old is
-        # still the only copy, and deleting it would be silent permanent
-        # loss (r11 ADVICE, high).
-        if fs.exists(live):
-            fs.delete(st.getPath(), True)
-        elif fs.exists(staged):
-            _rename_or_raise(fs, staged, live)
-            fs.delete(st.getPath(), True)
-        else:
-            _rename_or_raise(fs, st.getPath(), live)
-    fs.delete(old_root, True)
-    fs.delete(hp(f"{root}_staged"), True)
-
-
-def compact_partitions(
-    spark: SparkSession,
-    root: str,
-    part_col: str,
-    max_files_per_partition: int = 8,
-    drop: DataFrame | None = None,
-    drop_key: str | None = None,
-) -> list[int]:
-    """Rewrite partitions whose part-file count exceeds the bound into one
-    file each. Micro-batch appends accrete small part-files inside
-    partition dirs; a scan then opens O(batches) files and read latency
-    drifts off its build-time figure. This is the OPTIMIZE step of the
-    append-store lifecycle: content-preserving (same rows, so an ==
-    re-run after any crash is idempotent), reading ONLY the
-    over-threshold partitions (static PartitionFilter — the same prune
-    the stores' readers use).
-
-    Crash safety: the compacted copy is fully staged under
-    ``<root>_staged`` BEFORE any live directory is touched; the swap is
-    two atomic renames per partition through a ``<root>_old`` holding
-    dir, and ``recover_partition_compaction`` (run first) finishes or
-    rolls back any interrupted swap. At no point is a partition's content
-    only in memory. Returns the compacted partition values.
-
-    Concurrency contract: the store has ONE writer — compaction must not
-    run concurrently with an in-flight append, and between rename (A)
-    and rename (B) a partition is briefly absent from the live path.
-    Readers in THIS engine defend themselves with
-    ``await_stable_partitions`` (wait out an in-flight swap, fail loud
-    on a crashed one); readers in OTHER sessions that race a swap
-    starting after their guard passed are best-effort only — the
-    check-then-scan window is real (r12 ADVICE, medium) and documented,
-    not closed. Deployments needing cross-session probe-during-
-    compaction guarantees must serialize through the writer.
-
-    ``drop``/``drop_key`` (r13 verdict #3): tombstone FOLD — rows of the
-    rewritten partitions whose ``drop_key`` appears in ``drop`` are
-    omitted from the staged copy (an anti-join inside the same stage
-    job, no extra pass). Content preservation then means "same rows
-    minus the folded set", which is still deterministic given the
-    tombstone set, so crash re-runs remain idempotent. The caller owns
-    tombstone GC (a folded id's tombstone is discardable only once no
-    physical row remains anywhere)."""
-    recover_partition_compaction(spark, root, part_col)
-    counts = partition_file_counts(spark, root, part_col)
-    over = sorted(v for v, n in counts.items() if n > max_files_per_partition)
-    if not over:
-        return []
-    fs, jvm = _fs(spark, root)
-    hp = jvm.org.apache.hadoop.fs.Path
-    # Stage: one file per partition. repartition by the column gives each
-    # partition's rows to one task; partitionBy then emits exactly one
-    # file per partition dir.
-    staged_df = spark.read.parquet(root).filter(
-        F.col(part_col).isin([int(v) for v in over])
-    )
-    if drop is not None:
-        staged_df = staged_df.join(drop, drop_key, "left_anti")
-    (
-        staged_df.repartition(len(over), part_col)
-        .write.mode("overwrite")
-        .partitionBy(part_col)
-        .parquet(f"{root}_staged")
-    )
-    # Verify every staged partition actually materialized BEFORE touching
-    # any live directory: if the stage write dropped one (or wrote it
-    # elsewhere), proceeding to rename (A) would park the only copy in
-    # <root>_old with nothing to swap in (r11 ADVICE, high).
-    for v in over:
-        if not fs.exists(hp(f"{root}_staged/{part_col}={v}")):
-            if drop is not None:
-                # A fold can legitimately empty a partition (every row
-                # tombstoned) — swap in an empty dir rather than abort.
-                fs.mkdirs(hp(f"{root}_staged/{part_col}={v}"))
-                continue
-            fs.delete(hp(f"{root}_staged"), True)
-            raise OSError(
-                f"staged compaction output missing {part_col}={v}; live "
-                "store untouched, staging dropped"
-            )
-    old_root = hp(f"{root}_old")
-    fs.mkdirs(old_root)
-    for v in over:
-        live = hp(f"{root}/{part_col}={v}")
-        # Rename returns are CHECKED (Hadoop rename reports failure by
-        # returning false): a failed (A) aborts with the live dir intact;
-        # a failed (B) aborts with the partition safe in <root>_old and
-        # both swap markers present, which recovery finishes.
-        _rename_or_raise(fs, live, hp(f"{root}_old/{part_col}={v}"))      # (A)
-        _rename_or_raise(fs, hp(f"{root}_staged/{part_col}={v}"), live)   # (B)
-    fs.delete(old_root, True)
-    fs.delete(hp(f"{root}_staged"), True)
-    return over
-
-
-# ---------------------------------------------------------------------------
-# Generational (size-tiered / LSM-style) compaction for layouts whose
-# APPENDS SCATTER ACROSS ALL PARTITIONS (r13). Whole-partition threshold
-# compaction is the right tool when a micro-batch touches few partitions
-# (the vector tier: a batch lands in <= |batch| coarse cells). The corpus
-# store's fingerprint/band hash buckets are the opposite: a batch of B
-# docs scatters into min(B, n_buckets) buckets — typically ALL of them —
-# so every bucket crosses the file threshold together and whole-partition
-# compaction rewrites the WHOLE corpus every T triggers: amortized
-# O(corpus/T) written per trigger, measured as a +12% ingest drift over 24
-# increments at the 100x corpus (scripts/corpus_store_results.json).
-#
-# The fix is the LSM tree's: partitions gain a GENERATION sub-level,
-#
-#     <root>/<part_col>=<v>/gen=<g>/part-*.parquet
-#
-# appends land in gen=0; when a (partition, gen) level exceeds the file
-# bound, that LEVEL ALONE is merged into ONE file appended to gen+1 — the
-# accumulated big files above it are never read or rewritten. Per-doc
-# write amplification drops from O(corpus/T)/trigger to O(levels) total,
-# levels = log_T(corpus/batch) (Schleimer-era LSM tiering; the same
-# strategy table formats ship as size-tiered OPTIMIZE).
-#
-# Crash safety mirrors the dir-swap protocol, with one extension: the
-# merged output lands by PER-FILE renames into the live gen+1 dir (names
-# are globally-unique Spark part-file names, so re-runs skip-if-present
-# idempotently). Rows are never visible twice: the source level is parked
-# under <root>_old BEFORE the merged file is renamed in, and <root>_old is
-# outside the read root. Staged completeness is adjudicated by Spark's own
-# _SUCCESS marker: present -> finish the swap, absent -> roll back.
-#
-# Readers guard with ``await_no_swap_marker``: partition dirs themselves
-# never vanish mid-swap (only a gen sub-level does), so the per-partition
-# existence probe of ``await_stable_partitions`` cannot see the hole — the
-# coarse marker check is the correct guard here.
-# ---------------------------------------------------------------------------
-
-
 def await_no_swap_marker(
     spark: SparkSession,
     root: str,
     retries: int = 20,
     wait_sec: float = 0.5,
 ) -> None:
-    """Reader-side guard for generational layouts: wait out an in-flight
-    tiered pass (the marker spans the whole per-level swap batch —
-    measured ~3 s at 64 over-threshold buckets on the 100x corpus, so the
-    default budget waits up to ~10 s), then fail LOUD if the marker
-    persists — a crashed swap has a gen level parked in ``<root>_old``
-    and a scan now would silently miss those rows. Same check-then-scan
-    caveat as ``await_stable_partitions`` (single-writer contract;
-    ``verify_stable_after`` for certainty)."""
+    """Reader-side guard: wait out an in-flight compaction pass (the
+    marker spans the whole per-level swap batch — measured ~3 s at 64
+    over-threshold buckets on the 100x corpus, so the default budget
+    waits up to ~10 s), then fail LOUD if the marker persists — a
+    crashed swap has a gen level parked in ``<root>_old`` and a scan now
+    would silently miss those rows. Readers never mutate the store, so
+    recovery is not run here (the single writer owns it). Check-then-
+    scan, not atomic with the caller's scan: see the module docstring
+    for the single-writer contract and ``verify_stable_after``."""
     fs, jvm = _fs(spark, root)
     hp = jvm.org.apache.hadoop.fs.Path(f"{root}_old")
     for attempt in range(retries + 1):
@@ -468,49 +167,6 @@ def await_no_swap_marker(
         "read now would silently miss those rows. Run recovery from the "
         "writer before reading"
     )
-
-
-def parked_protocol(spark: SparkSession, root: str, part_col: str) -> str:
-    """Which swap protocol's data is parked under ``<root>_old`` — the
-    adjudicator BOTH recovery-protocol selection and the reader guard use
-    (r15 ADVICE, medium x2). The two protocols park different shapes and
-    each recovery is DESTRUCTIVE under the other's crash state
-    (``recover_partition_compaction`` deletes a parked gen level whose
-    live cell dir still exists; ``recover_tiered_compaction`` skips
-    flat-parked files then drops the whole marker), so the protocol must
-    be read from the PARKED ENTRIES THEMSELVES, never inferred from the
-    live tree — a crashed tiered swap can have parked the only gen level
-    the live tree ever showed.
-
-    Returns one of:
-      - ``"none"``   — no marker exists (swap completed / never started);
-      - ``"tiered"`` — some parked entry carries a ``gen=`` sub-dir;
-      - ``"flat"``   — parked entries carry files / non-gen children
-        (the whole-partition protocol parks the partition dir itself);
-      - ``"empty"``  — the marker exists but nothing is parked yet: the
-        window between a swap's ``mkdirs`` and its first park rename, or
-        a completed level awaiting skeleton cleanup. Both recoveries
-        degenerate to dropping marker+staging here (live tree complete).
-    Listing errors propagate — callers decide whether to retry or fail
-    loud; silently defaulting to a protocol is exactly the data-loss
-    path this function exists to close."""
-    fs, jvm = _fs(spark, root)
-    hp = jvm.org.apache.hadoop.fs.Path
-    old_root = hp(f"{root}_old")
-    if not fs.exists(old_root):
-        return "none"
-    prefix = f"{part_col}="
-    saw_flat = False
-    for pdir in fs.listStatus(old_root):
-        if not pdir.isDirectory() or not pdir.getPath().getName().startswith(
-            prefix
-        ):
-            continue
-        for ch in fs.listStatus(pdir.getPath()):
-            if ch.isDirectory() and ch.getPath().getName().startswith("gen="):
-                return "tiered"
-            saw_flat = True
-    return "flat" if saw_flat else "empty"
 
 
 def gen_file_counts(
@@ -560,7 +216,14 @@ def recover_tiered_compaction(
     ``_SUCCESS`` the merge never completed — roll the parked level back
     into the live tree (per-file moves; append files written to gen=0
     since the crash are untouched, their Spark part names cannot collide)
-    and drop the staging. Idempotent; run first by the compactor."""
+    and drop the staging. Idempotent; run first by the compactor.
+
+    Anything else parked under ``<root>_old`` — loose files, a non-gen
+    child, a foreign entry — was not written by this compactor (e.g. a
+    crashed whole-partition swap of an older engine parks the partition
+    dir itself, files and all). Recovery would drop it with the marker,
+    destroying what may be the only copy, so it raises BEFORE touching
+    anything and leaves the parked files in place."""
     fs, jvm = _fs(spark, root)
     hp = jvm.org.apache.hadoop.fs.Path
     # an orphan batch-staging tmp (crash mid-stage-job) is always safe to
@@ -572,47 +235,59 @@ def recover_tiered_compaction(
         fs.delete(hp(f"{root}_staged"), True)
         return
     prefix = f"{part_col}="
+    parked = []
     for pdir in fs.listStatus(old_root):
         pname = pdir.getPath().getName()
-        if not pname.startswith(prefix):
-            continue
-        for gdir in fs.listStatus(pdir.getPath()):
+        children = (
+            fs.listStatus(pdir.getPath())
+            if pdir.isDirectory() and pname.startswith(prefix)
+            else [pdir]
+        )
+        for gdir in children:
             gname = gdir.getPath().getName()
-            if not gname.startswith("gen="):
-                continue
-            g = _int_part_value(gname)
-            if g is None:
-                # Fail LOUD, not skip: this dir is PARKED data — ignoring
-                # it would strand its rows outside the read root forever
-                # (r13 ADVICE, low).
+            is_gen = gdir.isDirectory() and gname.startswith("gen=")
+            g = _int_part_value(gname) if is_gen else None
+            # Fail LOUD, not skip: this is PARKED data — ignoring it would
+            # strand (or, with the marker's delete below, destroy) its rows.
+            if is_gen and g is None:
                 raise ValueError(
                     f"unparseable generation dir {pname}/{gname} parked "
                     f"under {root}_old — not written by this compactor; "
                     "resolve it manually before recovery can proceed"
                 )
-            staged = f"{root}_staged/{pname}/gen={g + 1}"
-            if fs.exists(hp(f"{staged}/_SUCCESS")):
-                live_next = f"{root}/{pname}/gen={g + 1}"
-                fs.mkdirs(hp(live_next))
-                for f in fs.listStatus(hp(staged)):
-                    fname = f.getPath().getName()
-                    if not fname.endswith(".parquet"):
-                        continue
-                    target = hp(f"{live_next}/{fname}")
-                    if not fs.exists(target):
-                        _rename_or_raise(fs, f.getPath(), target)
-                fs.delete(gdir.getPath(), True)
-                fs.delete(hp(staged), True)
-            else:
-                live = f"{root}/{pname}/gen={g}"
-                fs.mkdirs(hp(live))
-                for f in fs.listStatus(gdir.getPath()):
-                    fname = f.getPath().getName()
-                    target = hp(f"{live}/{fname}")
-                    if not fs.exists(target):
-                        _rename_or_raise(fs, f.getPath(), target)
-                fs.delete(gdir.getPath(), True)
-                fs.delete(hp(staged), True)
+            if g is None:
+                raise ValueError(
+                    f"{gdir.getPath()} is parked under {root}_old but is "
+                    "not a gen= level written by this compactor (a "
+                    "whole-partition swap parks files directly); it may "
+                    "be the only copy — resolve it manually before "
+                    "recovery can proceed"
+                )
+            parked.append((pname, gdir, g))
+    for pname, gdir, g in parked:
+        staged = f"{root}_staged/{pname}/gen={g + 1}"
+        if fs.exists(hp(f"{staged}/_SUCCESS")):
+            live_next = f"{root}/{pname}/gen={g + 1}"
+            fs.mkdirs(hp(live_next))
+            for f in fs.listStatus(hp(staged)):
+                fname = f.getPath().getName()
+                if not fname.endswith(".parquet"):
+                    continue
+                target = hp(f"{live_next}/{fname}")
+                if not fs.exists(target):
+                    _rename_or_raise(fs, f.getPath(), target)
+            fs.delete(gdir.getPath(), True)
+            fs.delete(hp(staged), True)
+        else:
+            live = f"{root}/{pname}/gen={g}"
+            fs.mkdirs(hp(live))
+            for f in fs.listStatus(gdir.getPath()):
+                fname = f.getPath().getName()
+                target = hp(f"{live}/{fname}")
+                if not fs.exists(target):
+                    _rename_or_raise(fs, f.getPath(), target)
+            fs.delete(gdir.getPath(), True)
+            fs.delete(hp(staged), True)
     fs.delete(old_root, True)
     fs.delete(hp(f"{root}_staged"), True)
 
@@ -639,13 +314,23 @@ def tiered_compact_partitions(
     ``recover_tiered_compaction`` (run first) finishes or rolls back any
     interrupted swap by the ``_SUCCESS`` rule. Rows are never readable
     twice (the parked copy sits outside the read root) and never lost (no
-    delete precedes a verified rename). Same single-writer contract as
-    ``compact_partitions``; readers use ``await_no_swap_marker``.
+    delete precedes a verified rename).
 
-    ``drop``/``drop_key``: tombstone FOLD on the merged level only — see
-    ``compact_partitions``. Levels above the merged one keep their dead
-    rows until their own merge; readers hide them via the tombstone
-    anti-join either way."""
+    Concurrency contract: the store has ONE writer — compaction must not
+    run concurrently with an in-flight append. Readers in this engine
+    guard with ``await_no_swap_marker`` (wait out an in-flight swap, fail
+    loud on a crashed one); readers in OTHER sessions racing a swap that
+    starts after their guard passed are best-effort only (module
+    docstring).
+
+    ``drop``/``drop_key`` (r13 verdict #3): tombstone FOLD — rows of the
+    merged level whose ``drop_key`` appears in ``drop`` are omitted from
+    the staged copy (an anti-join inside the same stage job, no extra
+    pass). The result is still deterministic given the tombstone set, so
+    crash re-runs stay idempotent. Levels above the merged one keep their
+    dead rows until their own merge; readers hide them via the tombstone
+    anti-join either way. The caller owns tombstone GC (a folded id's
+    tombstone is discardable only once no physical row remains)."""
     if max_files_per_level < 1:
         # The cascade re-checks after each merge; at 0 the merged single
         # file is itself "over threshold" and the loop never terminates.
@@ -1007,21 +692,19 @@ def migrate_flat_to_tiered(
     spark: SparkSession, root: str, part_col: str
 ) -> int:
     """One-shot in-place migration of a FLAT partitioned layout
-    (``<root>/<part_col>=<v>/part-*.parquet``, the pre-generational
-    corpus-store layout) into the tiered one (loose files move to
-    ``.../gen=0/``). Without this, a store written before the tiered
-    layout landed would reopen cleanly (``_META.json`` carried only
-    ``n_buckets``) and the first append would write ``gen=0/`` NEXT TO
-    the legacy loose files — a mixed-depth tree Spark's partition
-    discovery rejects, with the compactor blind to the loose files
-    (r13 ADVICE, medium).
+    (``<root>/<part_col>=<v>/part-*.parquet``, what older corpus stores
+    and vector indexes were written in) into the generational one (loose
+    files move to ``.../gen=0/``). Without this, the first append would
+    write ``gen=0/`` NEXT TO the legacy loose files — a mixed-depth tree
+    Spark's partition discovery rejects, with the compactor blind to the
+    loose files (r13 ADVICE, medium).
 
     Driver-side per-file renames — no data is read or rewritten, cost is
     O(files). Idempotent: a crash mid-migration leaves some files moved
     and some loose; the next open re-runs the migration and moves the
     remainder (already-moved files are simply absent from the loose
-    level). Only the store's writer calls this (at open, before any
-    read); an external reader racing the migration window fails loud on
+    level). Only the store's writer calls this (before its first append
+    or scan); an external reader racing the migration window fails loud on
     Spark's conflicting-structure check rather than seeing partial data.
     Returns the number of files moved (0 for an already-tiered or empty
     store)."""

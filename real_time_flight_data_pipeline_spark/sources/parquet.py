@@ -47,25 +47,47 @@ def _ensure_runtime_confs(spark: SparkSession) -> None:
 _RG_CACHE: dict[tuple[str, int, float], int] = {}
 
 
-def _max_partition_bytes(spark: SparkSession) -> int:
-    """spark.sql.files.maxPartitionBytes in bytes, as the JVM parses it
-    (every byte-string suffix Spark accepts). 128 MiB, Spark's default,
-    for sessions without a JVM handle (Spark Connect)."""
+def _split_confs(spark: SparkSession) -> tuple[int, int, int]:
+    """The inputs of Spark's scan split size (``FilePartition.
+    maxSplitBytes``) as the JVM parses them (every byte-string suffix
+    Spark accepts): maxPartitionBytes,
+    openCostInBytes, and minPartitionNum (unset -> the session's leaf-node
+    default parallelism). For sessions without a JVM handle (Spark
+    Connect): Spark's byte defaults and a minPartitionNum of 1, i.e.
+    splits of at most maxPartitionBytes."""
     try:
         jss = spark._jsparkSession
     except AttributeError:
-        return 128 * 1024 * 1024
-    return jss.sessionState().conf().filesMaxPartitionBytes()
+        return 128 * 1024 * 1024, 4 * 1024 * 1024, 1
+    conf = jss.sessionState().conf()
+    min_parts = conf.filesMinPartitionNum()
+    return (
+        conf.filesMaxPartitionBytes(),
+        conf.filesOpenCostInBytes(),
+        min_parts.get()
+        if min_parts.isDefined()
+        else jss.leafNodeDefaultParallelism(),
+    )
 
 
-def _scan_splits(path: str, max_part_bytes: int = 128 * 1024 * 1024) -> int | None:
-    """Effective scan parallelism of a parquet file: Spark cannot split a
-    scan below a row-group boundary, so one file's usable task count is
-    capped by its row-group count (byte-range splits beyond that are
-    empty) — AND by the byte-range split count Spark will actually plan,
-    ceil(size / maxPartitionBytes): a small file with many row groups
-    still scans as ONE task (r17, ADVICE). None when the probe cannot
-    answer (caller falls back to asking Spark)."""
+def _byte_splits(
+    size: int, max_part_bytes: int, open_cost: int, min_parts: int
+) -> int:
+    """Scan partitions Spark plans for ONE file of ``size`` bytes: the
+    split size is ``min(maxPartitionBytes, max(openCostInBytes, (size +
+    openCostInBytes) / minPartitionNum))`` and every split of a lone file
+    becomes its own partition."""
+    split = min(max_part_bytes, max(open_cost, (size + open_cost) // min_parts))
+    return max(1, -(-size // max(1, split)))
+
+
+def _scan_splits(path: str, confs: tuple[int, int, int]) -> int | None:
+    """Effective scan parallelism of a parquet file: the byte-range split
+    count Spark will actually plan (``_byte_splits`` over ``confs``, see
+    ``_split_confs``), capped by the row-group count — Spark cannot split
+    a scan below a row-group boundary, so byte-range splits beyond that
+    are empty tasks. None when the probe cannot answer (caller falls back
+    to asking Spark)."""
     try:
         st = os.stat(path)
         key = (os.path.realpath(path), st.st_size, st.st_mtime)
@@ -75,8 +97,7 @@ def _scan_splits(path: str, max_part_bytes: int = 128 * 1024 * 1024) -> int | No
 
             n = pq.ParquetFile(path).metadata.num_row_groups
             _RG_CACHE[key] = n
-        byte_splits = max(1, -(-st.st_size // max(1, max_part_bytes)))
-        return min(n, byte_splits)
+        return min(n, _byte_splits(st.st_size, *confs))
     except Exception:
         return None
 
@@ -95,7 +116,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn(c, F.to_utc_timestamp(F.col(c), "UTC"))
     # Single-file layout: the footer answers "how parallel can this scan
     # be" without a JVM round trip; _spread reads it via this attribute.
-    df._ff_scan_splits = _scan_splits(path, _max_partition_bytes(spark))
+    df._ff_scan_splits = _scan_splits(path, _split_confs(spark))
     return df
 
 

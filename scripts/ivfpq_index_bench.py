@@ -16,8 +16,8 @@ Run: python scripts/ivfpq_index_bench.py              (sf0.1)
          and record (a) per-batch ingest wall time — must stay FLAT as
          the index grows, since the accept anti-joins prune to the
          batch's cells — and (b) probe latency after all increments,
-         uncompacted vs after compact_index_cells, against the
-         build-time probe figure.)
+         uncompacted vs after the maintainer's maybe_compact, against
+         the build-time probe figure.)
 Writes/merges ivfpq_index_results.json keyed by tier.
 """
 
@@ -62,23 +62,16 @@ def _probe_median(spark, path, qvec, n=N_PROBES) -> tuple[float, list]:
     return round(statistics.median(runs), 3), runs
 
 
-def run_increments(spark, sf_dir: str, tier: str, compaction: str = "auto") -> dict:
+def run_increments(spark, sf_dir: str, tier: str) -> dict:
     """Build from 90% of the corpus, ingest the held 10% in N_INCR
-    micro-batches, measure flat-ingest and probe-vs-compaction.
-
-    ``compaction="tiered"`` (r13 verdict #7) forces the generational
-    path: the layout migrates at the first compaction pass and per-level
-    merges run between triggers (the corpus bench's driver shape), so the
-    curve prices the LSM mode end-to-end — ingest must stay flat and
-    probes must read identically across the flip."""
+    micro-batches, measure flat-ingest and probe-vs-compaction."""
     import shutil
 
     from real_time_flight_data_pipeline_spark.operators.ann_index import (
         cell_file_counts,
-        compact_index_cells,
     )
-    from real_time_flight_data_pipeline_spark.streaming.vector_index import (
-        VectorIndexMaintainer,
+    from real_time_flight_data_pipeline_spark.streaming import (
+        vector_index as VI,
     )
 
     work = "/tmp/flightframe_ivfpq_incr"
@@ -99,8 +92,8 @@ def run_increments(spark, sf_dir: str, tier: str, compaction: str = "auto") -> d
         "b", F.pmod(F.xxhash64("vec_id"), F.lit(N_INCR))
     )
     held.write.partitionBy("b").parquet(f"{work}/held")
-    m = VectorIndexMaintainer(spark, path, compaction=compaction)
-    per_batch, per_compact, added = [], [], 0
+    m = VI.VectorIndexMaintainer(spark, path)
+    per_batch, added = [], 0
     for i in range(N_INCR):
         batch = spark.read.parquet(f"{work}/held").filter(
             F.col("b") == i
@@ -109,23 +102,15 @@ def run_increments(spark, sf_dir: str, tier: str, compaction: str = "auto") -> d
         s = m.ingest_batch(batch)
         per_batch.append(round(time.perf_counter() - t0, 3))
         added += s.n_added
-        if compaction == "tiered":
-            t0 = time.perf_counter()
-            merged_lvls = m.maybe_compact(max_files_per_cell=8)
-            per_compact.append(
-                round(time.perf_counter() - t0, 3) if merged_lvls else 0.0
-            )
     counts = cell_file_counts(spark, path)
     frag_max, frag_total = max(counts.values()), sum(counts.values())
-    # strict_ids trade, measured (r12; auto default r13): replay the last
-    # batch through the auto default, the forced cell-pruned guard, and
-    # the forced strict (unpruned id projection) guard — the pruned/strict
-    # delta prices the cross-batch id-mutation protection, and the auto
-    # fields record which side the budget resolved to at this index size.
-    from real_time_flight_data_pipeline_spark.streaming.vector_index import (
-        _STRICT_ID_SCAN_MAX_BYTES,
-    )
-
+    # Id-guard trade, measured (r12; budget rule r13): replay the last
+    # batch under the budget as shipped, then with the budget forced to
+    # the cell-pruned guard and to the strict (unpruned id projection)
+    # guard — the pruned/strict delta prices the cross-batch id-mutation
+    # protection, and the auto fields record which side the budget
+    # resolved to at this index size.
+    budget = VI._STRICT_ID_SCAN_MAX_BYTES
     last = spark.read.parquet(f"{work}/held").filter(
         F.col("b") == N_INCR - 1
     ).drop("b")
@@ -135,28 +120,29 @@ def run_increments(spark, sf_dir: str, tier: str, compaction: str = "auto") -> d
     strict_auto = {
         "strict_auto_mode": s_auto.id_guard_mode,
         "strict_auto_cells_bytes": m._cells_bytes(),
-        "strict_auto_budget_bytes": _STRICT_ID_SCAN_MAX_BYTES,
+        "strict_auto_budget_bytes": budget,
     }
-    m_pruned = VectorIndexMaintainer(spark, path, strict_ids=False)
-    t0 = time.perf_counter()
-    m_pruned.ingest_batch(last)
-    replay_pruned_sec = round(time.perf_counter() - t0, 3)
-    m_strict = VectorIndexMaintainer(spark, path, strict_ids=True)
-    t0 = time.perf_counter()
-    m_strict.ingest_batch(last)
-    replay_strict_sec = round(time.perf_counter() - t0, 3)
+    try:
+        VI._STRICT_ID_SCAN_MAX_BYTES = -1  # every index is over: pruned
+        t0 = time.perf_counter()
+        assert m.ingest_batch(last).id_guard_mode == "pruned"
+        replay_pruned_sec = round(time.perf_counter() - t0, 3)
+        VI._STRICT_ID_SCAN_MAX_BYTES = 1 << 62  # every index is under: strict
+        t0 = time.perf_counter()
+        assert m.ingest_batch(last).id_guard_mode == "strict"
+        replay_strict_sec = round(time.perf_counter() - t0, 3)
+    finally:
+        VI._STRICT_ID_SCAN_MAX_BYTES = budget
     probe_frag, frag_runs = _probe_median(spark, path, qvec)
     t0 = time.perf_counter()
-    n_compacted = len(compact_index_cells(spark, path, max_files_per_cell=8))
+    merged = m.maybe_compact(max_files_per_cell=8)
+    n_compacted = len({cell for cell, _ in merged})
     compact_sec = round(time.perf_counter() - t0, 3)
     counts2 = cell_file_counts(spark, path)
     probe_comp, comp_runs = _probe_median(spark, path, qvec)
     half = N_INCR // 2
     result = {
         "tier": tier,
-        "compaction_mode": compaction,
-        "layout_tiered_final": m._layout_is_tiered(),
-        **({"compact_per_batch_sec": per_compact} if per_compact else {}),
         "n_increments": N_INCR,
         "n_added": added,
         "build_sec": build_sec,
@@ -186,14 +172,9 @@ def run_increments(spark, sf_dir: str, tier: str, compaction: str = "auto") -> d
         "(accept anti-joins prune to batch cells); compaction returns "
         "probe latency to ~ the build-time figure.",
     }
-    merged = json.loads(OUT.read_text()) if OUT.exists() else {}
-    key = (
-        f"{tier}_tiered_increments"
-        if compaction == "tiered"
-        else f"{tier}_increments"
-    )
-    merged[key] = result
-    OUT.write_text(json.dumps(merged, indent=1))
+    banked = json.loads(OUT.read_text()) if OUT.exists() else {}
+    banked[f"{tier}_increments"] = result
+    OUT.write_text(json.dumps(banked, indent=1))
     print(json.dumps(result))
     return result
 
@@ -274,7 +255,7 @@ def run_tombstones(spark, sf_dir: str, tier: str, wave: bool = False) -> dict:
         "delete_sec": delete_sec,
         "probe_clean_sec": probe_clean,
         "probe_tombstoned_sec": probe_tombed,
-        "n_cells_folded": len(folded),
+        "n_cells_folded": len({cell for cell, _ in folded}),
         "compact_fold_sec": fold_sec,
         "gc_cleared_tombstones": gc_cleared,
         "probe_after_fold_sec": probe_folded,
@@ -349,11 +330,6 @@ def main() -> None:
         from scale_curve import build_corpus_100x  # noqa: PLC0415
 
         build_corpus_100x(spark)
-    if "--tiered-increments" in sys.argv[1:]:
-        run_increments(
-            spark, sf_dir, tier, compaction="tiered"
-        )
-        return
     if "--increments" in sys.argv[1:]:
         run_increments(spark, sf_dir, tier)
         return

@@ -12,3 +12,27 @@ SF_CORRECT = "/root/testdata/sf0.01"
 def spark():
     s = get_spark(app_name="flightframe-tests")
     yield s
+
+
+@pytest.fixture(scope="session")
+def built_query(spark):
+    """``built_query(name, sf_dir)``: the catalog query's DataFrame, built
+    once per (query, scale) and shared by the tests of that scale: the
+    oracle match executes it once; the smoke build, the output-type audit
+    and the plan gates only read its schema or plan. Building runs each
+    query's eager checkpoints, ~0.7 s a query, so rebuilding the catalog
+    for every such test cost minutes. Only one scale is held at a time."""
+    from real_time_flight_data_pipeline_spark.plans.catalog import REGISTRY  # noqa: PLC0415
+
+    cache: dict[tuple[str, str], object] = {}
+
+    def build(name: str, sf_dir: str):
+        if any(sf != sf_dir for _, sf in cache):
+            cache.clear()
+        key = (name, sf_dir)
+        if key not in cache:
+            cache[key] = REGISTRY[name].builder(spark, sf_dir)
+        return cache[key]
+
+    yield build
+    cache.clear()

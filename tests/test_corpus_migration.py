@@ -165,29 +165,31 @@ def test_stray_partition_dirs_are_skipped_by_listings(spark, tmp_path):
     store.ingest_batch(_docs(spark))
     os.makedirs(f"{store.docs_root}/bucket=__HIVE_DEFAULT_PARTITION__")
     os.makedirs(f"{store.docs_root}/bucket=2/gen=backup")
-    rollup = PS.partition_file_counts_rollup(spark, store.docs_root, "bucket")
     tiered = PS.gen_file_counts(spark, store.docs_root, "bucket")
-    assert all(isinstance(v, int) for v in rollup)
     assert all(isinstance(v, int) and isinstance(g, int) for v, g in tiered)
     # compaction runs to completion with the strays present
     store.maybe_compact(max_files_per_bucket=1)
 
 
 def test_frag_counters_are_layout_aware(spark, tmp_path):
-    """r15 verdict #5: the monitoring counter must keep reporting on a
-    generational layout (gen= files roll up per partition) and the flat
-    compactor's threshold counter must fail loud there instead of reading
-    0 for every partition — 0 on exactly the layout that needs monitoring
-    was the footgun."""
-    store = CorpusStore(spark, str(tmp_path / "c"), n_buckets=4)
-    store.ingest_batch(_docs(spark))  # always-tiered layout: bucket=v/gen=0
-    rollup = PS.partition_file_counts_rollup(spark, store.docs_root, "bucket")
-    gen = PS.gen_file_counts(spark, store.docs_root, "bucket")
-    assert sum(rollup.values()) == sum(gen.values()) > 0
-    for v in rollup:
-        assert rollup[v] == sum(n for (b, _), n in gen.items() if b == v)
-    with pytest.raises(ValueError, match="generational layout"):
-        PS.partition_file_counts(spark, store.docs_root, "bucket")
+    """r15 verdict #5: the vector index's per-cell monitoring counter
+    must keep reporting on the generational layout — every gen= level's
+    files roll up into their cell's total, never reading 0 on exactly
+    the layout that needs monitoring."""
+    from real_time_flight_data_pipeline_spark.operators.ann_index import (
+        cell_file_counts,
+    )
+
+    path = str(tmp_path / "index")
+    for cell, gen, n in [(0, 0, 3), (0, 1, 2), (0, 3, 1), (5, 0, 1), (7, 2, 4)]:
+        d = f"{path}/cells/cell={cell}/gen={gen}"
+        os.makedirs(d)
+        for i in range(n):
+            pathlib.Path(f"{d}/part-{i:05d}.parquet").touch()
+    pathlib.Path(f"{path}/cells/cell=0/gen=1/_SUCCESS").touch()
+    gen = PS.gen_file_counts(spark, f"{path}/cells", "cell")
+    assert gen == {(0, 0): 3, (0, 1): 2, (0, 3): 1, (5, 0): 1, (7, 2): 4}
+    assert cell_file_counts(spark, path) == {0: 6, 5: 1, 7: 4}
 
 
 def test_recovery_fails_loud_on_unparseable_parked_dir(spark, tmp_path):

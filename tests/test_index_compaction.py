@@ -1,38 +1,42 @@
 """Compaction lifecycle of the persisted IVF-PQ index (r11 verdict #1/#2).
 
-Micro-batch appends accrete small part-files inside cell partitions;
-``compact_index_cells`` rewrites over-threshold cells via a staged swap
-(stage fully -> rename live->old (A) -> rename staged->live (B)), with
-``recover_compaction`` finishing or rolling back any interrupted swap.
-These tests pin what the r11 round shipped untested:
+Micro-batch appends accrete small part-files inside the ``gen=0`` level
+of each cell; ``VectorIndexMaintainer.maybe_compact`` merges every
+over-threshold (cell, gen) level into one file in ``gen+1`` through the
+generational swap of operators/partstore.py (stage with a ``_SUCCESS``
+witness -> park the level under ``cells_old`` -> rename the merged file
+into live ``gen+1`` -> drop the parked level), and
+``recover_tiered_compaction`` finishes or rolls back any interrupted swap.
+These tests pin:
 
-- content preservation + file-count bound on a genuinely fragmented index,
+- content preservation + per-level file bound on a genuinely fragmented
+  index,
 - probe results bit-identical pre/post compaction,
-- every crash state of the swap protocol recovered without loss,
+- every crash state of the swap recovered without loss,
 - a FAILED (false-returning) Hadoop rename aborts loudly with zero data
   loss instead of deleting the only copy (r11 ADVICE, high),
-- readers fail loud (not silently cell-less) on a crashed swap,
+- a parked entry the generational compactor did not write (a whole-cell
+  swap's parked files) makes recovery fail loud instead of dropping it,
+- readers fail loud (not silently row-less) on a crashed swap,
 - the streaming maintainer actually invokes compaction between triggers.
 """
 
 from __future__ import annotations
 
 import glob
+import os
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
-from real_time_flight_data_pipeline_spark.operators import ann_index
+from real_time_flight_data_pipeline_spark.operators import partstore as PS
 from real_time_flight_data_pipeline_spark.operators.ann_index import (
     add_to_ivfpq_index,
-    await_stable_cells,
     build_ivfpq_index,
     cell_file_counts,
-    compact_index_cells,
     encode_batch,
     probe_ivfpq_index,
-    recover_compaction,
 )
 from real_time_flight_data_pipeline_spark.sources.parquet import load_table
 from real_time_flight_data_pipeline_spark.streaming.vector_index import (
@@ -110,6 +114,16 @@ def _probe(spark, path, qvec):
     )
 
 
+def _compact(spark, path, max_files):
+    return VectorIndexMaintainer(spark, path).maybe_compact(
+        max_files_per_cell=max_files
+    )
+
+
+def _recover(spark, path):
+    PS.recover_tiered_compaction(spark, f"{path}/cells", "cell")
+
+
 def test_compaction_preserves_content_and_bounds_files(spark, frag_index):
     path, hot_cell, qvec, _ = frag_index
     before_counts = cell_file_counts(spark, path)
@@ -117,83 +131,121 @@ def test_compaction_preserves_content_and_bounds_files(spark, frag_index):
     before = _content(spark, path)
     probe_before = _probe(spark, path, qvec)
 
-    over = compact_index_cells(spark, path, max_files_per_cell=3)
-    assert hot_cell in over
+    merged = _compact(spark, path, 3)
+    assert (hot_cell, 0) in merged
+    merged_cells = {c for c, _ in merged}
     after_counts = cell_file_counts(spark, path)
-    assert after_counts[hot_cell] == 1  # one task per cell -> one file
-    for c, n in after_counts.items():
-        assert n <= max(3, 1) or c not in over
+    assert after_counts[hot_cell] == 1  # one merged file in gen=1
+    levels = PS.gen_file_counts(spark, f"{path}/cells", "cell")
+    assert max(levels.values()) <= 3
     # untouched cells keep their exact file sets
     for c, n in before_counts.items():
-        if c not in over:
+        if c not in merged_cells:
             assert after_counts[c] == n
     assert _content(spark, path) == before  # bit-identical rows
     assert _probe(spark, path, qvec) == probe_before  # bit-identical probe
     assert not glob.glob(f"{path}/cells_old")
     assert not glob.glob(f"{path}/cells_staged")
     # idempotent: an immediate re-run finds nothing over threshold
-    assert compact_index_cells(spark, path, max_files_per_cell=3) == []
+    assert _compact(spark, path, 3) == []
 
 
-def _crash_state(path, hot_cell, *, old=False, staged=False, live=True):
-    """Materialize a mid-swap crash state for the hot cell by moving the
-    directories the way the protocol would have (local-FS test double of
-    the two-rename window)."""
-    cell = f"cell={hot_cell}"
+def _crash_state(spark, path, cell, *, staged=False, parked=False):
+    """Materialize a mid-swap crash state of the ``cell``'s gen=0 -> gen=1
+    merge by doing what the protocol would have done so far: ``staged``
+    writes the complete merged copy (Spark's own ``_SUCCESS`` witness
+    included), ``parked`` moves the live level under ``cells_old``."""
+    level = f"cell={cell}/gen=0"
     if staged:
-        shutil.copytree(
-            f"{path}/cells/{cell}", f"{path}/cells_staged/{cell}"
-        )
-    if old:
-        shutil.copytree(f"{path}/cells/{cell}", f"{path}/cells_old/{cell}")
-    if not live:
-        shutil.rmtree(f"{path}/cells/{cell}")
+        spark.read.parquet(f"{path}/cells/{level}").coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(f"{path}/cells_staged/cell={cell}/gen=1")
+    if parked:
+        os.makedirs(f"{path}/cells_old/cell={cell}", exist_ok=True)
+        os.rename(f"{path}/cells/{level}", f"{path}/cells_old/{level}")
 
 
 def test_recover_orphan_staging_only(spark, frag_index):
-    """Crash AFTER staging, before rename (A): live untouched, orphan
-    cells_staged dropped."""
+    """Crash AFTER staging, before the level is parked: live untouched,
+    orphan cells_staged dropped."""
     path, hot_cell, qvec, _ = frag_index
     before = _content(spark, path)
-    _crash_state(path, hot_cell, staged=True)
-    recover_compaction(spark, path)
+    _crash_state(spark, path, hot_cell, staged=True)
+    _recover(spark, path)
     assert _content(spark, path) == before
     assert not glob.glob(f"{path}/cells_staged")
 
 
 def test_recover_between_renames(spark, frag_index):
-    """Crash BETWEEN (A) and (B): live missing, old + staged present.
-    Recovery finishes rename (B) and drops the old copy."""
+    """Crash after parking the level, before the merged file moved in:
+    live level missing, parked + complete staged copy present. Recovery
+    finishes the move into gen=1 and drops the parked level."""
     path, hot_cell, qvec, _ = frag_index
     before = _content(spark, path)
-    _crash_state(path, hot_cell, old=True, staged=True, live=False)
-    recover_compaction(spark, path)
+    _crash_state(spark, path, hot_cell, staged=True, parked=True)
+    _recover(spark, path)
     assert _content(spark, path) == before
+    assert glob.glob(f"{path}/cells/cell={hot_cell}/gen=1/*.parquet")
     assert not glob.glob(f"{path}/cells_old")
     assert not glob.glob(f"{path}/cells_staged")
     assert _probe(spark, path, qvec)  # probe healthy again
 
 
 def test_recover_after_swap_before_cleanup(spark, frag_index):
-    """Crash AFTER (B), before the cells_old cleanup: both copies exist;
-    recovery drops the old one and keeps the live (new) one."""
+    """Crash after the merged file moved into gen=1, before the parked
+    level was dropped: the rows are live once (in gen=1) and parked once;
+    recovery drops the parked copy and never re-adds it."""
     path, hot_cell, qvec, _ = frag_index
     before = _content(spark, path)
-    _crash_state(path, hot_cell, old=True, live=True)
-    recover_compaction(spark, path)
+    _crash_state(spark, path, hot_cell, staged=True, parked=True)
+    staged = f"{path}/cells_staged/cell={hot_cell}/gen=1"
+    os.makedirs(f"{path}/cells/cell={hot_cell}/gen=1")
+    for f in glob.glob(f"{staged}/*.parquet"):
+        os.rename(f, f"{path}/cells/cell={hot_cell}/gen=1/{os.path.basename(f)}")
+    _recover(spark, path)
     assert _content(spark, path) == before
     assert not glob.glob(f"{path}/cells_old")
 
 
 def test_recover_rollback_old_only(spark, frag_index):
-    """The 'cannot happen' state (old present, live and staged missing):
-    recovery still rolls the old copy back — content is never lost."""
+    """Level parked without a complete staged copy (no ``_SUCCESS``):
+    recovery rolls the parked files back into live gen=0 — content is
+    never lost."""
     path, hot_cell, qvec, _ = frag_index
     before = _content(spark, path)
-    _crash_state(path, hot_cell, old=True, live=False)
-    recover_compaction(spark, path)
+    _crash_state(spark, path, hot_cell, parked=True)
+    _recover(spark, path)
     assert _content(spark, path) == before
+    assert glob.glob(f"{path}/cells/cell={hot_cell}/gen=0/*.parquet")
     assert not glob.glob(f"{path}/cells_old")
+
+
+def test_recovery_refuses_flat_parked_marker(spark, frag_index):
+    """The crash shape of the older whole-cell swap: the cell dir itself
+    parked with its files directly under ``cells_old/cell=N/``, live
+    ``cell=N`` missing. Those parked files are the only copy of the cell;
+    the generational recovery must refuse (fail loud, touch nothing)
+    rather than drop them with the marker — and so must the writer's
+    self-heal at ingest."""
+    path, hot_cell, _, spare_ids = frag_index
+    parked = f"{path}/cells_old/cell={hot_cell}"
+    os.makedirs(parked)
+    for f in glob.glob(f"{path}/cells/cell={hot_cell}/gen=*/*.parquet"):
+        os.rename(f, f"{parked}/{os.path.basename(f)}")
+    shutil.rmtree(f"{path}/cells/cell={hot_cell}")
+    files = sorted(os.listdir(parked))
+    assert any(f.endswith(".parquet") for f in files)
+
+    with pytest.raises(ValueError, match="not a gen= level"):
+        _recover(spark, path)
+    assert sorted(os.listdir(parked)) == files  # nothing moved or dropped
+    emb = load_table(spark, SF_CORRECT, "embeddings")
+    batch = emb.filter(F.col("vec_id") == spare_ids[0]).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    with pytest.raises(ValueError, match="not a gen= level"):
+        VectorIndexMaintainer(spark, path).ingest_batch(batch)
+    assert sorted(os.listdir(parked)) == files
 
 
 class _FailingRenameFS:
@@ -215,47 +267,85 @@ class _FailingRenameFS:
         return getattr(self._real, name)
 
 
-def test_failed_rename_aborts_without_data_loss(
-    spark, frag_index, monkeypatch
-):
-    """r11 ADVICE (high): if rename (B) silently returns False after (A)
-    moved the live cell into cells_old, the old code deleted cells_old —
-    destroying the only copy. Now: fail loud, keep both swap dirs, and a
-    subsequent recover_compaction (with a healthy FS) restores the full
-    index."""
-    path, hot_cell, qvec, _ = frag_index
-    before = _content(spark, path)
-    # The swap machinery is generic since r13 (operators/partstore); the
-    # injection seam is its module-level _fs factory.
-    from real_time_flight_data_pipeline_spark.operators import partstore
-
-    real_fs = partstore._fs
+def _compact_with_failing_rename(spark, path, monkeypatch, fail_dst):
+    """Run a threshold-3 compaction whose renames to a destination
+    containing ``fail_dst`` return False; the swap must abort with
+    OSError. The injection seam is partstore's module-level _fs factory,
+    which every swap rename goes through."""
+    real_fs = PS._fs
+    failing: list[_FailingRenameFS] = []
 
     def flaky_fs(spark_, p):
         fs, jvm = real_fs(spark_, p)
-        return _FailingRenameFS(fs, f"/cells/cell={hot_cell}"), jvm
+        failing.append(_FailingRenameFS(fs, fail_dst))
+        return failing[-1], jvm
 
-    monkeypatch.setattr(partstore, "_fs", flaky_fs)
-    with pytest.raises(OSError, match="rename failed"):
-        compact_index_cells(spark, path, max_files_per_cell=3)
-    monkeypatch.setattr(partstore, "_fs", real_fs)
-    # the hot cell survived in cells_old (rename (A) parked it there)
-    assert glob.glob(f"{path}/cells_old/cell={hot_cell}/*.parquet")
-    recover_compaction(spark, path)
+    monkeypatch.setattr(PS, "_fs", flaky_fs)
+    try:
+        with pytest.raises(OSError, match="rename failed"):
+            _compact(spark, path, 3)
+    finally:
+        monkeypatch.setattr(PS, "_fs", real_fs)
+    assert sum(f.n_failed for f in failing) == 1
+
+
+def test_failed_rename_aborts_without_data_loss(
+    spark, frag_index, monkeypatch
+):
+    """r11 ADVICE (high), generational swap: the rename that PARKS the
+    source level returns False. The swap must fail loud with the live
+    level untouched, and a following recovery on a healthy FS restores
+    the exact content (dropping the complete-but-unused staged copy)."""
+    path, hot_cell, qvec, _ = frag_index
+    before = _content(spark, path)
+    _compact_with_failing_rename(
+        spark, path, monkeypatch, f"/cells_old/cell={hot_cell}/gen=0"
+    )
+    assert glob.glob(f"{path}/cells/cell={hot_cell}/gen=0/*.parquet")
+    assert glob.glob(f"{path}/cells_staged/cell={hot_cell}/gen=1/_SUCCESS")
+    _recover(spark, path)
     assert _content(spark, path) == before
     assert not glob.glob(f"{path}/cells_old")
     assert not glob.glob(f"{path}/cells_staged")
 
 
-def test_reader_fails_loud_on_crashed_swap(spark, frag_index):
-    """r11 verdict #2: a probe that would silently miss a mid-swap cell
+def test_failed_merged_move_aborts_without_data_loss(
+    spark, frag_index, monkeypatch
+):
+    """The rename that moves the merged file into live gen=1 returns
+    False AFTER the source level was parked — the point where an
+    unchecked rename followed by the parked level's delete would destroy
+    the only copy. The swap must fail loud with the level still parked,
+    and recovery on a healthy FS finishes the merge with the exact
+    content."""
+    path, hot_cell, qvec, _ = frag_index
+    before = _content(spark, path)
+    probe_before = _probe(spark, path, qvec)
+    _compact_with_failing_rename(
+        spark, path, monkeypatch, f"/cells/cell={hot_cell}/gen=1/"
+    )
+    assert glob.glob(f"{path}/cells_old/cell={hot_cell}/gen=0/*.parquet")
+    assert glob.glob(f"{path}/cells_staged/cell={hot_cell}/gen=1/*.parquet")
+    _recover(spark, path)
+    assert _content(spark, path) == before
+    assert glob.glob(f"{path}/cells/cell={hot_cell}/gen=1/*.parquet")
+    assert not glob.glob(f"{path}/cells_old")
+    assert not glob.glob(f"{path}/cells_staged")
+    assert _probe(spark, path, qvec) == probe_before
+
+
+def test_reader_fails_loud_on_crashed_swap(spark, frag_index, monkeypatch):
+    """r11 verdict #2: a probe that would silently miss a parked gen level
     must instead wait, then raise if the swap never completes (crashed
     compactor). After recovery the same probe returns the same rows as
-    before the crash."""
+    before the crash. A crashed swap of ANY cell blocks every reader —
+    the marker, not a per-cell probe, is the guard."""
+    # readers' default wait budget is ~10 s; a short one keeps this fast
+    monkeypatch.setattr(PS.await_no_swap_marker, "__defaults__", (2, 0.05))
     path, hot_cell, qvec, _ = frag_index
     probe_before = _probe(spark, path, qvec)
-    _crash_state(path, hot_cell, old=True, staged=True, live=False)
-    with pytest.raises(RuntimeError, match="mid-swap"):
+    _crash_state(spark, path, hot_cell, staged=True, parked=True)
+    with pytest.raises(RuntimeError, match="persists"):
         probe_ivfpq_index(spark, path, qvec).collect()
     # the maintainer's pruned dedup scan takes the same guard
     m = VectorIndexMaintainer(spark, path)
@@ -264,27 +354,30 @@ def test_reader_fails_loud_on_crashed_swap(spark, frag_index):
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
     enc = encode_batch(spark, path, batch).localCheckpoint(eager=True)
-    if int(enc.head().cell) == hot_cell:
-        with pytest.raises(RuntimeError, match="mid-swap"):
-            m._pruned_existing(enc)
-    recover_compaction(spark, path)
+    with pytest.raises(RuntimeError, match="persists"):
+        m._pruned_existing(enc)
+    _recover(spark, path)
     assert _probe(spark, path, qvec) == probe_before
-    # a swap marker for OTHER cells does not block this probe:
-    other = [
+    # a crashed swap of some OTHER cell blocks the hot cell's readers too
+    other = next(
         int(p.rsplit("=", 1)[1])
-        for p in glob.glob(f"{path}/cells/cell=*")
+        for p in sorted(glob.glob(f"{path}/cells/cell=*"))
         if int(p.rsplit("=", 1)[1]) != hot_cell
-    ][0]
-    _crash_state(path, other, old=True, live=True)  # post-(B) crash state
+        and glob.glob(f"{p}/gen=0")
+    )
+    _crash_state(spark, path, other, parked=True)
+    with pytest.raises(RuntimeError, match="persists"):
+        probe_ivfpq_index(spark, path, qvec)
+    _recover(spark, path)
     assert _probe(spark, path, qvec) == probe_before
-    await_stable_cells(spark, path, [hot_cell])  # hot cell is live: no wait
 
 
 def test_streaming_maintainer_compacts_between_triggers(spark, frag_index):
     """r11 verdict #2 wiring: run_file_replay_vectors calls maybe_compact
-    after each micro-batch append, so the fragmented hot cell is bounded
-    by the threshold while every accepted row survives (acceptance
-    simulated exactly from the same quantization the maintainer uses)."""
+    after each micro-batch append, so every (cell, gen) level of the
+    fragmented hot cell is bounded by the threshold while every accepted
+    row survives (acceptance simulated exactly from the same quantization
+    the maintainer uses)."""
     import time
 
     path, hot_cell, qvec, spare_ids = frag_index
@@ -329,19 +422,21 @@ def test_streaming_maintainer_compacts_between_triggers(spark, frag_index):
         r.vec_id for r in after.select("vec_id").collect()
     } == before_ids | expected
     assert after.count() == len(before_ids) + len(expected)
-    counts = cell_file_counts(spark, path)
-    # compaction ran between triggers: the hot cell never accretes past
-    # threshold+1 (one post-append file before the next compact pass)
-    assert counts[hot_cell] <= 4
+    # compaction ran between triggers: no level of any cell is left past
+    # the threshold (the hot cell's gen=0 merged at the first trigger)
+    levels = PS.gen_file_counts(spark, f"{path}/cells", "cell")
+    assert max(levels.values()) <= 3
+    assert any(c == hot_cell and g >= 1 for c, g in levels)
     assert not glob.glob(f"{path}/cells_old")
     assert not glob.glob(f"{path}/cells_staged")
 
 
-def test_strict_ids_catches_cross_batch_id_mutation(spark, frag_index):
+def test_strict_guard_catches_cross_batch_id_mutation(spark, frag_index):
     """r11 ADVICE (medium): a re-sent vec_id whose embedding mutated into
-    a DIFFERENT coarse cell escapes the cell-pruned replay guard (the
-    documented content-immutability contract); strict_ids=True runs the
-    id guard against the unpruned id projection and rejects it."""
+    a DIFFERENT coarse cell escapes a cell-pruned replay guard (the
+    documented content-immutability contract); below the id-scan budget
+    the maintainer runs the id guard against the unpruned id projection
+    and rejects it."""
     path, _, _, _ = frag_index
     emb = load_table(spark, SF_CORRECT, "embeddings")
 
@@ -365,10 +460,11 @@ def test_strict_ids_catches_cross_batch_id_mutation(spark, frag_index):
     )
     mutated = one(other).select(F.lit(8_000_000).alias("vec_id"), "embedding")
 
-    strict = VectorIndexMaintainer(spark, path, strict_ids=True)
+    strict = VectorIndexMaintainer(spark, path)
     s1 = strict.ingest_batch(first)
-    assert s1.n_added == 1
+    assert s1.n_added == 1 and s1.id_guard_mode == "strict"
     s2 = strict.ingest_batch(mutated)  # same id, different cell
+    assert s2.id_guard_mode == "strict"
     assert s2.n_replayed == 1 and s2.n_added == 0
     dup_rows = (
         spark.read.parquet(f"{path}/cells")
@@ -379,18 +475,17 @@ def test_strict_ids_catches_cross_batch_id_mutation(spark, frag_index):
 
 
 # ---------------------------------------------------------------------------
-# strict_ids="auto" default (r12 verdict #5) + swap-marker guards on the
-# strict full-index id scan (r12 ADVICE, medium).
+# Id-guard mode from the index-size budget (r12 verdict #5) + swap-marker
+# guards on the strict full-index id scan (r12 ADVICE, medium).
 # ---------------------------------------------------------------------------
 def test_auto_default_is_strict_below_budget(spark, frag_index):
-    """The default maintainer resolves the id guard to strict while the
-    cells layout is under the byte budget — the cross-batch id-mutation
-    hole is closed by default at small/medium index sizes — and records
-    the mode in the batch stats."""
+    """The maintainer resolves the id guard to strict while the cells
+    layout is under the byte budget — the cross-batch id-mutation hole is
+    closed at small/medium index sizes — and records the mode in the
+    batch stats."""
     path, _, _, spare_ids = frag_index
     emb = load_table(spark, SF_CORRECT, "embeddings")
-    m = VectorIndexMaintainer(spark, path)  # default: "auto"
-    assert m.strict_ids == "auto"
+    m = VectorIndexMaintainer(spark, path)
     assert 0 < m._cells_bytes() <= 1 << 30
     batch = emb.filter(F.col("vec_id") == spare_ids[0]).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -421,39 +516,33 @@ def test_auto_switches_to_pruned_over_budget(spark, frag_index, monkeypatch):
 def test_crashed_swap_heals_at_ingest_and_strict_scan_sees_all_ids(
     spark, frag_index
 ):
-    """A crashed compaction swap that parked a NON-batch cell in cells_old
-    passes the per-cell guard (which only checks the batch's cells) but
-    would silently hide that cell's ids from the strict full-index scan
-    (r12 ADVICE, medium). The maintainer is the store's single writer, so
-    ingest HEALS the crash first (without this the streaming loop wedges:
-    every replayed batch would fail before maybe_compact's recovery runs),
-    and the strict scan then sees the recovered cell's ids — a replayed id
-    from the previously-parked cell is classified replayed, never
-    re-appended. Readers (probes) still fail loud on the same state —
-    pinned by test_reader_fails_loud_on_crashed_swap."""
-    import glob as _glob
-    import os
-
+    """A crashed compaction swap that parked a NON-batch cell's gen level
+    in cells_old would silently hide that cell's ids from the strict
+    full-index scan (r12 ADVICE, medium). The maintainer is the store's
+    single writer, so ingest HEALS the crash first (without this the
+    streaming loop wedges: every replayed batch would fail before
+    maybe_compact's recovery runs), and the strict scan then sees the
+    recovered cell's ids — a replayed id from the previously-parked cell
+    is classified replayed, never re-appended. Readers (probes) still
+    fail loud on the same state — pinned by
+    test_reader_fails_loud_on_crashed_swap."""
     path, hot_cell, _, spare_ids = frag_index
     emb = load_table(spark, SF_CORRECT, "embeddings")
     before = _content(spark, path)
     batch = emb.filter(F.col("vec_id") == spare_ids[0]).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
     )
-    # park a cell OTHER than the batch's target cell in cells_old,
-    # simulating a compactor crash between rename (A) and rename (B)
+    # park a gen level of a cell OTHER than the batch's target cell,
+    # simulating a compactor crash after the park rename
     enc_cell = int(encode_batch(spark, path, batch).head().cell)
     victim = next(
         c for c in cell_file_counts(spark, path) if c != enc_cell
     )
-    os.makedirs(f"{path}/cells_old", exist_ok=True)
-    os.rename(
-        f"{path}/cells/cell={victim}", f"{path}/cells_old/cell={victim}"
-    )
-    strict = VectorIndexMaintainer(spark, path, strict_ids=True)
+    _crash_state(spark, path, victim, parked=True)
+    strict = VectorIndexMaintainer(spark, path)
     stats = strict.ingest_batch(batch)
     assert stats.n_added == 1 and stats.id_guard_mode == "strict"
-    assert not _glob.glob(f"{path}/cells_old")  # healed, not bypassed
+    assert not glob.glob(f"{path}/cells_old")  # healed, not bypassed
     # recovered content intact + exactly the one new row
     after = _content(spark, path)
     assert len(after) == len(before) + 1
@@ -468,18 +557,9 @@ def test_crashed_swap_heals_at_ingest_and_strict_scan_sees_all_ids(
     assert s2.n_replayed == 1 and s2.n_added == 0
 
 
-def test_strict_ids_rejects_bad_value(spark, tmp_path):
-    with pytest.raises(ValueError, match="strict_ids"):
-        VectorIndexMaintainer(spark, str(tmp_path), strict_ids="yes")
-
-
 def test_partstore_guard_helpers(spark, tmp_path):
     """has_swap_marker / verify_stable_after / assert_no_swap_marker agree
     on the marker state and fail loud only when it exists."""
-    import os
-
-    from real_time_flight_data_pipeline_spark.operators import partstore as PS
-
     root = str(tmp_path / "store")
     os.makedirs(root)
     assert PS.has_swap_marker(spark, root) is False
@@ -493,87 +573,44 @@ def test_partstore_guard_helpers(spark, tmp_path):
         PS.assert_no_swap_marker(spark, root)
 
 
-def test_parked_protocol_classification(spark, tmp_path):
-    """r15 ADVICE (medium): the swap protocol is adjudicated from the
-    PARKED entries themselves — gen= sub-dirs mean tiered, parked files
-    mean flat (whole-partition), an entry-less marker is the ambiguous
-    mkdirs-to-first-rename window — never from the live tree."""
-    import os
-
-    from real_time_flight_data_pipeline_spark.operators import partstore as PS
-
-    root = str(tmp_path / "s")
-    os.makedirs(f"{root}/cell=0")
-    assert PS.parked_protocol(spark, root, "cell") == "none"
-    os.makedirs(f"{root}_old")
-    assert PS.parked_protocol(spark, root, "cell") == "empty"
-    os.makedirs(f"{root}_old/cell=0")
-    assert PS.parked_protocol(spark, root, "cell") == "empty"
-    with open(f"{root}_old/cell=0/part-000.parquet", "w") as f:
-        f.write("x")
-    assert PS.parked_protocol(spark, root, "cell") == "flat"
-    os.makedirs(f"{root}_old/cell=1/gen=3")
-    assert PS.parked_protocol(spark, root, "cell") == "tiered"
-
-
 def test_marker_guard_conservative_on_ambiguous(spark, tmp_path):
-    """r15 ADVICE (medium) + r16 ADVICE (low): _marker_is_tiered must
-    never silently guess 'flat' — an ambiguous marker (nothing parked
-    yet) resolves to the coarse tiered wait FIRST, with the caller's
-    budget honored (adjudication retries spend from the same budget, the
-    budgets do not stack). But a marker that stays EMPTY through the
-    whole coarse budget is a parked-nothing crash skeleton (live tree
-    complete by protocol), so the guard falls through to the per-cell
-    probe instead of blocking every reader until the writer's next
-    recovery: a complete live tree passes, a genuinely missing cell
-    still fails loud. A positively-flat marker skips the coarse wait
-    entirely."""
-    import os
-    import time
-
-    from real_time_flight_data_pipeline_spark.operators.ann_index import (
-        _adjudicate_marker,
-        _marker_is_tiered,
-    )
+    """Readers never guess which state a swap marker is in: whatever is
+    parked under it — a gen level, nothing yet (the window between the
+    marker's mkdirs and the first park rename), or files the generational
+    compactor did not write — the guard waits the marker out and fails
+    loud if it persists. A marker that clears within the budget (an
+    in-flight swap completing) lets the read through, and the writer's
+    recovery drops a parked-nothing marker."""
+    import threading
 
     path = str(tmp_path / "idx")
-    os.makedirs(f"{path}/cells/cell=0")
-    os.makedirs(f"{path}/cells_old")  # marker present, nothing parked
-    assert _adjudicate_marker(spark, f"{path}/cells", retries=0) == "empty"
-    assert _marker_is_tiered(spark, f"{path}/cells", retries=0) is True
-    # live tree complete: after the coarse wait times out on the
-    # persistently-empty marker, the per-cell probe passes (availability)
-    t0 = time.monotonic()
-    await_stable_cells(
-        spark, path, [0], retries=1, wait_sec=0.05, marker_wait_sec=0.1
-    )
-    elapsed = time.monotonic() - t0
-    assert elapsed < 5  # the budget was the caller's, not 10 s
-    # a genuinely missing cell still fails loud on the same path
-    with pytest.raises(RuntimeError):
-        await_stable_cells(
-            spark, path, [7], retries=1, wait_sec=0.05, marker_wait_sec=0.1
-        )
+    root = f"{path}/cells"
+    os.makedirs(f"{root}/cell=0/gen=0")
 
-    # a parked gen level (tiered crash) still blocks loud — the
-    # coarse wait is the only guard that can see it
-    os.makedirs(f"{path}/cells_old/cell=0/gen=2")
-    with open(f"{path}/cells_old/cell=0/gen=2/part-000.parquet", "w") as f:
-        f.write("x")
-    assert _adjudicate_marker(spark, f"{path}/cells", retries=0) == "tiered"
+    def guard():
+        PS.await_no_swap_marker(spark, root, retries=2, wait_sec=0.05)
+
+    os.makedirs(f"{root}_old")  # marker present, nothing parked
     with pytest.raises(RuntimeError, match="persists"):
-        await_stable_cells(
-            spark, path, [0], retries=1, wait_sec=0.05, marker_wait_sec=0.1
-        )
-    import shutil
-
-    shutil.rmtree(f"{path}/cells_old/cell=0")
-
-    # flat-parked entries adjudicate flat -> per-cell guard (cell 0 live,
-    # so the guard passes despite the marker)
-    os.makedirs(f"{path}/cells_old/cell=1")
-    with open(f"{path}/cells_old/cell=1/part-000.parquet", "w") as f:
+        guard()
+    # an in-flight swap that completes within the budget passes
+    done = threading.Timer(0.3, shutil.rmtree, args=(f"{root}_old",))
+    done.start()
+    PS.await_no_swap_marker(spark, root, retries=100, wait_sec=0.05)
+    done.join(timeout=10)
+    assert not done.is_alive()
+    # parked gen level, or parked files of a whole-cell swap: both loud
+    os.makedirs(f"{root}_old/cell=0/gen=2")
+    with pytest.raises(RuntimeError, match="persists"):
+        guard()
+    shutil.rmtree(f"{root}_old/cell=0")
+    os.makedirs(f"{root}_old/cell=1")
+    with open(f"{root}_old/cell=1/part-000.parquet", "w") as f:
         f.write("x")
-    assert _adjudicate_marker(spark, f"{path}/cells", retries=0) == "flat"
-    assert _marker_is_tiered(spark, f"{path}/cells", retries=0) is False
-    await_stable_cells(spark, path, [0], retries=0, wait_sec=0.01)
+    with pytest.raises(RuntimeError, match="persists"):
+        guard()
+    shutil.rmtree(f"{root}_old/cell=1")
+    # the writer's recovery drops an empty marker; readers pass again
+    PS.recover_tiered_compaction(spark, root, "cell")
+    assert not glob.glob(f"{root}_old")
+    guard()

@@ -88,10 +88,10 @@ def test_probe_prunes_to_probed_partitions(spark, index_path, query_vec):
     # not a plan-string promise. inputFiles() can't show this: it lists
     # the relation pre-pruning.
     probed_files = sum(
-        len(glob.glob(f"{index_path}/cells/cell={c}/*.parquet"))
+        len(glob.glob(f"{index_path}/cells/cell={c}/gen=*/*.parquet"))
         for c in probed
     )
-    total_files = len(glob.glob(f"{index_path}/cells/cell=*/*.parquet"))
+    total_files = len(glob.glob(f"{index_path}/cells/cell=*/gen=*/*.parquet"))
     num_files = _scan_metrics(cand, "numFiles")
     assert num_files == [probed_files]
     assert probed_files < total_files

@@ -14,13 +14,15 @@ _WITH_ORACLE = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
 
 
 @pytest.mark.parametrize("name", _WITH_ORACLE)
-def test_oracle_match(spark, name):
+def test_oracle_match(spark, built_query, name):
     q = REGISTRY[name]
-    ok, msg = compare(spark, SF_CORRECT, q.builder, q.oracle)
+    ok, msg = compare(
+        spark, SF_CORRECT, lambda _, sf: built_query(name, sf), q.oracle
+    )
     assert ok, f"{name}: {msg}"
 
 
-def test_all_queries_run_smoke(spark):
-    for name, q in REGISTRY.items():
-        df = q.builder(spark, SF_CORRECT)
+def test_all_queries_run_smoke(built_query):
+    for name in REGISTRY:
+        df = built_query(name, SF_CORRECT)
         assert df.columns, name

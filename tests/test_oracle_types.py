@@ -29,13 +29,13 @@ def test_oracle_output_types_driver_safe(con, name):
     assert not problems, f"{name}: {problems}"
 
 
-def test_spark_output_types_driver_safe(spark):
+def test_spark_output_types_driver_safe(built_query):
     """No driver-checked query may emit array/map/struct columns: the driver's
     pandas canonicalizer cannot hash list cells (r2's one red row came from a
     mapInPandas array<int> output that the DuckDB-side audit could not see).
     Schema-only — analysis, no execution — so the whole catalog stays cheap."""
     problems = []
     for name in _WITH_ORACLE:
-        df = REGISTRY[name].builder(spark, SF_CORRECT)
+        df = built_query(name, SF_CORRECT)
         problems += [f"{name}: {p}" for p in check_spark_output_types(df.schema)]
     assert not problems, "\n".join(problems)

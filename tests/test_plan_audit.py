@@ -58,8 +58,8 @@ _ALL = sorted(REGISTRY)
 
 
 @pytest.mark.parametrize("name", _ALL)
-def test_no_pathological_joins(spark, name):
-    df = REGISTRY[name].builder(spark, SF_SMOKE)
+def test_no_pathological_joins(built_query, name):
+    df = built_query(name, SF_SMOKE)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, f"{name}: cartesian product in plan"
     if name not in _BNLJ_ALLOWED:
@@ -172,8 +172,8 @@ _TOKENIZE_CEILINGS: dict[str, int] = {}
 
 
 @pytest.mark.parametrize("name", _ALL)
-def test_tokenize_not_collapse_duplicated(spark, name):
-    df = REGISTRY[name].builder(spark, SF_SMOKE)
+def test_tokenize_not_collapse_duplicated(built_query, name):
+    df = built_query(name, SF_SMOKE)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     n = plan.count(_TOKENIZE_IDIOM)
     ceiling = _TOKENIZE_CEILINGS.get(name, _TOKENIZE_CEILING_DEFAULT)

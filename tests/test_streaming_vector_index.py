@@ -244,10 +244,10 @@ def test_ingest_dedup_scans_only_batch_cells(spark, tmp_path):
     assert "cell" in part  # static prune, not a post-scan filter
 
     batch_files = sum(
-        len(glob.glob(f"{path}/cells/cell={c}/*.parquet"))
+        len(glob.glob(f"{path}/cells/cell={c}/gen=*/*.parquet"))
         for c in batch_cells
     )
-    total_files = len(glob.glob(f"{path}/cells/cell=*/*.parquet"))
+    total_files = len(glob.glob(f"{path}/cells/cell=*/gen=*/*.parquet"))
     assert _scan_metrics(existing, "numFiles") == [batch_files]
     assert batch_files < total_files
 

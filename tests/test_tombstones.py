@@ -40,7 +40,7 @@ from real_time_flight_data_pipeline_spark.streaming.vector_index import (
     VectorIndexMaintainer,
 )
 
-from .conftest import SF_SMOKE
+from .conftest import SF_CORRECT, SF_SMOKE
 
 
 def _docs(spark):
@@ -230,9 +230,20 @@ def test_vector_delete_replay_resurrects_then_fold_gc(spark, tmp_path, index):
     assert len(rows) == 1
     assert not PS.has_tombstones(spark, f"{path}/cells")
 
-    # delete again, physically fold via compaction, tombstone GCs
+    # delete again, physically fold via compaction, tombstone GCs. The
+    # fold rides the merge of the dead row's level (gen=0 of its cell), so
+    # that level first accretes more files: fresh vectors of another
+    # table, under new ids, spread over every cell (ingested while id 1
+    # is live, so none can take over its quantization key).
+    cell1 = int(rows[0].cell)
+    fresh = load_table(spark, SF_CORRECT, "embeddings").select(
+        (F.col("vec_id") + 9_000_000).alias("vec_id"),
+        F.col("embedding").cast("array<double>").alias("embedding"),
+    )
+    assert m.ingest_batch(fresh).n_added > 0
+    assert PS.gen_file_counts(spark, f"{path}/cells", "cell")[(cell1, 0)] > 1
     m.delete_vectors([1])
-    assert m.maybe_compact(max_files_per_cell=0)
+    assert (cell1, 0) in m.maybe_compact(max_files_per_cell=1)
     assert (
         spark.read.parquet(f"{path}/cells")
         .filter(F.col("vec_id") == 1)

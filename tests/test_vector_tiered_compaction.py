@@ -1,26 +1,26 @@
-"""Vector-tier generational compaction behind a measured threshold (r13
-verdict #7, closing COVERAGE's own 1000x caveat): whole-cell threshold
-rewrites are O(cell bytes) per pass — free at every measured scale but
-O(corpus/K) in the limit — so ``VectorIndexMaintainer(compaction="auto")``
-flips a cell's layout to the corpus store's generational (LSM) tiering
-when an over-threshold cell's bytes cross ``_CELL_TIER_MAX_BYTES``:
-one-shot driver-rename migration (no data rewrite), appends land in
-gen=0, compaction merges one level at a time, and every reader (probe,
-dedup guards) keeps working transparently across the flip.
+"""Vector-tier generational compaction (r13 verdict #7): the index's
+cells layout is ``cell=N/gen=G/`` from the build on — appends land in
+gen=0, compaction merges one over-threshold level at a time into the
+next generation (the corpus store's LSM tiering), every reader (probe,
+dedup guards) reads across generations transparently, and an index
+written in the older flat cell layout is migrated in place (driver-side
+renames, no data rewrite) by the first writer that touches it.
 """
 
 from __future__ import annotations
 
 import glob
+import os
+import shutil
 
 from pyspark.sql import functions as F
 
 from real_time_flight_data_pipeline_spark.operators.ann_index import (
+    add_to_ivfpq_index,
     build_ivfpq_index,
     probe_ivfpq_index,
 )
 from real_time_flight_data_pipeline_spark.sources.parquet import load_table
-from real_time_flight_data_pipeline_spark.streaming import vector_index as VI
 from real_time_flight_data_pipeline_spark.streaming.vector_index import (
     VectorIndexMaintainer,
 )
@@ -54,51 +54,69 @@ def _probe0(spark, path, emb):
     return {r.vec_id for r in probe_ivfpq_index(spark, path, q, k=5).collect()}
 
 
-def test_auto_flips_to_tiered_when_budget_crossed(
-    spark, tmp_path, monkeypatch
-):
-    path, emb = _index(spark, tmp_path, subset=F.col("vec_id") < 200)
-    m = VectorIndexMaintainer(spark, path, compaction="auto")
-    before = _probe0(spark, path, emb)
-    m.ingest_batch(_held(emb, 200, 230))
-    # under budget: whole-cell mode, layout stays flat
-    m.maybe_compact(max_files_per_cell=1)
-    assert not m._layout_is_tiered()
+def _flatten(path):
+    """Rewrite a freshly built index into the older FLAT cell layout
+    (``cells/cell=N/part-*.parquet``, no gen level) by moving files."""
+    for gen_dir in glob.glob(f"{path}/cells/cell=*/gen=*"):
+        cell_dir = os.path.dirname(gen_dir)
+        for f in os.listdir(gen_dir):
+            os.rename(f"{gen_dir}/{f}", f"{cell_dir}/{f}")
+        os.rmdir(gen_dir)
+    assert glob.glob(f"{path}/cells/cell=*/*.parquet")
 
-    monkeypatch.setattr(VI, "_CELL_TIER_MAX_BYTES", 0)
-    m.ingest_batch(_held(emb, 230, 260))
-    merged = m.maybe_compact(max_files_per_cell=1)
-    assert m._layout_is_tiered()
-    assert merged  # the budgeted pass itself ran tiered
-    assert glob.glob(f"{path}/cells/cell=*/gen=*")
-    assert not glob.glob(f"{path}/cells/cell=*/*.parquet")  # fully migrated
 
-    # readers work transparently across the flip
-    assert _probe0(spark, path, emb) == before
-    # appends now land in gen=0 and replay stays idempotent
-    s = m.ingest_batch(_held(emb, 200, 260))
-    # ids that originally landed replay; ids originally dropped as
-    # quantized dups are (correctly) dropped the same way again
-    assert s.n_added == 0 and s.n_replayed + s.n_quantized_dup == 60
-    s2 = m.ingest_batch(_held(emb, 260, 290))
-    assert s2.n_added > 0
-    ids = {
+def _ids(spark, path):
+    return {
         r.vec_id
         for r in spark.read.parquet(f"{path}/cells").select("vec_id").collect()
     }
-    assert set(range(260, 290)) <= ids
-    # further tiered compaction keeps per-level bounds
-    m.maybe_compact(max_files_per_cell=1)
+
+
+def test_flat_layout_index_migrates_on_first_ingest(spark, tmp_path):
+    """An index in the flat cell layout stays a supported input: the
+    maintainer's first ingest migrates it to gen=0 before appending, and
+    probes return the same rows before and after the migration."""
+    path, emb = _index(spark, tmp_path, subset=F.col("vec_id") < 200)
+    _flatten(path)
+    before = _probe0(spark, path, emb)
+    ids = _ids(spark, path)
+    m = VectorIndexMaintainer(spark, path)
+    s = m.ingest_batch(_held(emb, 0, 50))  # a replay: nothing to add
+    assert s.n_added == 0
+    assert not glob.glob(f"{path}/cells/cell=*/*.parquet")  # migrated
+    assert glob.glob(f"{path}/cells/cell=*/gen=0/*.parquet")
+    assert _ids(spark, path) == ids
+    assert _probe0(spark, path, emb) == before
+    # appends now land in gen=0 and compaction merges levels as usual
+    s2 = m.ingest_batch(_held(emb, 200, 230))
+    assert s2.n_added > 0
+    assert m.maybe_compact(max_files_per_cell=1)
+    assert not glob.glob(f"{path}/cells/cell=*/*.parquet")
     assert _probe0(spark, path, emb) == before
 
 
-def test_forced_tiered_mode_from_the_start(spark, tmp_path):
+def test_flat_layout_index_migrates_on_add(spark, tmp_path):
+    """The one-shot add (add_to_ivfpq_index) migrates a flat index too,
+    rather than writing gen=0 next to loose files (a mixed-depth tree
+    Spark's partition discovery rejects)."""
     path, emb = _index(spark, tmp_path, subset=F.col("vec_id") < 200)
-    m = VectorIndexMaintainer(spark, path, compaction="tiered")
+    _flatten(path)
+    ids = _ids(spark, path)
+    add_to_ivfpq_index(spark, path, _held(emb, 200, 210))
+    assert not glob.glob(f"{path}/cells/cell=*/*.parquet")
+    assert _ids(spark, path) == ids | set(range(200, 210))
+
+
+def test_forced_tiered_mode_from_the_start(spark, tmp_path):
+    """Generational from the build on: the first compaction merges gen=0
+    levels into gen=1 with probes unchanged, and the tombstone fold
+    works on the level merges."""
+    path, emb = _index(spark, tmp_path, subset=F.col("vec_id") < 200)
+    m = VectorIndexMaintainer(spark, path)
     before = _probe0(spark, path, emb)
     m.ingest_batch(_held(emb, 200, 240))
-    m.maybe_compact(max_files_per_cell=1)
-    assert m._layout_is_tiered()
+    assert m.maybe_compact(max_files_per_cell=1)
+    assert glob.glob(f"{path}/cells/cell=*/gen=1/*.parquet")
     assert _probe0(spark, path, emb) == before
     # tombstone fold works on the tiered layout too
     m.delete_vectors([0])
@@ -109,32 +127,17 @@ def test_forced_tiered_mode_from_the_start(spark, tmp_path):
     assert live.filter(F.col("vec_id") == 0).count() <= 1  # dead or folded
 
 
-def test_whole_mode_never_tiers(spark, tmp_path, monkeypatch):
-    monkeypatch.setattr(VI, "_CELL_TIER_MAX_BYTES", 0)
-    path, emb = _index(spark, tmp_path, subset=F.col("vec_id") < 200)
-    m = VectorIndexMaintainer(spark, path, compaction="whole")
-    m.ingest_batch(_held(emb, 200, 230))
-    m.maybe_compact(max_files_per_cell=1)
-    assert not m._layout_is_tiered()
-    assert not glob.glob(f"{path}/cells/cell=*/gen=*")
-
-
 def test_delete_after_crashed_tiered_swap_recovers_without_loss(
     spark, tmp_path
 ):
-    """Layout-aware recovery from EVERY mutating entry point (r14
-    self-review): a crashed TIERED swap parks a gen sub-level while the
-    cell dir stays present; the whole-cell recovery protocol would
-    misread that as an already-completed swap and DELETE the parked
-    level. delete_vectors must recover with the tiered protocol and keep
-    every row."""
-    import shutil
-
+    """Recovery from EVERY mutating entry point (r14 self-review): a
+    crashed swap parks a gen sub-level while the cell dir stays present;
+    delete_vectors must finish or roll back that swap before it scans,
+    and keep every row."""
     path, emb = _index(spark, tmp_path, subset=F.col("vec_id") < 200)
-    m = VectorIndexMaintainer(spark, path, compaction="tiered")
+    m = VectorIndexMaintainer(spark, path)
     m.ingest_batch(_held(emb, 200, 240))
-    m.maybe_compact(max_files_per_cell=1)
-    assert m._layout_is_tiered()
+    assert m.maybe_compact(max_files_per_cell=1)
     before = sorted(
         r.vec_id
         for r in spark.read.parquet(f"{path}/cells").select("vec_id").collect()
@@ -155,20 +158,15 @@ def test_delete_after_crashed_tiered_swap_recovers_without_loss(
 
 
 def test_recovery_protocol_from_parked_entries_not_live_tree(spark, tmp_path):
-    """r15 ADVICE (low): a crashed tiered swap can park the ONLY visible
-    gen level(s), leaving the live tree gen-free — protocol detection
-    from the live layout would then pick the whole-cell recovery, whose
-    first arm (live cell dir present) DELETES the parked level:
-    permanent data loss. _recover_if_crashed now reads the protocol from
-    the parked entries themselves and restores every row."""
-    import os
-    import shutil
-
+    """r15 ADVICE (low): a crashed swap can park the ONLY visible gen
+    level(s), leaving the live tree gen-free (it then looks like an empty
+    or flat index). Recovery is driven by the parked entries alone — the
+    ingest's flat-layout migration runs only after it — so every parked
+    row is restored."""
     path, emb = _index(spark, tmp_path, subset=F.col("vec_id") < 200)
-    m = VectorIndexMaintainer(spark, path, compaction="tiered")
+    m = VectorIndexMaintainer(spark, path)
     m.ingest_batch(_held(emb, 200, 240))
-    m.maybe_compact(max_files_per_cell=1)
-    assert m._layout_is_tiered()
+    assert m.maybe_compact(max_files_per_cell=1)
     before = {
         r.vec_id
         for r in spark.read.parquet(f"{path}/cells").select("vec_id").collect()
@@ -178,8 +176,7 @@ def test_recovery_protocol_from_parked_entries_not_live_tree(spark, tmp_path):
         rel = "/".join(gen_dir.rsplit("/", 2)[1:])
         os.makedirs(os.path.dirname(f"{path}/cells_old/{rel}"), exist_ok=True)
         shutil.move(gen_dir, f"{path}/cells_old/{rel}")
-    assert not glob.glob(f"{path}/cells/cell=*/gen=*")
-    assert not m._layout_is_tiered()  # the live tree lies about protocol
+    assert not glob.glob(f"{path}/cells/cell=*/gen=*")  # live tree gen-free
 
     s = m.ingest_batch(_held(emb, 240, 250))  # heals first, then ingests
     assert not glob.glob(f"{path}/cells_old")
