@@ -14,6 +14,9 @@ the J2 shape everywhere: equi-join on the primary key, equi-join on the
 fallback key, coalesce with the reference's NULL-guard preserved (the
 fallback arm only fires when the primary source column IS NULL). This is
 exactly equivalent (SURVEY.md §7.4 item 5) and broadcast-hash-joinable.
+
+Both operators serve the catalog queries and the streaming warehouse
+(``warehouse_load``'s id resolution, ``curated_view``).
 """
 
 from __future__ import annotations
@@ -24,6 +27,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _code_map(
+    dim: DataFrame, code: str, id_col: str, other: str | None, key: str, val: str
+) -> DataFrame:
+    """Broadcast ``key`` -> ``val`` map holding ONE dim id per code: prefer
+    the rows carrying the ``other`` code, then the smallest id. Two plain
+    mins, not ``min_by`` over a struct (which plans a SortAggregate).
+    Aliased inside the aggregate so ``code`` may be ``id_col`` itself."""
+    pick = F.min(id_col)
+    if other is not None:
+        pick = F.coalesce(F.min(F.when(F.col(other).isNotNull(), F.col(id_col))), pick)
+    return F.broadcast(
+        dim.filter(F.col(code).isNotNull())
+        .groupBy(F.col(code).alias(key))
+        .agg(pick.alias(val))
+    )
+
+
 def resolve_dim_id(
     df: DataFrame,
     dim: DataFrame,
@@ -31,53 +51,43 @@ def resolve_dim_id(
     dim_id_col: str,
     primary: tuple[str, str],
     fallback: tuple[str, str] | None = None,
-    fallback_requires_primary_null: bool = True,
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Attach ``out_col`` = dim id resolved by primary key, else fallback key.
 
-    primary/fallback are (source_col, dim_col) pairs. With
-    ``fallback_requires_primary_null`` (the reference's guard) the fallback
-    match only applies to rows whose primary source column is NULL.
-    Dims are broadcast: in a star schema the dim side is small by design.
+    primary/fallback are (source_col, dim_col) pairs; the fallback match
+    only applies to rows whose primary source column is NULL (the
+    reference's guard). Dim codes may repeat (an airport seen IATA-only,
+    then with an ICAO, is two rows sharing one IATA), so each broadcast
+    lookup map keeps one id per code: one output row per source row.
     """
     src_p, dim_p = primary
-    d = F.broadcast(dim) if broadcast_dim else dim
-
-    prim = d.filter(F.col(dim_p).isNotNull()).select(
-        F.col(dim_p).alias("_pk"), F.col(dim_id_col).alias("_pid")
-    )
+    src_f, dim_f = fallback or (None, None)
+    prim = _code_map(dim, dim_p, dim_id_col, dim_f, "_pk", "_pid")
     out = df.join(prim, df[src_p] == prim["_pk"], "left").drop("_pk")
 
     if fallback is None:
         return out.withColumnRenamed("_pid", out_col)
 
-    src_f, dim_f = fallback
-    fb = d.filter(F.col(dim_f).isNotNull()).select(
-        F.col(dim_f).alias("_fk"), F.col(dim_id_col).alias("_fid")
-    )
+    fb = _code_map(dim, dim_f, dim_id_col, dim_p, "_fk", "_fid")
     out = out.join(fb, out[src_f] == fb["_fk"], "left").drop("_fk")
 
-    fb_applies = F.col(src_p).isNull() if fallback_requires_primary_null else F.lit(True)
     resolved = F.coalesce(
-        F.col("_pid"), F.when(fb_applies, F.col("_fid"))
+        F.col("_pid"), F.when(F.col(src_p).isNull(), F.col("_fid"))
     ).alias(out_col)
     return out.withColumn(out_col, resolved).drop("_pid", "_fid")
 
 
 def star_join(
-    fact: DataFrame,
-    dims: Sequence[tuple[DataFrame, str | Sequence[str], str]],
-    how: str = "left",
+    fact: DataFrame, dims: Sequence[tuple[DataFrame, str | Sequence[str]]]
 ) -> DataFrame:
     """Left star-join fact -> dims (reference J1, db/01_views.sql:79-83).
 
-    ``dims`` entries are (dim_df, join_key(s), alias). Every dim is broadcast
-    — the fact side never shuffles, which is the only plan that survives a
-    100 TB fact table.
+    ``dims`` entries are (dim_df, join_key(s)). Every dim is broadcast — the
+    fact side never shuffles, which is the only plan that survives a 100 TB
+    fact table.
     """
     out = fact
-    for dim, key, alias in dims:
+    for dim, key in dims:
         keys = [key] if isinstance(key, str) else list(key)
-        out = out.join(F.broadcast(dim.alias(alias)), keys, how)
+        out = out.join(F.broadcast(dim), keys, "left")
     return out

@@ -204,9 +204,9 @@ def q_curated_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = star_join(
         latest,
         [
-            (cust.select("user_id", "c_name", "c_nationkey"), "user_id", "c"),
-            (nat.select("n_nationkey", "n_name", "n_regionkey").withColumnRenamed("n_nationkey", "c_nationkey"), "c_nationkey", "n"),
-            (reg.select("r_regionkey", "r_name").withColumnRenamed("r_regionkey", "n_regionkey"), "n_regionkey", "r"),
+            (cust.select("user_id", "c_name", "c_nationkey"), "user_id"),
+            (nat.select("n_nationkey", "n_name", "n_regionkey").withColumnRenamed("n_nationkey", "c_nationkey"), "c_nationkey"),
+            (reg.select("r_regionkey", "r_name").withColumnRenamed("r_regionkey", "n_regionkey"), "n_regionkey"),
         ],
     )
     return joined.select(

@@ -12,7 +12,11 @@ stages in one engine:
   apps/loader/load_warehouse.py:308-329): latest-per-key dedup, dim upserts
   with COALESCE backfill, route discovery, fact MERGE with per-column
   policies — executed in the loader's statement order so dims exist before
-  fact resolution.
+  fact resolution. ``curated_view`` is the J1 export view.
+
+Both compose the star-schema operators the catalog queries use
+(``operators.merge``, ``operators.joins``, ``latest_per_key``); this module
+adds only the flight columns, the surrogate-key hashes and the commit order.
 
 Exactly-once contract (reference flight_stream.py:33-36): the stream is
 at-least-once; every warehouse write is an idempotent keyed MERGE, and
@@ -41,7 +45,8 @@ from pyspark.sql import functions as F
 
 from ..functions.normalize import parse_flight_ts
 from ..operators.dedup import latest_per_key
-from ..operators.merge import MergePolicy, merge_upsert
+from ..operators.joins import resolve_dim_id, star_join
+from ..operators.merge import MergePolicy, insert_if_absent, merge_upsert
 from ..schemas import (
     DIM_AIRLINE_SCHEMA,
     DIM_AIRPORT_SCHEMA,
@@ -253,6 +258,9 @@ class ParquetTable:
             raise ValueError(
                 f"version {version!r} not in retained history {self.versions()}"
             )
+        return self._read_version(v)
+
+    def _read_version(self, v: str) -> DataFrame:
         return self.spark.read.schema(self.schema).parquet(os.path.join(self.path, v))
 
     def _write_version(self, df: DataFrame, out: str, v: str) -> None:
@@ -330,9 +338,9 @@ class BucketedParquetTable(ParquetTable):
     Bucket metadata cannot live in bare parquet files — Spark only honors a
     bucket spec through the catalog — so each version commit registers an
     EXTERNAL table ``{name}__{version}`` over its version dir (bucketBy +
-    sortBy the key) and ``read()`` resolves the pointer through the catalog.
-    Everything else (atomic pointer flip, commit log, time travel, bounded
-    vacuum) is inherited unchanged.
+    sortBy the key) and a resolved version is read through the catalog.
+    Everything else (pointer resolution, atomic pointer flip, commit log,
+    time travel, bounded vacuum) is inherited unchanged.
 
     This is the 100 TB lever for the fact merge (M4, the reference's
     hottest operator, load_warehouse.py:244-277): with the fact stored
@@ -403,14 +411,7 @@ class BucketedParquetTable(ParquetTable):
             f"LOCATION '{os.path.join(self.path, v)}'"
         )
 
-    def read(self, version: str | None = None) -> DataFrame:
-        v = version or self._current_version()
-        if v is None:
-            return self.spark.createDataFrame([], self.schema)
-        if version is not None and version not in self.versions():
-            raise ValueError(
-                f"version {version!r} not in retained history {self.versions()}"
-            )
+    def _read_version(self, v: str) -> DataFrame:
         # A table already in the session catalog was registered either by
         # the bucketed write itself or by a prior validated registration —
         # trust it. Otherwise only register bucket metadata when the commit
@@ -422,9 +423,7 @@ class BucketedParquetTable(ParquetTable):
         if self._bucket_spec_valid(v):
             self._ensure_registered(v)
             return self.spark.table(self._table_for(v))
-        return self.spark.read.schema(self.schema).parquet(
-            os.path.join(self.path, v)
-        )
+        return super()._read_version(v)
 
     def compact(self, target_files: int = 1) -> None:
         """Bucketed layout already bounds files at n_buckets per commit;
@@ -485,7 +484,7 @@ def _airport_id(iata: F.Column, icao: F.Column) -> F.Column:
     (load_warehouse.py:124-151) links records by ICAO and backfills a late
     IATA code onto the ICAO row, so ICAO is the stable identity. (An airport
     seen first IATA-only and later with an ICAO becomes two dim rows sharing
-    an IATA; lookup joins guard against that via _unique_code_map.)"""
+    an IATA; resolve_dim_id keeps one id per lookup code.)"""
     nk = F.coalesce(F.concat(F.lit("icao#"), icao), F.concat(F.lit("iata#"), iata))
     return F.xxhash64(F.lit("airport"), nk)
 
@@ -497,128 +496,33 @@ def _route_id(dep_id: F.Column, arr_id: F.Column) -> F.Column:
 # ---------------------------------------------------------------------------
 # Stage 2: the warehouse load cycle (one micro-batch)
 # ---------------------------------------------------------------------------
-def _upsert_airlines(wh: FlightWarehouse, latest: DataFrame) -> None:
-    """M1+M2 collapsed: one COALESCE-merge per natural key. The reference
-    needs two code paths only because Postgres cannot ON CONFLICT a nullable
+def _upsert_dim(table: ParquetTable, keyed: DataFrame, id_col: str) -> None:
+    """M1+M2 collapsed: one COALESCE-merge per surrogate key, latest snapshot
+    per key first, rows with neither code dropped (F7). The reference needs
+    two code paths only because Postgres cannot ON CONFLICT a nullable
     unique column (load_warehouse.py:32-79); a keyed MERGE has no such
     restriction, and the resulting table contents match (SURVEY.md §7.4.6)."""
-    src = (
-        latest.filter(F.col("airline_iata").isNotNull() | F.col("airline_icao").isNotNull())
-        .select("airline_iata", "airline_icao", "airline_name", "ingest_time")
-    )
-    keyed = src.select(
-        _airline_id(F.col("airline_iata"), F.col("airline_icao")).alias("airline_id"),
-        F.col("airline_iata").alias("iata"),
-        F.col("airline_icao").alias("icao"),
-        "airline_name",
-        "ingest_time",
-    )
-    per_key = latest_per_key(keyed, ["airline_id"], ["ingest_time"]).drop("ingest_time")
+    keyed = keyed.filter(F.col("iata").isNotNull() | F.col("icao").isNotNull())
+    per_key = latest_per_key(keyed, [id_col], ["ingest_time"]).drop("ingest_time")
     merged = merge_upsert(
-        wh.airline.read(),
+        table.read(),
         per_key,
-        keys=["airline_id"],
+        keys=[id_col],
         policies={},  # COALESCE(new, old) everywhere: never wipe with NULL
         default=MergePolicy.COALESCE_NEW_OLD,
     )
-    wh.airline.overwrite(merged)
+    table.overwrite(merged)
 
 
-def _upsert_airports(wh: FlightWarehouse, latest: DataFrame) -> None:
-    dep = latest.select(
-        F.col("dep_airport_iata").alias("iata"),
-        F.col("dep_airport_icao").alias("icao"),
-        F.col("dep_airport").alias("airport_name"),
+def _airport_rows(latest: DataFrame, side: str) -> DataFrame:
+    iata, icao = F.col(f"{side}_airport_iata"), F.col(f"{side}_airport_icao")
+    return latest.select(
+        _airport_id(iata, icao).alias("airport_id"),
+        iata.alias("iata"),
+        icao.alias("icao"),
+        F.col(f"{side}_airport").alias("airport_name"),
         "ingest_time",
     )
-    arr = latest.select(
-        F.col("arr_airport_iata").alias("iata"),
-        F.col("arr_airport_icao").alias("icao"),
-        F.col("arr_airport").alias("airport_name"),
-        "ingest_time",
-    )
-    src = dep.unionByName(arr).filter(
-        F.col("iata").isNotNull() | F.col("icao").isNotNull()
-    )
-    keyed = src.select(
-        _airport_id(F.col("iata"), F.col("icao")).alias("airport_id"),
-        "iata",
-        "icao",
-        "airport_name",
-        "ingest_time",
-    )
-    per_key = latest_per_key(keyed, ["airport_id"], ["ingest_time"]).drop("ingest_time")
-    merged = merge_upsert(
-        wh.airport.read(),
-        per_key,
-        keys=["airport_id"],
-        policies={},
-        default=MergePolicy.COALESCE_NEW_OLD,
-    )
-    wh.airport.overwrite(merged)
-
-
-def _unique_code_map(dim: DataFrame, code: str, id_col: str, prefer: str) -> DataFrame:
-    """One surrogate id per lookup code. Unlike the reference's
-    UNIQUE(iata)/UNIQUE(icao) constraints (db/00_warehous.sql:77-101), these
-    dim columns are not unique here: an airport first seen IATA-only (keyed
-    iata#X) and later with an ICAO (keyed icao#Y, same iata) is two dim rows
-    sharing one IATA — an unguarded lookup join on that code would then
-    duplicate fact rows and break the flight_key grain. Pick deterministically:
-    prefer the row carrying the stronger identity column (``prefer`` non-NULL),
-    tie-break on smallest id."""
-    return (
-        dim.filter(F.col(code).isNotNull())
-        .groupBy(code)
-        .agg(F.min_by(id_col, F.struct(F.col(prefer).isNull(), F.col(id_col))).alias(id_col))
-    )
-
-
-def _resolve_airport_ids(latest: DataFrame, airports: DataFrame, side: str) -> DataFrame:
-    """J2/J3 decomposed: IATA equi-join, ICAO equi-join guarded on IATA NULL,
-    COALESCE preference (reference load_warehouse.py:222-235, decomposed per
-    SURVEY.md §7.4.5). Dims broadcast — the fact side never shuffles. Lookup
-    maps are deduplicated to one id per code (see _unique_code_map)."""
-    iata_map = F.broadcast(
-        _unique_code_map(airports, "iata", "airport_id", prefer="icao").select(
-            F.col("iata").alias(f"_{side}_iata"), F.col("airport_id").alias(f"_{side}_iid")
-        )
-    )
-    icao_map = F.broadcast(
-        _unique_code_map(airports, "icao", "airport_id", prefer="iata").select(
-            F.col("icao").alias(f"_{side}_icao"), F.col("airport_id").alias(f"_{side}_cid")
-        )
-    )
-    out = (
-        latest.join(iata_map, latest[f"{side}_airport_iata"] == iata_map[f"_{side}_iata"], "left")
-        .drop(f"_{side}_iata")
-        .join(icao_map, latest[f"{side}_airport_icao"] == icao_map[f"_{side}_icao"], "left")
-        .drop(f"_{side}_icao")
-    )
-    resolved = F.coalesce(
-        F.col(f"_{side}_iid"),
-        F.when(F.col(f"{side}_airport_iata").isNull(), F.col(f"_{side}_cid")),
-    )
-    return out.withColumn(f"{side}_airport_id", resolved).drop(f"_{side}_iid", f"_{side}_cid")
-
-
-def _upsert_routes(wh: FlightWarehouse, resolved: DataFrame) -> None:
-    """A2 + M3: distinct (dep_id, arr_id) pairs, insert-ignore."""
-    pairs = (
-        resolved.filter(
-            F.col("dep_airport_id").isNotNull() & F.col("arr_airport_id").isNotNull()
-        )
-        .select("dep_airport_id", "arr_airport_id")
-        .dropDuplicates()
-        .select(
-            _route_id(F.col("dep_airport_id"), F.col("arr_airport_id")).alias("route_id"),
-            "dep_airport_id",
-            "arr_airport_id",
-        )
-    )
-    target = wh.route.read()
-    fresh = pairs.join(target.select("route_id"), "route_id", "left_anti")
-    wh.route.overwrite(target.unionByName(fresh))
 
 
 def warehouse_load(
@@ -627,56 +531,72 @@ def warehouse_load(
     """One load cycle in the reference's statement order (load_warehouse.py:
     322-327): airlines -> airports -> routes -> fact. The micro-batch
     boundary replaces the loader's single now() cutoff (F4); ``batch_ts_expr``
-    is last_updated (injected in tests for determinism)."""
+    is last_updated (injected in tests for determinism). ``resolve_dim_id``
+    keeps ``latest``'s one row per flight_key, merge_upsert's precondition."""
     staging = staging.localCheckpoint(eager=True)  # cut lineage; read once per stage
     latest = latest_per_key(
         staging, ["flight_key"], ["ingest_time", F.col("dep_scheduled")]
     ).localCheckpoint(eager=True)
 
-    _upsert_airlines(wh, latest)
-    _upsert_airports(wh, latest)
-
-    airports = wh.airport.read()
-    resolved = _resolve_airport_ids(latest, airports, "dep")
-    resolved = _resolve_airport_ids(resolved, airports, "arr")
-    _upsert_routes(wh, resolved)
-
-    airlines = wh.airline.read()
-    with_aid = resolved.join(
-        F.broadcast(
-            _unique_code_map(airlines, "iata", "airline_id", prefer="icao").select(
-                F.col("iata").alias("_a_iata"), F.col("airline_id").alias("_aid_i")
-            )
+    _upsert_dim(
+        wh.airline,
+        latest.select(
+            _airline_id(F.col("airline_iata"), F.col("airline_icao")).alias("airline_id"),
+            F.col("airline_iata").alias("iata"),
+            F.col("airline_icao").alias("icao"),
+            "airline_name",
+            "ingest_time",
         ),
-        resolved["airline_iata"] == F.col("_a_iata"),
-        "left",
-    ).drop("_a_iata")
-    icao_air = F.broadcast(
-        _unique_code_map(airlines, "icao", "airline_id", prefer="iata").select(
-            F.col("icao").alias("_a_icao"), F.col("airline_id").alias("_aid_c")
-        )
-    )
-    with_aid = with_aid.join(
-        icao_air, with_aid["airline_icao"] == icao_air["_a_icao"], "left"
-    ).drop("_a_icao")
-    with_aid = with_aid.withColumn(
         "airline_id",
-        F.coalesce(
-            F.col("_aid_i"),
-            F.when(F.col("airline_iata").isNull(), F.col("_aid_c")),
-        ),
-    ).drop("_aid_i", "_aid_c")
+    )
+    _upsert_dim(
+        wh.airport,
+        _airport_rows(latest, "dep").unionByName(_airport_rows(latest, "arr")),
+        "airport_id",
+    )
 
+    resolved = latest
+    dim_airport = wh.airport.read()
+    for side in ("dep", "arr"):
+        resolved = resolve_dim_id(
+            resolved,
+            dim_airport,
+            out_col=f"{side}_airport_id",
+            dim_id_col="airport_id",
+            primary=(f"{side}_airport_iata", "iata"),
+            fallback=(f"{side}_airport_icao", "icao"),
+        )
+
+    resolved = resolved.withColumn(
+        "route_id",
+        F.when(
+            F.col("dep_airport_id").isNotNull() & F.col("arr_airport_id").isNotNull(),
+            _route_id(F.col("dep_airport_id"), F.col("arr_airport_id")),
+        ),
+    )
+    # A2 + M3: distinct (dep_id, arr_id) pairs, insert-ignore.
+    pairs = (
+        resolved.filter(F.col("route_id").isNotNull())
+        .select("route_id", "dep_airport_id", "arr_airport_id")
+        .dropDuplicates()
+    )
+    wh.route.overwrite(insert_if_absent(wh.route.read(), pairs, ["route_id"]))
+
+    with_aid = resolve_dim_id(
+        resolved,
+        wh.airline.read(),
+        out_col="airline_id",
+        dim_id_col="airline_id",
+        primary=("airline_iata", "iata"),
+        fallback=("airline_icao", "icao"),
+    )
     fact_src = with_aid.select(
         "flight_key",
         "flight_date",
         "status",
         "ingest_time",
         "airline_id",
-        F.when(
-            F.col("dep_airport_id").isNotNull() & F.col("arr_airport_id").isNotNull(),
-            _route_id(F.col("dep_airport_id"), F.col("arr_airport_id")),
-        ).alias("route_id"),
+        "route_id",
         "dep_scheduled",
         "dep_estimated",
         "dep_actual",
@@ -686,14 +606,6 @@ def warehouse_load(
         "arr_actual",
         "arr_delay_min",
         F.expr(batch_ts_expr).alias("last_updated"),
-    )
-    # Safety net for merge_upsert's one-row-per-key precondition: even though
-    # the lookup maps are deduplicated, re-assert the flight_key grain after
-    # id resolution (ids as tie-breaks make the pick deterministic).
-    fact_src = latest_per_key(
-        fact_src,
-        ["flight_key"],
-        ["ingest_time", F.col("dep_scheduled"), F.col("airline_id"), F.col("route_id")],
     )
 
     # M4: measures/timestamps overwritten (incl. NULL); ingest_time GREATEST;
@@ -718,39 +630,34 @@ def warehouse_load(
 
 def curated_view(wh: FlightWarehouse) -> DataFrame:
     """J1: the 20-column denormalized export view (db/01_views.sql:44-83)."""
-    fact = wh.fact.read()
-    airline = F.broadcast(wh.airline.read())
-    route = F.broadcast(wh.route.read())
     airport = wh.airport.read()
-    dep = F.broadcast(
-        airport.select(
-            F.col("airport_id").alias("dep_airport_id"),
-            F.col("airport_name").alias("dep_airport"),
-            F.col("iata").alias("dep_iata"),
-            F.col("icao").alias("dep_icao"),
+
+    def side(s: str) -> DataFrame:
+        return airport.select(
+            F.col("airport_id").alias(f"{s}_airport_id"),
+            F.col("airport_name").alias(f"{s}_airport"),
+            F.col("iata").alias(f"{s}_iata"),
+            F.col("icao").alias(f"{s}_icao"),
         )
+
+    airline = wh.airline.read().select(
+        "airline_id", F.col("iata").alias("airline_iata"), "airline_name"
     )
-    arr = F.broadcast(
-        airport.select(
-            F.col("airport_id").alias("arr_airport_id"),
-            F.col("airport_name").alias("arr_airport"),
-            F.col("iata").alias("arr_iata"),
-            F.col("icao").alias("arr_icao"),
-        )
-    )
-    return (
-        fact.join(airline.select("airline_id", F.col("iata").alias("airline_iata"), "airline_name"), "airline_id", "left")
-        .join(route, "route_id", "left")
-        .join(dep, "dep_airport_id", "left")
-        .join(arr, "arr_airport_id", "left")
-        .select(
-            "flight_key", "flight_date", "status", "airline_iata", "airline_name",
-            "dep_scheduled", "dep_estimated", "dep_actual", "dep_delay_min",
-            "arr_scheduled", "arr_estimated", "arr_actual", "arr_delay_min",
-            "dep_airport", "dep_iata", "dep_icao",
-            "arr_airport", "arr_iata", "arr_icao",
-            "last_updated",
-        )
+    return star_join(
+        wh.fact.read(),
+        [
+            (airline, "airline_id"),
+            (wh.route.read(), "route_id"),
+            (side("dep"), "dep_airport_id"),
+            (side("arr"), "arr_airport_id"),
+        ],
+    ).select(
+        "flight_key", "flight_date", "status", "airline_iata", "airline_name",
+        "dep_scheduled", "dep_estimated", "dep_actual", "dep_delay_min",
+        "arr_scheduled", "arr_estimated", "arr_actual", "arr_delay_min",
+        "dep_airport", "dep_iata", "dep_icao",
+        "arr_airport", "arr_iata", "arr_icao",
+        "last_updated",
     )
 
 

@@ -9,18 +9,18 @@ short-circuit (T7) and checkpointed trigger contract (T1/T2). That
 driver shape is factored here ONCE.
 
 What stays deliberately separate is everything below the driver. Both
-tiers now share the partitioned-APPEND commit model (machinery in
-``operators/partstore.py``) but dedup different identities into
-different layouts, and the difference picks their compaction strategy:
+tiers share the partitioned-APPEND commit model and its one GENERATIONAL
+compactor (``operators/partstore.py``: ``tiered_compact_partitions`` merges
+one over-threshold ``gen=G`` level into the next, never rewriting the
+accumulated partition) but dedup different identities into different
+partitions:
 
 - the corpus store keys on a TEXT fingerprint (plus an LSH band tier for
   near-dups); a batch's fingerprints hash-scatter across ~ALL buckets,
-  so small files accrete everywhere at once and compaction is
-  GENERATIONAL (merge one over-threshold gen level into the next, never
-  rewriting the accumulated corpus — r13);
+  so small files accrete everywhere at once;
 - the index maintainer keys on vec_id and the (cell, codes) quantization
-  and appends into the batch's few COARSE CELLS; whole-cell threshold
-  compaction suffices there because only touched cells accrete.
+  and appends into the batch's few COARSE CELLS, so only touched cells
+  accrete.
 
 The shared contract both honor is the idempotent-replay one (T3): the
 accept step anti-joins the natural key against live state, so replayed

@@ -14,6 +14,15 @@ def spark():
     yield s
 
 
+@pytest.fixture()
+def no_broadcast(spark):
+    """Auto-broadcast off: only explicit ``F.broadcast`` hints broadcast."""
+    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    yield
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
 @pytest.fixture(scope="session")
 def built_query(spark):
     """``built_query(name, sf_dir)``: the catalog query's DataFrame, built

@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import re
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -64,14 +63,6 @@ def _merge(target, src):
         policies={"ts": MergePolicy.GREATEST},
         null_safe_keys=False,
     )
-
-
-@pytest.fixture()
-def no_broadcast(spark):
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    yield
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 def _assert_target_side_never_exchanged(plan: str) -> None:

@@ -1,27 +1,74 @@
 """Warehouse-integrity regressions: non-unique dim natural keys must never
-duplicate fact rows, NULL merge keys must still match, ANSI-mode date parse
-must not abort the batch, and versioned tables must not grow without bound.
+duplicate fact rows (in the lookup operator and end to end), NULL merge keys
+must still match, ANSI-mode date parse must not abort the batch, versioned
+tables must not grow without bound, a crash between the per-table commits
+must converge on re-run, and the id lookups must stay broadcast.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from real_time_flight_data_pipeline_spark.operators.joins import resolve_dim_id
 from real_time_flight_data_pipeline_spark.operators.merge import (
     MergePolicy,
     merge_upsert,
 )
+from real_time_flight_data_pipeline_spark.streaming import pipeline
 from real_time_flight_data_pipeline_spark.streaming.pipeline import (
     FlightWarehouse,
     ParquetTable,
+    curated_view,
     normalize_flight_stream,
     warehouse_load,
 )
 
 from .test_streaming import NOW, _rec, _wire_df
+
+# Two micro-batches over a shared-IATA airport and a shared-ICAO airline:
+# batch 1 knows LGW IATA-only and airline XX/XXX in full; batch 2 re-sees
+# LGW with its ICAO (a second dim row sharing the IATA), the airline
+# ICAO-only (a second row sharing the ICAO), a new flight keyed only by the
+# ambiguous codes, and a later snapshot of A1.
+_TWO_BATCHES = [
+    (
+        [
+            _rec("A1", airline=("XX", "XXX", "Xair"), dep=("Gatwick", "LGW", None)),
+            _rec("K1"),
+        ],
+        "timestamp'2025-08-22 00:00:01'",
+    ),
+    (
+        [
+            _rec("A2", airline=(None, "XXX", None), dep=("Gatwick", "LGW", "EGKK")),
+            _rec("A3", airline=(None, "XXX", None), dep=("Gatwick", "LGW", None)),
+            _rec("A1", ingest="2025-08-21T02:10:00+00:00", dep_delay=40,
+                 airline=("XX", "XXX", "Xair"), dep=("Gatwick", "LGW", None)),
+        ],
+        "timestamp'2025-08-22 00:00:02'",
+    ),
+]
+
+
+def _load(spark, wh, batch) -> None:
+    records, batch_ts = batch
+    warehouse_load(wh, normalize_flight_stream(_wire_df(spark, records), NOW), batch_ts)
+
+
+def _snapshot(wh) -> dict[str, list[tuple]]:
+    frames = {
+        "airline": wh.airline.read(),
+        "airport": wh.airport.read(),
+        "route": wh.route.read(),
+        "fact": wh.fact.read(),
+        "curated_view": curated_view(wh),
+    }
+    return {k: sorted(map(tuple, df.collect()), key=repr) for k, df in frames.items()}
 
 
 def test_shared_iata_across_dim_rows_keeps_fact_grain(spark, tmp_path):
@@ -89,3 +136,120 @@ def test_parquet_table_vacuums_old_versions(spark, tmp_path):
     versions = [d for d in os.listdir(tbl.path) if d.startswith("v_")]
     assert len(versions) == 2  # current + one grace version
     assert tbl.read().collect()[0]["x"] == 3
+
+
+_AIRPORT_LOOKUP = dict(
+    dim_id_col="airport_id", primary=("s_iata", "iata"), fallback=("s_icao", "icao")
+)
+_CUSTKEY_LOOKUP = dict(
+    dim_id_col="c_custkey", primary=("pk", "c_custkey"), fallback=("fk", "c_custkey")
+)
+
+
+@pytest.mark.parametrize(
+    "dim_schema,dim_rows,src_schema,src_rows,lookup,expected",
+    [
+        # Shared codes: LGW is IATA-only as id 1 and ICAO-carrying as id 2;
+        # ZZZZ is ICAO-only as id 5 and IATA-carrying as id 6. The row that
+        # carries the other code wins, though its id is the larger one.
+        (
+            "airport_id long, iata string, icao string",
+            [(1, "LGW", None), (2, "LGW", "EGKK"), (3, None, "KJFK"),
+             (5, None, "ZZZZ"), (6, "ZZ", "ZZZZ")],
+            "sid string, s_iata string, s_icao string",
+            [("s1", "LGW", None), ("s2", None, "EGKK"), ("s3", None, "KJFK"),
+             ("s4", "LGW", "EGKK"), ("s5", None, "ZZZZ"), ("s6", "NOPE", "KJFK")],
+            _AIRPORT_LOOKUP,
+            {"s1": 2, "s2": 2, "s3": 3, "s4": 2, "s5": 6, "s6": None},
+        ),
+        # Code is the id (resolve_id_coalesce_lookup's shape): custkey 1 is
+        # on two dim rows; the fallback only fires when the primary is NULL.
+        (
+            "c_custkey long, c_name string",
+            [(1, "a"), (1, "b"), (2, "c")],
+            "sid string, pk long, fk long",
+            [("e1", 1, 2), ("e2", None, 2), ("e3", None, 9), ("e4", 7, 1)],
+            _CUSTKEY_LOOKUP,
+            {"e1": 1, "e2": 2, "e3": None, "e4": None},
+        ),
+    ],
+    ids=["shared_iata_icao", "code_is_id"],
+)
+def test_resolve_dim_id_keeps_source_grain(
+    spark, dim_schema, dim_rows, src_schema, src_rows, lookup, expected
+):
+    """One output row per source row even when a dim code repeats, with the
+    deterministic pick: the row carrying the other code, then smallest id."""
+    dim = spark.createDataFrame(dim_rows, dim_schema)
+    src = spark.createDataFrame(src_rows, src_schema)
+    out = resolve_dim_id(src, dim, out_col="rid", **lookup).select("sid", "rid").collect()
+    assert sorted(r["sid"] for r in out) == sorted(expected)  # no fan-out
+    assert {r["sid"]: r["rid"] for r in out} == expected
+
+
+@pytest.fixture(scope="module")
+def clean_two_batch(spark, tmp_path_factory):
+    wh = FlightWarehouse(spark, str(tmp_path_factory.mktemp("clean") / "wh"))
+    for batch in _TWO_BATCHES:
+        _load(spark, wh, batch)
+    return _snapshot(wh)
+
+
+class _InjectedCrash(RuntimeError):
+    pass
+
+
+@pytest.mark.parametrize("crash_after_commit", [1, 2, 3])
+def test_crash_between_commits_converges(
+    spark, tmp_path, monkeypatch, clean_two_batch, crash_after_commit
+):
+    """warehouse_load commits airline, airport, route, then fact, each by its
+    own pointer flip. Crash right after the N-th flip of the second batch,
+    restart (a fresh FlightWarehouse on the same root) and re-run the same
+    batch with the same batch timestamp: all four tables and the curated
+    view must equal a clean run's."""
+    root = str(tmp_path / "wh")
+    _load(spark, FlightWarehouse(spark, root), _TWO_BATCHES[0])
+
+    crashing = FlightWarehouse(spark, root)
+    commits = []
+    for attr in ("airline", "airport", "route", "fact"):
+        tbl = getattr(crashing, attr)
+
+        def flaky(df, _orig=tbl.overwrite, _attr=attr):
+            _orig(df)
+            commits.append(_attr)
+            if len(commits) == crash_after_commit:
+                raise _InjectedCrash(_attr)
+
+        monkeypatch.setattr(tbl, "overwrite", flaky)
+    with pytest.raises(_InjectedCrash):
+        _load(spark, crashing, _TWO_BATCHES[1])
+    assert commits == ["airline", "airport", "route"][:crash_after_commit]
+    assert _snapshot(crashing) != clean_two_batch  # the crash left a partial state
+
+    restarted = FlightWarehouse(spark, root)
+    _load(spark, restarted, _TWO_BATCHES[1])
+    assert _snapshot(restarted) == clean_two_batch
+
+
+def test_fact_merge_lookups_stay_broadcast(spark, tmp_path, monkeypatch, no_broadcast):
+    """The six id lookups feeding the fact merge (dep/arr airport and airline,
+    each by IATA then ICAO) are broadcast hash joins on the explicit hint
+    alone: with auto-broadcast off, a hint placed anywhere but on the
+    aggregated lookup map would plan a sort-merge join instead."""
+    sources = []
+    real_merge = pipeline.merge_upsert
+
+    def spy(target, source, *args, **kwargs):
+        if kwargs.get("keys") == ["flight_key"]:
+            sources.append(source)
+        return real_merge(target, source, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "merge_upsert", spy)
+    wh = FlightWarehouse(spark, str(tmp_path / "wh"))
+    _load(spark, wh, _TWO_BATCHES[0])
+    assert len(sources) == 1
+    plan = sources[0]._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"BroadcastHashJoin", plan)) == 6, plan
+    assert "BroadcastNestedLoopJoin" not in plan, plan
