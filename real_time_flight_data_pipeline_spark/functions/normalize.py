@@ -23,7 +23,7 @@ TS_FMT = "yyyy-MM-dd'T'HH:mm:ssXXX"
 
 # Ordered rewrite passes. Each entry: (match, replacement). Order matters —
 # the seconds fixups (3A-3C) assume the timezone shape is already normalized,
-# and the bare-timestamp fallback must run last.
+# and the bare-timestamp fallback (4) must run last.
 _REWRITES: tuple[tuple[str, str], ...] = (
     # 1a. trailing 'Z' designator -> explicit UTC offset
     (r"Z$", "+00:00"),
@@ -37,9 +37,9 @@ _REWRITES: tuple[tuple[str, str], ...] = (
     (r"(T\d{2}:\d{2}:)(\d{2})\d(?=(?:\.\d{1,3}|[+-]\d{2}:\d{2}|$))", "$1$2"),
     # 3c. seconds missing entirely -> insert ':00'
     (r"(T\d{2}:\d{2})(?=(?:\.\d{1,3}|[+-]\d{2}:\d{2}|$))", "$1:00"),
+    # 4. complete timestamp with no timezone -> assume UTC
+    (r"^(\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2})$", "$1+00:00"),
 )
-
-_BARE_TS = r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}:\d{2}$"
 
 
 def clean_ts(col: Column | str) -> Column:
@@ -49,11 +49,14 @@ def clean_ts(col: Column | str) -> Column:
     seconds, 1- and 3-digit second fields, missing second fields, and a
     missing timezone on an otherwise-complete timestamp (assumed UTC).
     Anything still malformed after these passes parses to NULL downstream.
+    Each pass wraps the previous one once: Catalyst inlines the chain into
+    every filter on a parsed column, so a pass that referenced it twice would
+    multiply it past Janino's 64 KB method limit.
     """
     c = F.col(col) if isinstance(col, str) else col
     for pattern, repl in _REWRITES:
         c = F.regexp_replace(c, pattern, repl)
-    return F.when(c.rlike(_BARE_TS), F.concat(c, F.lit("+00:00"))).otherwise(c)
+    return c
 
 
 def parse_flight_ts(col: Column | str) -> Column:

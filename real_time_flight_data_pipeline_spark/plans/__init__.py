@@ -66,21 +66,22 @@ DRIVER_WINDOW_TAIL: list[str] = _reorder_for_driver_window()
 
 
 def registry_source_hash() -> str:
-    """Stable hash of every plans/*.py source file — the freshness key the
+    """Stable hash of every package source file — the freshness key the
     PLANS.md digest header records (r13 verdict #5). PLANS.md is
     regenerated by scripts/explain_catalog.py; the r13 incident was a
     commit that edited a registered builder AFTER the digest was
-    regenerated, leaving one row's node counts stale. Any edit under
-    plans/ (where every registered builder lives) changes this hash, and
-    tests/test_plans_freshness.py fails until the digest is re-run —
-    comment-only edits over-trigger, which is the cheap side of the
-    trade."""
+    regenerated, leaving one row's node counts stale. Registered builders
+    live under plans/ but compose functions/, operators/, sources/ and
+    streaming/ helpers, so an edit to any module of the package changes
+    this hash, and tests/test_plans_freshness.py fails until the digest is
+    re-run — edits that move no plan over-trigger, which is the cheap side
+    of the trade."""
     import hashlib
     import pathlib
 
     h = hashlib.sha256()
-    pkg = pathlib.Path(__file__).resolve().parent
-    for p in sorted(pkg.glob("*.py")):
-        h.update(p.name.encode())
+    pkg = pathlib.Path(__file__).resolve().parents[1]
+    for p in sorted(pkg.rglob("*.py")):
+        h.update(p.relative_to(pkg).as_posix().encode())
         h.update(p.read_bytes())
     return h.hexdigest()[:16]

@@ -83,6 +83,11 @@ def normalize_flight_stream(
     Divergence from reference (documented): negative delay minutes are
     nulled out instead of aborting the batch via CHECK constraint
     (db/00_warehous.sql:48; SURVEY.md §7.5).
+
+    Retention (F2) and liveness (F3) are one ``greatest(4 timestamps) >=
+    cutoff``: greatest skips NULLs, so it holds iff some timestamp parsed and
+    is in the window. Catalyst inlines the parse into the pushed-down filter
+    once per reference; a guard per column made the stage too big to compile.
     """
     ts = parse_flight_ts
 
@@ -125,23 +130,11 @@ def normalize_flight_stream(
         F.col("source"),
     )
 
-    cutoff = F.expr(f"{now_expr} - {RETENTION}")
-    in_window = lambda c: F.col(c).isNotNull() & (F.col(c) >= cutoff)  # noqa: E731
-    any_ts = (
-        F.col("dep_scheduled").isNotNull()
-        | F.col("arr_scheduled").isNotNull()
-        | F.col("dep_actual").isNotNull()
-        | F.col("arr_actual").isNotNull()
-    )
-    return (
-        parsed.filter(F.lower(F.col("status")).isin(*KEEP_STATUSES))
-        .filter(
-            in_window("dep_scheduled")
-            | in_window("arr_scheduled")
-            | in_window("dep_actual")
-            | in_window("arr_actual")
-        )
-        .filter(F.col("flight_key").isNotNull() & any_ts)
+    newest = F.greatest("dep_scheduled", "arr_scheduled", "dep_actual", "arr_actual")
+    return parsed.filter(
+        F.lower(F.col("status")).isin(*KEEP_STATUSES)
+        & (newest >= F.expr(f"{now_expr} - {RETENTION}"))
+        & F.col("flight_key").isNotNull()
     )
 
 
@@ -531,9 +524,11 @@ def warehouse_load(
     """One load cycle in the reference's statement order (load_warehouse.py:
     322-327): airlines -> airports -> routes -> fact. The micro-batch
     boundary replaces the loader's single now() cutoff (F4); ``batch_ts_expr``
-    is last_updated (injected in tests for determinism). ``resolve_dim_id``
-    keeps ``latest``'s one row per flight_key, merge_upsert's precondition."""
-    staging = staging.localCheckpoint(eager=True)  # cut lineage; read once per stage
+    is last_updated (injected in tests for determinism). Two eager barriers:
+    ``latest`` (one row per flight_key) feeds the airline and airport commits;
+    ``with_aid`` (its airport, airline and route ids, resolved once against
+    the committed dims) feeds both the route insert and the fact merge.
+    ``resolve_dim_id`` keeps one row per key, merge_upsert's precondition."""
     latest = latest_per_key(
         staging, ["flight_key"], ["ingest_time", F.col("dep_scheduled")]
     ).localCheckpoint(eager=True)
@@ -566,23 +561,7 @@ def warehouse_load(
             primary=(f"{side}_airport_iata", "iata"),
             fallback=(f"{side}_airport_icao", "icao"),
         )
-
-    resolved = resolved.withColumn(
-        "route_id",
-        F.when(
-            F.col("dep_airport_id").isNotNull() & F.col("arr_airport_id").isNotNull(),
-            _route_id(F.col("dep_airport_id"), F.col("arr_airport_id")),
-        ),
-    )
-    # A2 + M3: distinct (dep_id, arr_id) pairs, insert-ignore.
-    pairs = (
-        resolved.filter(F.col("route_id").isNotNull())
-        .select("route_id", "dep_airport_id", "arr_airport_id")
-        .dropDuplicates()
-    )
-    wh.route.overwrite(insert_if_absent(wh.route.read(), pairs, ["route_id"]))
-
-    with_aid = resolve_dim_id(
+    resolved = resolve_dim_id(
         resolved,
         wh.airline.read(),
         out_col="airline_id",
@@ -590,6 +569,22 @@ def warehouse_load(
         primary=("airline_iata", "iata"),
         fallback=("airline_icao", "icao"),
     )
+    with_aid = resolved.withColumn(
+        "route_id",
+        F.when(
+            F.col("dep_airport_id").isNotNull() & F.col("arr_airport_id").isNotNull(),
+            _route_id(F.col("dep_airport_id"), F.col("arr_airport_id")),
+        ),
+    ).localCheckpoint(eager=True)
+
+    # A2 + M3: distinct (dep_id, arr_id) pairs, insert-ignore.
+    pairs = (
+        with_aid.filter(F.col("route_id").isNotNull())
+        .select("route_id", "dep_airport_id", "arr_airport_id")
+        .dropDuplicates()
+    )
+    wh.route.overwrite(insert_if_absent(wh.route.read(), pairs, ["route_id"]))
+
     fact_src = with_aid.select(
         "flight_key",
         "flight_date",

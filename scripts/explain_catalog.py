@@ -60,7 +60,7 @@ def main() -> None:
         "allowlist (tests/test_plan_audit.py).",
         "",
         # Freshness key (r13 verdict #5): tests/test_plans_freshness.py
-        # fails when any plans/*.py source no longer matches this stamp.
+        # fails when any package source no longer matches this stamp.
         f"Registry source hash: `{registry_source_hash()}`",
         "",
         "| query | scans | xchg | bcast | sort | BHJ | SMJ | SHJ | BNLJ | win | WSC |",

@@ -38,6 +38,9 @@ CASES = [
     (None, None),                                                        # t10c
     ("2025-08-21T00:05:00-05:00", dt.datetime(2025, 8, 21, 5, 5, 0)),   # t11
     ("2025-08-21T00:05:2", dt.datetime(2025, 8, 21, 0, 5, 2)),          # t12
+    # Java's `$` also matches before a final newline; either form of the
+    # bare-timestamp fallback keeps the newline, so the parse fails.
+    ("2025-08-21T00:05:00\n", None),
 ]
 
 

@@ -2,9 +2,11 @@
 
 PLANS.md is the reviewable physical-plan digest; it is only trustworthy
 if it was regenerated after the last edit to any registered builder. The
-digest header records a hash of every plans/*.py source file at
-generation time; this test recomputes it and fails on mismatch — the fix
-is always ``python scripts/explain_catalog.py``. (The r13 incident: a
+digest header records a hash of every package source file at generation
+time (builders compose functions/, operators/, sources/ and streaming/
+helpers, so a plan can move without a plans/ edit); this test recomputes
+it and fails on mismatch — the fix is always
+``python scripts/explain_catalog.py``. (The r13 incident: a
 review-pass commit added a repartition to a registered builder one commit
 after the digest was regenerated, leaving that row's node counts stale
 with nothing to notice.)
@@ -25,7 +27,7 @@ def test_plans_digest_is_fresh():
     m = re.search(r"Registry source hash: `([0-9a-f]+)`", text)
     assert m, "PLANS.md has no freshness stamp — regenerate it"
     assert m.group(1) == registry_source_hash(), (
-        "PLANS.md was generated from different plans/ sources — run "
+        "PLANS.md was generated from different package sources — run "
         "`python scripts/explain_catalog.py` to refresh the digest"
     )
 

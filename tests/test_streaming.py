@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from real_time_flight_data_pipeline_spark.streaming.pipeline import (
     FlightWarehouse,
     curated_view,
+    dead_letter_split,
     normalize_flight_stream,
     run_file_replay_stream,
     warehouse_load,
@@ -105,6 +106,70 @@ def test_normalize_filters_and_flattens(spark, batch1):
     assert rows["K5"]["dep_delay_min"] is None  # F6 divergence: null, not abort
     assert rows["K2"]["airline_iata"] is None and rows["K2"]["airline_icao"] == "UAE"
     assert rows["K1"]["dep_scheduled"] is not None
+
+
+# NOW minus the 3-day retention: the window's inclusive lower edge.
+_CUTOFF = "2025-08-19T00:00:00+00:00"
+_STALE = "2025-08-10T00:00:00+00:00"
+_FRESH = "2025-08-21T00:05:00+00:00"
+
+
+@pytest.mark.parametrize(
+    "dep_sched,arr_sched,dep_actual,arr_actual,kept",
+    [
+        (_FRESH, None, None, None, True),
+        (None, None, None, _FRESH, True),
+        (_STALE, _FRESH, None, None, True),
+        (_CUTOFF, None, None, None, True),
+        ("2025-08-18T23:59:59+00:00", None, None, None, False),
+        ("garbage", "bad", "", "2025-13-45T99:99", False),
+        ("garbage", _STALE, _STALE, _STALE, False),
+    ],
+    ids=[
+        "only_dep_scheduled_fresh",
+        "only_arr_actual_fresh",
+        "one_stale_one_fresh",
+        "at_cutoff_inclusive",
+        "one_second_before_cutoff",
+        "all_unparseable",
+        "one_unparseable_rest_stale",
+    ],
+)
+def test_retention_and_liveness_per_branch(
+    spark, dep_sched, arr_sched, dep_actual, arr_actual, kept
+):
+    """F2 + F3: a row is kept iff at least one of its four checked
+    timestamps parses and lies at or after NOW - 3 days; unparseable
+    timestamps count as absent, not as stale-or-fresh."""
+    rec = _rec("R1", sched=dep_sched, arr_sched=arr_sched, dep_actual=dep_actual)
+    rec["arrival"]["actual"] = arr_actual
+    out = normalize_flight_stream(_wire_df(spark, [rec]), NOW).collect()
+    assert [r["flight_key"] for r in out] == (["R1"] if kept else [])
+
+
+def _max_method_sizes(spark, df) -> list[int]:
+    """Largest generated method, in bytes, of each whole-stage-codegen
+    subtree of ``df``'s executed plan; -1 marks a subtree that failed to
+    compile (Spark then falls back to interpreted evaluation)."""
+    debug = spark._jvm.org.apache.spark.sql.execution.debug.package
+    seq = debug.codegenStringSeq(df._jdf.queryExecution().executedPlan())
+    return [seq.apply(i)._3().maxMethodCodeSize() for i in range(seq.length())]
+
+
+def test_normalizer_stages_compile(spark, batch1):
+    """The normalize chain is inlined into the pushed-down retention filter
+    once per reference; every generated stage of the normalizer and of both
+    dead-letter outputs must compile, under the huge-method limit."""
+    limit = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit"))
+    raw = batch1.select(F.to_json(F.struct(*batch1.columns)).alias("value"))
+    valid, dlq = dead_letter_split(raw, NOW)
+    for name, df in [
+        ("normalize_flight_stream", normalize_flight_stream(batch1, NOW)),
+        ("dead_letter_split.valid", valid),
+        ("dead_letter_split.dlq", dlq),
+    ]:
+        sizes = _max_method_sizes(spark, df)
+        assert sizes and all(0 <= n <= limit for n in sizes), (name, sizes, limit)
 
 
 def test_warehouse_load_m_semantics(spark, batch1, tmp_path):

@@ -234,22 +234,23 @@ def test_crash_between_commits_converges(
 
 
 def test_fact_merge_lookups_stay_broadcast(spark, tmp_path, monkeypatch, no_broadcast):
-    """The six id lookups feeding the fact merge (dep/arr airport and airline,
-    each by IATA then ICAO) are broadcast hash joins on the explicit hint
-    alone: with auto-broadcast off, a hint placed anywhere but on the
-    aggregated lookup map would plan a sort-merge join instead."""
-    sources = []
-    real_merge = pipeline.merge_upsert
+    """The six id lookups feeding the route insert and the fact merge
+    (dep/arr airport and airline, each by IATA then ICAO) are broadcast hash
+    joins on the explicit hint alone: with auto-broadcast off, a hint placed
+    anywhere but on the aggregated lookup map would plan a sort-merge join
+    instead. Both commits read the lookups' output through one checkpoint,
+    so the plan checked is the last ``resolve_dim_id``'s, before it."""
+    resolved = []
+    real_resolve = pipeline.resolve_dim_id
 
-    def spy(target, source, *args, **kwargs):
-        if kwargs.get("keys") == ["flight_key"]:
-            sources.append(source)
-        return real_merge(target, source, *args, **kwargs)
+    def spy(*args, **kwargs):
+        resolved.append(real_resolve(*args, **kwargs))
+        return resolved[-1]
 
-    monkeypatch.setattr(pipeline, "merge_upsert", spy)
+    monkeypatch.setattr(pipeline, "resolve_dim_id", spy)
     wh = FlightWarehouse(spark, str(tmp_path / "wh"))
     _load(spark, wh, _TWO_BATCHES[0])
-    assert len(sources) == 1
-    plan = sources[0]._jdf.queryExecution().executedPlan().toString()
+    assert len(resolved) == 3
+    plan = resolved[-1]._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"BroadcastHashJoin", plan)) == 6, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
