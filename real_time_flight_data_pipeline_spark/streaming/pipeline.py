@@ -21,8 +21,11 @@ adds only the flight columns, the surrogate-key hashes and the commit order.
 Exactly-once contract (reference flight_stream.py:33-36): the stream is
 at-least-once; every warehouse write is an idempotent keyed MERGE, and
 surrogate keys are deterministic hashes of natural keys (xxhash64 — M6), so
-replaying a micro-batch converges to the same table state. This is testable:
-tests/test_streaming.py replays a batch twice and diffs the warehouse.
+replaying a micro-batch converges to the same table state. A dim commits
+only when the batch changes it, so a replayed epoch writes no dim version
+at all; only the fact, which stamps ``last_updated``, commits again. This is
+testable: tests/test_streaming.py replays a batch twice, diffs the
+warehouse and checks the version history of every table.
 
 Without Delta on the classpath, tables are versioned parquet directories
 (ParquetTable): each commit writes a new version dir then flips a pointer
@@ -46,7 +49,7 @@ from pyspark.sql import functions as F
 from ..functions.normalize import parse_flight_ts
 from ..operators.dedup import latest_per_key
 from ..operators.joins import resolve_dim_id, star_join
-from ..operators.merge import MergePolicy, insert_if_absent, merge_upsert
+from ..operators.merge import MergePolicy, merge_upsert
 from ..schemas import (
     DIM_AIRLINE_SCHEMA,
     DIM_AIRPORT_SCHEMA,
@@ -494,11 +497,32 @@ def _upsert_dim(table: ParquetTable, keyed: DataFrame, id_col: str) -> None:
     per key first, rows with neither code dropped (F7). The reference needs
     two code paths only because Postgres cannot ON CONFLICT a nullable
     unique column (load_warehouse.py:32-79); a keyed MERGE has no such
-    restriction, and the resulting table contents match (SURVEY.md §7.4.6)."""
+    restriction, and the resulting table contents match (SURVEY.md §7.4.6).
+
+    Like an ``ON CONFLICT`` that changes nothing, a batch that brings nothing
+    new commits nothing. One probe comes first: the source rows left-anti
+    joined to a broadcast of the dim, on the id and, per other column ``a``,
+    ``src.a IS NULL OR src.a = dim.a``. An empty probe means every source id
+    is in the dim and every non-NULL source value equals the dim's, so
+    ``COALESCE(new, old)`` would reproduce the dim exactly: the merge, the
+    rewrite, the pointer flip and the vacuum are skipped. Any other probe runs
+    the merge unchanged (a new id, a changed value, a late code backfilled
+    onto a NULL, or just an older in-batch row that differs)."""
     keyed = keyed.filter(F.col("iata").isNotNull() | F.col("icao").isNotNull())
+    dim = table.read()
+    unchanged = F.col(f"__src.{id_col}") == F.col(f"__dim.{id_col}")
+    for c in dim.columns:
+        if c != id_col:
+            src, old = F.col(f"__src.{c}"), F.col(f"__dim.{c}")
+            unchanged &= src.isNull() | (src == old)
+    changes = keyed.alias("__src").join(
+        F.broadcast(dim).alias("__dim"), unchanged, "left_anti"
+    )
+    if changes.isEmpty():
+        return
     per_key = latest_per_key(keyed, [id_col], ["ingest_time"]).drop("ingest_time")
     merged = merge_upsert(
-        table.read(),
+        dim,
         per_key,
         keys=[id_col],
         policies={},  # COALESCE(new, old) everywhere: never wipe with NULL
@@ -528,7 +552,13 @@ def warehouse_load(
     ``latest`` (one row per flight_key) feeds the airline and airport commits;
     ``with_aid`` (its airport, airline and route ids, resolved once against
     the committed dims) feeds both the route insert and the fact merge.
-    ``resolve_dim_id`` keeps one row per key, merge_upsert's precondition."""
+    ``resolve_dim_id`` keeps one row per key, merge_upsert's precondition.
+
+    Only the fact commits on every batch (it stamps ``last_updated``). The
+    airline and airport commit only when the batch changes them (see
+    ``_upsert_dim``), and the route only when the batch brings a route the
+    dim lacks; a commit that happens writes ``routes ∪ fresh``, which is
+    what ``insert_if_absent`` returns."""
     latest = latest_per_key(
         staging, ["flight_key"], ["ingest_time", F.col("dep_scheduled")]
     ).localCheckpoint(eager=True)
@@ -583,7 +613,10 @@ def warehouse_load(
         .select("route_id", "dep_airport_id", "arr_airport_id")
         .dropDuplicates()
     )
-    wh.route.overwrite(insert_if_absent(wh.route.read(), pairs, ["route_id"]))
+    routes = wh.route.read()
+    fresh = pairs.join(F.broadcast(routes.select("route_id")), "route_id", "left_anti")
+    if not fresh.isEmpty():
+        wh.route.overwrite(routes.unionByName(fresh))
 
     fact_src = with_aid.select(
         "flight_key",

@@ -9,6 +9,7 @@ claim (T3): replaying the same batch twice leaves the warehouse unchanged.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -224,27 +225,40 @@ def test_warehouse_load_m_semantics(spark, batch1, tmp_path):
     assert wh.airport.read().filter(F.col("icao") == "OMDB").count() == 1
 
 
+def _history(tbl) -> tuple[str, list[str]]:
+    """A versioned table's pointer file contents and its retained versions."""
+    with open(os.path.join(tbl.path, "_CURRENT")) as f:
+        return f.read(), tbl.versions()
+
+
 def test_replay_idempotency(spark, batch1, tmp_path):
-    """T3: at-least-once + idempotent keyed merge => exactly-once state."""
+    """T3: at-least-once + idempotent keyed merge => exactly-once state. The
+    replayed batch changes no dim, so it writes no dim version; the fact
+    commits once more (it stamps last_updated on every batch)."""
     wh = FlightWarehouse(spark, str(tmp_path / "wh"))
     staged = normalize_flight_stream(batch1, NOW)
     warehouse_load(wh, staged, "timestamp'2025-08-22 00:00:01'")
     snap1 = {t: sorted(map(str, tbl.read().collect()))
              for t, tbl in [("f", wh.fact), ("al", wh.airline),
                             ("ap", wh.airport), ("r", wh.route)]}
+    dims = {"al": wh.airline, "ap": wh.airport, "r": wh.route}
+    dim_hist1 = {t: _history(tbl) for t, tbl in dims.items()}
+    fact_versions1 = wh.fact.versions()
     # replay the SAME batch (same batch timestamp, as a checkpoint replay would)
     warehouse_load(wh, staged, "timestamp'2025-08-22 00:00:01'")
     snap2 = {t: sorted(map(str, tbl.read().collect()))
              for t, tbl in [("f", wh.fact), ("al", wh.airline),
                             ("ap", wh.airport), ("r", wh.route)]}
     assert snap1 == snap2
+    assert {t: _history(tbl) for t, tbl in dims.items()} == dim_hist1
+    current, fact_versions2 = _history(wh.fact)
+    assert fact_versions2[:-1] == fact_versions1
+    assert current == fact_versions2[-1] not in fact_versions1
 
 
 def test_streaming_shell_end_to_end(spark, batch1, tmp_path):
     """File-replay Structured Streaming -> foreachBatch -> warehouse; result
     must equal the batch-computed golden (§5 step 3)."""
-    import os
-
     records = [json.loads(r["j"]) for r in batch1.select(
         F.to_json(F.struct(*batch1.columns)).alias("j")).collect()]
     in_dir = tmp_path / "in"

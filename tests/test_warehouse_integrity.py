@@ -2,7 +2,9 @@
 duplicate fact rows (in the lookup operator and end to end), NULL merge keys
 must still match, ANSI-mode date parse must not abort the batch, versioned
 tables must not grow without bound, a crash between the per-table commits
-must converge on re-run, and the id lookups must stay broadcast.
+must converge on re-run, every kind of dim change must still commit while a
+batch that changes no dim writes no dim version, and the id lookups must
+stay broadcast.
 """
 
 from __future__ import annotations
@@ -231,6 +233,132 @@ def test_crash_between_commits_converges(
     restarted = FlightWarehouse(spark, root)
     _load(spark, restarted, _TWO_BATCHES[1])
     assert _snapshot(restarted) == clean_two_batch
+
+
+# Batch 1 of the dim-change cases: K1 HND -> PVG, K2 HND -> an ICAO-only
+# airport. Each case's batch 2 differs from it in one way only.
+_LATER = "2025-08-21T01:10:00+00:00"
+_T1, _T2 = "2025-08-22 00:00:01", "2025-08-22 00:00:02"
+_HND = ("Haneda", "HND", "RJTT")
+_PVG = ("Pudong", "PVG", "ZSPD")
+_DXB = ("Dubai", None, "OMDB")
+_NH = ("NH", "ANA", "All Nippon Airways")
+_BATCH_1 = [_rec("K1"), _rec("K2", arr=_DXB)]
+# K1 again with every non-key dim attribute NULL: nothing for COALESCE to take.
+_NULL_ATTRS = [_rec("K1", ingest=_LATER, airline=("NH", None, None),
+                    dep=(None, None, "RJTT"), arr=(None, None, "ZSPD"))]
+# Natural-key contents after batch 1: airline and airport (iata, icao, name),
+# route (dep icao, arr icao), curated view (key, airline iata and name, then
+# name, iata and icao of each airport, last_updated).
+_CONTENTS_1 = {k: sorted(v, key=repr) for k, v in {
+    "airline": [_NH],
+    "airport": [(None, "OMDB", "Dubai"), ("HND", "RJTT", "Haneda"), ("PVG", "ZSPD", "Pudong")],
+    "route": [("RJTT", "OMDB"), ("RJTT", "ZSPD")],
+    "curated_view": [
+        ("K1", "NH", "All Nippon Airways", *_HND, *_PVG, _T1),
+        ("K2", "NH", "All Nippon Airways", *_HND, *_DXB, _T1),
+    ],
+}.items()}
+
+
+def _contents(wh) -> dict[str, list[tuple]]:
+    """Every table's rows with surrogate ids replaced by natural keys, sorted;
+    the fact appears through the curated view."""
+    airport = wh.airport.read()
+    code = {r["airport_id"]: r["icao"] for r in airport.collect()}
+    view = curated_view(wh).select(
+        "flight_key", "airline_iata", "airline_name",
+        "dep_airport", "dep_iata", "dep_icao", "arr_airport", "arr_iata", "arr_icao",
+        F.date_format("last_updated", "yyyy-MM-dd HH:mm:ss"),
+    )
+    rows = {
+        "airline": [tuple(r) for r in wh.airline.read().drop("airline_id").collect()],
+        "airport": [tuple(r) for r in airport.drop("airport_id").collect()],
+        "route": [(code[r["dep_airport_id"]], code[r["arr_airport_id"]])
+                  for r in wh.route.read().collect()],
+        "curated_view": [tuple(r) for r in view.collect()],
+    }
+    return {k: sorted(v, key=repr) for k, v in rows.items()}
+
+
+def _with(contents: dict, table: str, drop=(), add=()) -> dict:
+    out = dict(contents)
+    out[table] = sorted([r for r in contents[table] if r not in drop] + list(add), key=repr)
+    return out
+
+
+def _view_row(key, airline, dep, arr, ts=_T2) -> tuple:
+    return (key, airline[0], airline[2], *dep, *arr, ts)
+
+
+@pytest.mark.parametrize(
+    "batch_2,expected",
+    [
+        (
+            [_rec("K3", airline=("JL", "JAL", "Japan Airlines"))],
+            _with(
+                _with(_CONTENTS_1, "airline", add=[("JL", "JAL", "Japan Airlines")]),
+                "curated_view", add=[_view_row("K3", ("JL", "JAL", "Japan Airlines"), _HND, _PVG)],
+            ),
+        ),
+        (
+            [_rec("K2", ingest=_LATER, arr=("Dubai", "DXB", "OMDB"))],
+            _with(
+                _with(_CONTENTS_1, "airport", drop=[(None, "OMDB", "Dubai")],
+                      add=[("DXB", "OMDB", "Dubai")]),
+                "curated_view", drop=[_CONTENTS_1["curated_view"][1]],
+                add=[_view_row("K2", _NH, _HND, ("Dubai", "DXB", "OMDB"))],
+            ),
+        ),
+        (
+            [_rec("K1", ingest=_LATER, airline=("NH", "ANA", "ANA Holdings"))],
+            _with(
+                _with(_CONTENTS_1, "airline", drop=[_NH], add=[("NH", "ANA", "ANA Holdings")]),
+                "curated_view", drop=_CONTENTS_1["curated_view"],
+                add=[_view_row("K1", ("NH", "ANA", "ANA Holdings"), _HND, _PVG),
+                     _view_row("K2", ("NH", "ANA", "ANA Holdings"), _HND, _DXB, _T1)],
+            ),
+        ),
+        (
+            [_rec("K3", dep=_PVG, arr=_HND)],
+            _with(
+                _with(_CONTENTS_1, "route", add=[("ZSPD", "RJTT")]),
+                "curated_view", add=[_view_row("K3", _NH, _PVG, _HND)],
+            ),
+        ),
+        (
+            _NULL_ATTRS,
+            _with(
+                _CONTENTS_1, "curated_view", drop=[_CONTENTS_1["curated_view"][0]],
+                add=[_view_row("K1", _NH, _HND, _PVG)],
+            ),
+        ),
+    ],
+    ids=["new_airline", "late_iata_backfill", "airline_renamed", "new_route",
+         "null_attributes"],
+)
+def test_every_dim_change_commits(spark, tmp_path, batch_2, expected):
+    """A batch that changes a dim in one way only still lands that change:
+    a new id, a late IATA backfilled onto an ICAO-only row, a new name, a new
+    route between known airports. A batch whose attributes are NULL where
+    the dim has values leaves the dims as they are (COALESCE(new, old))."""
+    wh = FlightWarehouse(spark, str(tmp_path / "wh"))
+    _load(spark, wh, (_BATCH_1, f"timestamp'{_T1}'"))
+    assert _contents(wh) == _CONTENTS_1
+    _load(spark, wh, (batch_2, f"timestamp'{_T2}'"))
+    assert _contents(wh) == expected
+
+
+def test_null_attributes_write_no_dim_version(spark, tmp_path):
+    """A batch that brings no new dim value writes no dim version: every
+    source row's id is in its dim and its attributes are NULL or equal."""
+    wh = FlightWarehouse(spark, str(tmp_path / "wh"))
+    _load(spark, wh, (_BATCH_1, f"timestamp'{_T1}'"))
+    dims = (wh.airline, wh.airport, wh.route)
+    before = [t.versions() for t in dims]
+    _load(spark, wh, (_NULL_ATTRS, f"timestamp'{_T2}'"))
+    assert [t.versions() for t in dims] == before
+    assert len(wh.fact.versions()) == 2
 
 
 def test_fact_merge_lookups_stay_broadcast(spark, tmp_path, monkeypatch, no_broadcast):
