@@ -30,49 +30,67 @@ from pyspark.sql import functions as F
 def _code_map(
     dim: DataFrame, code: str, id_col: str, other: str | None, key: str, val: str
 ) -> DataFrame:
-    """Broadcast ``key`` -> ``val`` map holding ONE dim id per code: prefer
-    the rows carrying the ``other`` code, then the smallest id. Two plain
-    mins, not ``min_by`` over a struct (which plans a SortAggregate).
-    Aliased inside the aggregate so ``code`` may be ``id_col`` itself."""
+    """``key`` -> ``val`` map holding ONE dim id per code: prefer the rows
+    carrying the ``other`` code, then the smallest id. Two plain mins, not
+    ``min_by`` over a struct (which plans a SortAggregate). Aliased inside
+    the aggregate so ``code`` may be ``id_col`` itself."""
     pick = F.min(id_col)
     if other is not None:
         pick = F.coalesce(F.min(F.when(F.col(other).isNotNull(), F.col(id_col))), pick)
-    return F.broadcast(
+    return (
         dim.filter(F.col(code).isNotNull())
         .groupBy(F.col(code).alias(key))
         .agg(pick.alias(val))
     )
 
 
+def dim_lookup_maps(
+    dim: DataFrame, dim_id_col: str, primary: str, fallback: str | None = None
+) -> tuple[DataFrame, DataFrame | None]:
+    """The lookup maps ``resolve_dim_id`` joins: by the dim's ``primary``
+    code column, and by its ``fallback`` code column (None without one).
+    A caller that resolves against one dim version many times builds them
+    once."""
+    prim = _code_map(dim, primary, dim_id_col, fallback, "_pk", "_pid")
+    if fallback is None:
+        return prim, None
+    return prim, _code_map(dim, fallback, dim_id_col, primary, "_fk", "_fid")
+
+
+def _broadcast_map(m: DataFrame) -> DataFrame:
+    """The hinted build side, re-projected under fresh column ids: the same
+    map joined twice into one plan (the dep and arr airports) must not
+    share attribute ids across the two joins."""
+    return F.broadcast(m.select(*(F.col(c).alias(c) for c in m.columns)))
+
+
 def resolve_dim_id(
     df: DataFrame,
-    dim: DataFrame,
+    maps: tuple[DataFrame, DataFrame | None],
     out_col: str,
-    dim_id_col: str,
-    primary: tuple[str, str],
-    fallback: tuple[str, str] | None = None,
+    primary: str,
+    fallback: str | None = None,
 ) -> DataFrame:
     """Attach ``out_col`` = dim id resolved by primary key, else fallback key.
 
-    primary/fallback are (source_col, dim_col) pairs; the fallback match
-    only applies to rows whose primary source column is NULL (the
-    reference's guard). Dim codes may repeat (an airport seen IATA-only,
-    then with an ICAO, is two rows sharing one IATA), so each broadcast
-    lookup map keeps one id per code: one output row per source row.
+    ``maps`` are the dim's ``dim_lookup_maps``; ``primary``/``fallback`` are
+    the source columns matched against them. The fallback match only
+    applies to rows whose primary source column is NULL (the reference's
+    guard). Dim codes may repeat (an airport seen IATA-only, then with an
+    ICAO, is two rows sharing one IATA), so each broadcast lookup map keeps
+    one id per code: one output row per source row.
     """
-    src_p, dim_p = primary
-    src_f, dim_f = fallback or (None, None)
-    prim = _code_map(dim, dim_p, dim_id_col, dim_f, "_pk", "_pid")
-    out = df.join(prim, df[src_p] == prim["_pk"], "left").drop("_pk")
+    prim = _broadcast_map(maps[0])
+    out = df.join(prim, df[primary] == prim["_pk"], "left").drop("_pk")
 
     if fallback is None:
         return out.withColumnRenamed("_pid", out_col)
 
-    fb = _code_map(dim, dim_f, dim_id_col, dim_p, "_fk", "_fid")
-    out = out.join(fb, out[src_f] == fb["_fk"], "left").drop("_fk")
+    fb = _broadcast_map(maps[1])
+    out = out.join(fb, out[fallback] == fb["_fk"], "left").drop("_fk")
 
     resolved = F.coalesce(
-        F.col("_pid"), F.when(F.col(src_p).isNull(), F.col("_fid"))
+        F.col("_pid"), F.when(F.col(primary).isNull(), F.col("_fid"))
     ).alias(out_col)
     return out.withColumn(out_col, resolved).drop("_pid", "_fid")
 

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..functions.normalize import on_time_label, parse_flight_ts
 from ..operators.dedup import distinct_pairs, latest_per_key
-from ..operators.joins import resolve_dim_id, star_join
+from ..operators.joins import dim_lookup_maps, resolve_dim_id, star_join
 from ..operators.merge import MergePolicy, insert_if_absent, merge_upsert
 from ..sources.parquet import load_table
 
@@ -559,11 +559,10 @@ def q_resolve_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     resolved = resolve_dim_id(
         src,
-        cust,
+        dim_lookup_maps(cust, "c_custkey", primary="c_custkey", fallback="c_custkey"),
         out_col="resolved_id",
-        dim_id_col="c_custkey",
-        primary=("primary_key", "c_custkey"),
-        fallback=("fallback_key", "c_custkey"),
+        primary="primary_key",
+        fallback="fallback_key",
     )
     return resolved.select("event_id", "primary_key", "fallback_key", "resolved_id")
 

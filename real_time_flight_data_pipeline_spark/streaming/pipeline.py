@@ -48,7 +48,7 @@ from pyspark.sql import functions as F
 
 from ..functions.normalize import parse_flight_ts
 from ..operators.dedup import latest_per_key
-from ..operators.joins import resolve_dim_id, star_join
+from ..operators.joins import dim_lookup_maps, resolve_dim_id, star_join
 from ..operators.merge import MergePolicy, merge_upsert
 from ..schemas import (
     DIM_AIRLINE_SCHEMA,
@@ -57,6 +57,7 @@ from ..schemas import (
     FACT_SCHEMA,
     FLIGHT_WIRE_SCHEMA,
 )
+from .localio import local_relation, replace_file
 
 KEEP_STATUSES = ("active", "landed", "arrived", "en-route", "enroute")
 RETENTION = "INTERVAL 3 DAYS"
@@ -210,7 +211,24 @@ class ParquetTable:
     newest N versions from the commit log, so a long-running stream cannot
     grow storage without bound, and the immediately-previous version always
     survives one cycle for in-flight readers that resolved the pointer
-    pre-flip."""
+    pre-flip. The log is trimmed to the kept versions once it holds
+    ``_LOG_SLACK`` lines more than that, so a commit reads a short log.
+
+    Crash model. A commit writes the version directory, appends its ``_LOG``
+    line, then flips ``_CURRENT`` (a regular file holding the version name)
+    with ``replace_file``. The flip is atomic under a process crash: a
+    reader or a restarted writer sees the old version or the new one, never
+    a partial write. The version's parquet files are not fsynced, so no
+    commit is durable across a power loss; the flush a plain rename used to
+    force gave the table no such guarantee either. What a power loss can
+    leave is a pointer of the right length that reads as zeros. A pointer
+    that names no version makes readers fall back to the newest logged
+    version still on disk, which is why the log itself is only appended to
+    (an append does not read back as zeros on ext4) or rewritten with an
+    fsync before its rename. If neither names a version while version
+    directories exist, reads and commits raise and delete nothing."""
+
+    _LOG_SLACK = 32  # log lines past the kept versions before a trim
 
     def __init__(self, spark: SparkSession, path: str, schema, keep_versions: int = 2):
         if keep_versions < 2:
@@ -232,28 +250,45 @@ class ParquetTable:
     def _current_version(self) -> str | None:
         try:
             with open(self._pointer) as f:
-                return f.read().strip() or None
+                v = f.read().strip()
         except FileNotFoundError:
             return None
+        if v.startswith("v_"):
+            return v
+        logged = self.versions()  # torn pointer: newest committed version
+        if logged:
+            return logged[-1]
+        if any(n.startswith("v_") for n in os.listdir(self.path)):
+            raise RuntimeError(
+                f"{self._pointer} names no version and {self._log} names none on "
+                "disk; the version directories are left in place"
+            )
+        return None
+
+    def _log_lines(self) -> list[str]:
+        try:
+            with open(self._log) as f:
+                return [line for line in f.read().splitlines() if line]
+        except FileNotFoundError:
+            return []
 
     def versions(self) -> list[str]:
         """Commit history, oldest first, restricted to still-on-disk dirs."""
-        try:
-            with open(self._log) as f:
-                logged = [line.split("\t")[0] for line in f.read().splitlines() if line]
-        except FileNotFoundError:
-            return []
+        logged = [line.split("\t")[0] for line in self._log_lines()]
         on_disk = {n for n in os.listdir(self.path) if n.startswith("v_")}
         return [v for v in logged if v in on_disk]
 
     def read(self, version: str | None = None) -> DataFrame:
-        v = version or self._current_version()
-        if v is None:
-            return self.spark.createDataFrame([], self.schema)
         if version is not None and version not in self.versions():
             raise ValueError(
                 f"version {version!r} not in retained history {self.versions()}"
             )
+        return self._read_at(version or self._current_version())
+
+    def _read_at(self, v: str | None) -> DataFrame:
+        """Version ``v``'s contents; ``None`` (no commit yet) reads empty."""
+        if v is None:
+            return self.spark.createDataFrame([], self.schema)
         return self._read_version(v)
 
     def _read_version(self, v: str) -> DataFrame:
@@ -271,19 +306,18 @@ class ParquetTable:
 
     def _version_meta(self, v: str) -> dict | None:
         try:
-            with open(self._log) as f:
-                for line in f.read().splitlines():
-                    parts = line.split("\t")
-                    if parts and parts[0] == v:
-                        if len(parts) <= 2 or not parts[2]:
-                            return None
-                        meta = json.loads(parts[2])
-                        # Valid JSON that is not an object (log corruption
-                        # or a future format change) must degrade to the
-                        # safe plain-parquet read, not crash callers that
-                        # .get() on it (ADVICE r9).
-                        return meta if isinstance(meta, dict) else None
-        except (FileNotFoundError, ValueError):
+            for line in self._log_lines():
+                parts = line.split("\t")
+                if parts[0] == v:
+                    if len(parts) <= 2 or not parts[2]:
+                        return None
+                    meta = json.loads(parts[2])
+                    # Valid JSON that is not an object (log corruption
+                    # or a future format change) must degrade to the
+                    # safe plain-parquet read, not crash callers that
+                    # .get() on it (ADVICE r9).
+                    return meta if isinstance(meta, dict) else None
+        except ValueError:
             pass
         return None
 
@@ -298,10 +332,10 @@ class ParquetTable:
             line += "\t" + json.dumps(meta, separators=(",", ":"))
         with open(self._log, "a") as f:
             f.write(line + "\n")
-        tmp = self._pointer + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(v)
-        os.replace(tmp, self._pointer)  # atomic pointer flip
+        # Atomic pointer flip without a forced flush: on ext4, auto_da_alloc
+        # made a plain write-then-rename over _CURRENT a 40-58 ms flush. A
+        # torn pointer falls back on the log line appended above.
+        replace_file(self._pointer, v)
         keep = set(self.versions()[-self.keep_versions :]) | {v}
         if prev is not None:
             keep.add(prev)
@@ -319,10 +353,25 @@ class ParquetTable:
 
     def _vacuum(self, keep: set[str]) -> None:
         """Drop superseded version dirs beyond the retention window so disk
-        use is bounded at ~keep_versions versions."""
+        use is bounded at ~keep_versions versions, and trim ``_LOG`` to the
+        kept versions' lines once it has grown ``_LOG_SLACK`` past them.
+
+        The trimmed log is fsynced before its rename (a 40 ms flush on
+        ext4): a flush-free rewrite could leave the log zero-filled by a
+        power loss, and the log is what a torn ``_CURRENT`` falls back on.
+        The slack pays that flush once per ``_LOG_SLACK`` commits."""
         for name in os.listdir(self.path):
             if name.startswith("v_") and name not in keep:
                 self._drop_version(name)
+        lines = self._log_lines()
+        if len(lines) <= len(keep) + self._LOG_SLACK:
+            return
+        tmp = self._log + ".tmp"
+        with open(tmp, "w") as f:
+            f.writelines(line + "\n" for line in lines if line.split("\t")[0] in keep)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, self._log)
 
     def _drop_version(self, v: str) -> None:
         shutil.rmtree(os.path.join(self.path, v), ignore_errors=True)
@@ -447,10 +496,15 @@ class BucketedParquetTable(ParquetTable):
 
 class FlightWarehouse:
     """dim_airline / dim_airport / dim_route / fact_flight_status
-    (reference db/00_warehous.sql:77-134) on versioned parquet."""
+    (reference db/00_warehous.sql:77-134) on versioned parquet.
+
+    It also holds what is derived from table versions and reused until one
+    of them is superseded: the id-lookup maps of each dim (``lookup_maps``)
+    and the ``curated_view`` plan."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
+        self._derived: dict[str, tuple[tuple[str | None, ...], object]] = {}
         self.airline = ParquetTable(spark, os.path.join(root, "dim_airline"), DIM_AIRLINE_SCHEMA)
         self.airport = ParquetTable(spark, os.path.join(root, "dim_airport"), DIM_AIRPORT_SCHEMA)
         self.route = ParquetTable(spark, os.path.join(root, "dim_route"), DIM_ROUTE_SCHEMA)
@@ -463,6 +517,43 @@ class FlightWarehouse:
             FACT_SCHEMA,
             bucket_key="flight_key",
             n_buckets=8,
+        )
+
+    def _per_version(self, name: str, tables: tuple[ParquetTable, ...], build):
+        """``build`` over ``tables`` read at their current versions, run once
+        per tuple of those versions and held under ``name`` until one of
+        them flips. Each table is read at the version in the key, so what is
+        held always matches its key."""
+        key = tuple(t._current_version() for t in tables)
+        held = self._derived.get(name)
+        if held is None or held[0] != key:
+            held = self._derived[name] = (
+                key, build(*(t._read_at(v) for t, v in zip(tables, key)))
+            )
+        return held[1]
+
+    def lookup_maps(self, dim: str) -> tuple[DataFrame, DataFrame]:
+        """``dim_lookup_maps`` (by IATA, by ICAO) of the current version of
+        dim ``dim`` (``"airline"`` or ``"airport"``) for ``resolve_dim_id``.
+        Built once per dim version, so a load that commits no dim version
+        re-aggregates nothing, and held as driver-local relations
+        (``local_relation``): nothing stays persisted on the executors, the
+        superseded version's maps go with the last reference to them, and
+        the dep and arr lookups still share one broadcast (an
+        ``InMemoryRelation`` would defeat that exchange reuse)."""
+
+        def build(table: DataFrame) -> tuple[DataFrame, DataFrame]:
+            maps = dim_lookup_maps(table, f"{dim}_id", "iata", "icao")
+            return tuple(local_relation(m, m._jdf.collectAsList()) for m in maps)
+
+        return self._per_version(dim, (getattr(self, dim),), build)
+
+    def curated_view(self) -> DataFrame:
+        """``curated_view``'s plan, built once per tuple of the four tables'
+        versions: a reader that polls between commits gets the plan it
+        already built."""
+        return self._per_version(
+            "view", (self.airline, self.airport, self.route, self.fact), _star_view
         )
 
 
@@ -551,7 +642,8 @@ def warehouse_load(
     is last_updated (injected in tests for determinism). Two eager barriers:
     ``latest`` (one row per flight_key) feeds the airline and airport commits;
     ``with_aid`` (its airport, airline and route ids, resolved once against
-    the committed dims) feeds both the route insert and the fact merge.
+    the committed dims through their per-version ``lookup_maps``) feeds both
+    the route insert and the fact merge.
     ``resolve_dim_id`` keeps one row per key, merge_upsert's precondition.
 
     Only the fact commits on every batch (it stamps ``last_updated``). The
@@ -581,23 +673,21 @@ def warehouse_load(
     )
 
     resolved = latest
-    dim_airport = wh.airport.read()
+    airport_maps = wh.lookup_maps("airport")
     for side in ("dep", "arr"):
         resolved = resolve_dim_id(
             resolved,
-            dim_airport,
+            airport_maps,
             out_col=f"{side}_airport_id",
-            dim_id_col="airport_id",
-            primary=(f"{side}_airport_iata", "iata"),
-            fallback=(f"{side}_airport_icao", "icao"),
+            primary=f"{side}_airport_iata",
+            fallback=f"{side}_airport_icao",
         )
     resolved = resolve_dim_id(
         resolved,
-        wh.airline.read(),
+        wh.lookup_maps("airline"),
         out_col="airline_id",
-        dim_id_col="airline_id",
-        primary=("airline_iata", "iata"),
-        fallback=("airline_icao", "icao"),
+        primary="airline_iata",
+        fallback="airline_icao",
     )
     with_aid = resolved.withColumn(
         "route_id",
@@ -657,8 +747,15 @@ def warehouse_load(
 
 
 def curated_view(wh: FlightWarehouse) -> DataFrame:
-    """J1: the 20-column denormalized export view (db/01_views.sql:44-83)."""
-    airport = wh.airport.read()
+    """J1: the 20-column denormalized export view (db/01_views.sql:44-83)
+    over the four tables' current versions (memoized by the warehouse)."""
+    return wh.curated_view()
+
+
+def _star_view(
+    airline: DataFrame, airport: DataFrame, route: DataFrame, fact: DataFrame
+) -> DataFrame:
+    """``curated_view`` over the given reads of the four tables."""
 
     def side(s: str) -> DataFrame:
         return airport.select(
@@ -668,14 +765,14 @@ def curated_view(wh: FlightWarehouse) -> DataFrame:
             F.col("icao").alias(f"{s}_icao"),
         )
 
-    airline = wh.airline.read().select(
+    airline = airline.select(
         "airline_id", F.col("iata").alias("airline_iata"), "airline_name"
     )
     return star_join(
-        wh.fact.read(),
+        fact,
         [
             (airline, "airline_id"),
-            (wh.route.read(), "route_id"),
+            (route, "route_id"),
             (side("dep"), "dep_airport_id"),
             (side("arr"), "arr_airport_id"),
         ],

@@ -19,16 +19,20 @@ explicit watermark state (the reference's Sheets-style sink).
 from __future__ import annotations
 
 import json
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .localio import local_relation, replace_file
+
 
 class WatermarkStore:
     """Single-value processing-time watermark, JSON file backed (the
-    1-row Delta table stand-in)."""
+    1-row Delta table stand-in). ``advance`` replaces the file the way a
+    ``ParquetTable`` flips its pointer: atomic under a process crash, no
+    forced flush (see ``replace_file``). A power loss can leave the file
+    zero-filled; ``read`` then raises rather than guess a watermark."""
 
     def __init__(self, path: str):
         self.path = path
@@ -43,10 +47,7 @@ class WatermarkStore:
     def advance(self, value: str) -> None:
         cur = self.read()
         new = max(cur, value) if cur is not None else value  # GREATEST guard (A3)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"last_sync_time": new}, f)
-        os.replace(tmp, self.path)
+        replace_file(self.path, json.dumps({"last_sync_time": new}))
 
 
 @dataclass
@@ -62,23 +63,26 @@ def next_export_batch(
     limit: int = 300,
 ) -> ExportBatch:
     """Strict-> watermark filter + ordered batch, tie-safe (never splits a
-    ``ts_col`` group across batches)."""
+    ``ts_col`` group across batches).
+
+    One pass over ``view``: the ``limit + 1`` oldest pending rows are
+    collected once (top-k plan; the (limit+1)-th tells whether the limit
+    would split a ts group) and the rows to ship are a prefix of them,
+    returned as a driver-local relation, so shipping re-runs no query. Only
+    a single group larger than the limit ships through a lazy filter."""
     wm = store.read()
     pending = view if wm is None else view.filter(F.col(ts_col) > F.lit(wm))
-    # Over-fetch one row: the (limit+1)-th value tells whether the limit
-    # would split a ts group (top-k plan; limit+1 rows reach the driver,
-    # same driver-side batch shape as the reference's export loop).
-    vals = [r[0] for r in pending.select(ts_col).orderBy(ts_col).limit(limit + 1).collect()]
+    jrows = pending.orderBy(ts_col).limit(limit + 1)._jdf.collectAsList()
+    head = local_relation(pending, jrows)
+    vals = [r[0] for r in head.select(ts_col).collect()]
     if not vals:
-        return ExportBatch(pending.limit(0), None)
+        return ExportBatch(head, None)
     if len(vals) <= limit:
-        return ExportBatch(pending, str(max(vals)))
+        return ExportBatch(head, str(max(vals)))
     boundary, overflow = vals[limit - 1], vals[limit]
     if overflow != boundary:
         # limit lands exactly between groups: ship all limit rows
-        return ExportBatch(
-            pending.filter(F.col(ts_col) <= F.lit(boundary)), str(boundary)
-        )
+        return ExportBatch(local_relation(pending, jrows.subList(0, limit)), str(boundary))
     prev = [v for v in vals[:limit] if v != boundary]
     if not prev:
         # a single group larger than the limit: ship it whole (progress
@@ -86,5 +90,5 @@ def next_export_batch(
         return ExportBatch(
             pending.filter(F.col(ts_col) <= F.lit(boundary)), str(boundary)
         )
-    new_wm = max(prev)
-    return ExportBatch(pending.filter(F.col(ts_col) <= F.lit(new_wm)), str(new_wm))
+    # the limit splits the last group: ship the complete groups before it
+    return ExportBatch(local_relation(pending, jrows.subList(0, len(prev))), str(max(prev)))

@@ -10,6 +10,14 @@ of ``--per-load`` files each through ``normalize_flight_stream`` and
 * per table: how many of the timed loads committed it, the median seconds
   and Spark jobs per commit (a job group is set around each
   ``FlightWarehouse`` instance's ``overwrite``);
+* the export poll, run after each load as ``flight_live``'s reader runs it
+  (``curated_view`` -> ``next_export_batch`` -> ``rows.collect()`` -> advance
+  the watermark) and once more right after: the median poll that shipped
+  rows and the median poll that found none, over the timed loads, and the
+  median Spark jobs per ``rows.collect()``. A load that touches more keys
+  than the 300-row export limit (the default 3 files per load do) ships
+  one ``last_updated`` group larger than the limit, which re-runs the view;
+  ``--per-load 1`` keeps each load's group under the limit;
 * md5 digests of the sorted rows of the four tables and of ``curated_view``
   (fact and view without ``last_updated``, which is a wall-clock stamp).
 
@@ -50,6 +58,12 @@ from real_time_flight_data_pipeline_spark.streaming.pipeline import (  # noqa: E
     normalize_flight_stream,
     warehouse_load,
 )
+from real_time_flight_data_pipeline_spark.streaming.watermark import (  # noqa: E402
+    WatermarkStore,
+    next_export_batch,
+)
+
+EXPORT_LIMIT = 300  # flight_live's export batch size
 
 TABLES = {"airline": "dim_airline", "airport": "dim_airport", "route": "dim_route",
           "fact": "fact_flight_status"}
@@ -107,12 +121,34 @@ def main(argv: list[str] | None = None) -> int:
             warehouse_load(wh, staged)
             return time.perf_counter() - t0
 
+        store = WatermarkStore(os.path.join(work, "export_watermark.json"))
+
+        def poll(i: int, tag: str) -> tuple[float, bool]:
+            """One export poll: seconds, and whether it shipped rows."""
+            sc.setJobGroup(f"poll{i}:{tag}", "export poll")
+            t0 = time.perf_counter()
+            batch = next_export_batch(curated_view(wh), store, limit=EXPORT_LIMIT)
+            if batch.new_watermark is not None:
+                sc.setJobGroup(f"poll{i}:{tag}:ship", "export ship")
+                batch.rows.collect()
+                store.advance(batch.new_watermark)
+            return time.perf_counter() - t0, batch.new_watermark is not None
+
         load(0, paths[:1])
+        poll(0, "a")
         times = []
+        polls: dict[bool, list[float]] = {True: [], False: []}
+        ship_groups = []
         for i in range(1, args.loads + 1):
             lo = 1 + (i - 1) * args.per_load
             times.append(load(i, paths[lo : lo + args.per_load]))
             print(f"load {i}: {times[-1]:.3f} s", flush=True)
+            for tag in ("a", "b"):  # after the load, then with nothing new
+                secs, shipped = poll(i, tag)
+                if i > args.skip:
+                    polls[shipped].append(secs)
+                    if shipped:
+                        ship_groups.append(f"poll{i}:{tag}:ship")
         sc.setJobGroup("digest", "row digests")
         digests = {
             "dim_airline": _digest(wh.airline.read()),
@@ -142,6 +178,13 @@ def main(argv: list[str] | None = None) -> int:
                       f"{secs:.3f} s and {jobs:g} jobs per commit")
             else:
                 print(f"  {name}: committed in 0 of {len(timed_loads)} loads")
+        for shipped, label in ((True, "with rows"), (False, "without rows")):
+            if polls[shipped]:
+                print(f"export poll {label}: median {statistics.median(polls[shipped]):.3f} s "
+                      f"over {len(polls[shipped])} polls")
+        if ship_groups:
+            print(f"  jobs per rows.collect(): "
+                  f"{statistics.median(n_jobs(g) for g in ship_groups):g}")
         for name, d in digests.items():
             print(f"md5 {name} {d}")
         spark.stop()

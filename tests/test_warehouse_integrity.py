@@ -16,7 +16,10 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from real_time_flight_data_pipeline_spark.operators.joins import resolve_dim_id
+from real_time_flight_data_pipeline_spark.operators.joins import (
+    dim_lookup_maps,
+    resolve_dim_id,
+)
 from real_time_flight_data_pipeline_spark.operators.merge import (
     MergePolicy,
     merge_upsert,
@@ -140,11 +143,14 @@ def test_parquet_table_vacuums_old_versions(spark, tmp_path):
     assert tbl.read().collect()[0]["x"] == 3
 
 
-_AIRPORT_LOOKUP = dict(
-    dim_id_col="airport_id", primary=("s_iata", "iata"), fallback=("s_icao", "icao")
+# (dim_lookup_maps arguments, resolve_dim_id source columns)
+_AIRPORT_LOOKUP = (
+    dict(dim_id_col="airport_id", primary="iata", fallback="icao"),
+    dict(primary="s_iata", fallback="s_icao"),
 )
-_CUSTKEY_LOOKUP = dict(
-    dim_id_col="c_custkey", primary=("pk", "c_custkey"), fallback=("fk", "c_custkey")
+_CUSTKEY_LOOKUP = (
+    dict(dim_id_col="c_custkey", primary="c_custkey", fallback="c_custkey"),
+    dict(primary="pk", fallback="fk"),
 )
 
 
@@ -184,7 +190,9 @@ def test_resolve_dim_id_keeps_source_grain(
     deterministic pick: the row carrying the other code, then smallest id."""
     dim = spark.createDataFrame(dim_rows, dim_schema)
     src = spark.createDataFrame(src_rows, src_schema)
-    out = resolve_dim_id(src, dim, out_col="rid", **lookup).select("sid", "rid").collect()
+    dim_cols, src_cols = lookup
+    maps = dim_lookup_maps(dim, **dim_cols)
+    out = resolve_dim_id(src, maps, out_col="rid", **src_cols).select("sid", "rid").collect()
     assert sorted(r["sid"] for r in out) == sorted(expected)  # no fan-out
     assert {r["sid"]: r["rid"] for r in out} == expected
 
@@ -382,3 +390,68 @@ def test_fact_merge_lookups_stay_broadcast(spark, tmp_path, monkeypatch, no_broa
     plan = resolved[-1]._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"BroadcastHashJoin", plan)) == 6, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
+def _count_map_builds(monkeypatch) -> list[tuple]:
+    """Spy on the lookup-map builder: one entry (dim id column) per build."""
+    built = []
+    real = pipeline.dim_lookup_maps
+
+    def spy(dim, dim_id_col, *args, **kwargs):
+        built.append(dim_id_col)
+        return real(dim, dim_id_col, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "dim_lookup_maps", spy)
+    return built
+
+
+def test_lookup_maps_built_once_per_dim_version(spark, tmp_path, monkeypatch):
+    """Loads that commit no dim version reuse the maps already built; a load
+    after a dim commit resolves against the new version's maps."""
+    built = _count_map_builds(monkeypatch)
+    wh = FlightWarehouse(spark, str(tmp_path / "wh"))
+    _load(spark, wh, (_BATCH_1, f"timestamp'{_T1}'"))
+    assert sorted(built) == ["airline_id", "airport_id"]
+    _load(spark, wh, (_NULL_ATTRS, f"timestamp'{_T2}'"))
+    _load(spark, wh, ([_rec("K1", ingest=_LATER)], "timestamp'2025-08-22 00:00:03'"))
+    assert sorted(built) == ["airline_id", "airport_id"]  # no dim commit: no rebuild
+
+    jl = ("JL", "JAL", "Japan Airlines")
+    _load(spark, wh, ([_rec("K3", airline=jl, arr=("Dubai", "DXB", "OMDB"))],
+                      "timestamp'2025-08-22 00:00:04'"))
+    assert sorted(built) == ["airline_id", "airline_id", "airport_id", "airport_id"]
+    for dim in ("airline", "airport"):
+        assert wh._derived[dim][0] == (getattr(wh, dim)._current_version(),)
+    k3 = wh.fact.read().filter(F.col("flight_key") == "K3").collect()[0]
+    jl_id = wh.airline.read().filter(F.col("iata") == "JL").collect()[0]["airline_id"]
+    assert k3["airline_id"] == jl_id
+    view = {r["flight_key"]: r for r in curated_view(wh).collect()}
+    assert view["K3"]["airline_name"] == "Japan Airlines"
+    assert (view["K3"]["arr_iata"], view["K3"]["arr_icao"]) == ("DXB", "OMDB")
+
+
+def test_superseded_lookup_maps_are_released(spark, tmp_path, monkeypatch):
+    """Over ten loads that each commit both dims, the warehouse holds only
+    the current version's maps, and none of them is persisted: they are
+    driver-local relations, so a superseded version leaves nothing cached
+    on the executors."""
+    built = _count_map_builds(monkeypatch)
+    wh = FlightWarehouse(spark, str(tmp_path / "wh"))
+    for i in range(10):
+        code = f"Q{i}"
+        _load(spark, wh, (
+            [_rec(f"K{i}", airline=(code, f"{code}X", f"Air {i}"),
+                  arr=(f"Port {i}", f"P{i}Q", f"ZP{i}Q"))],
+            f"timestamp'2025-08-22 00:00:{i + 1:02d}'",
+        ))
+        held = [m for dim in ("airline", "airport") for m in wh._derived[dim][1]]
+        assert len(held) == 4
+        for m in held:
+            assert not m.storageLevel.useMemory and not m.storageLevel.useDisk
+            assert "LocalRelation" in m._jdf.queryExecution().analyzed().toString()
+    assert len(built) == 20  # both dims committed in every load
+    for dim in ("airline", "airport"):
+        assert wh._derived[dim][0] == (getattr(wh, dim)._current_version(),)
+    fact = wh.fact.read().collect()
+    assert len(fact) == 10
+    assert all(r["airline_id"] is not None and r["route_id"] is not None for r in fact)
