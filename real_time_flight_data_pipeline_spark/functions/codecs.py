@@ -50,14 +50,6 @@ def _paeth_vec(a: np.ndarray, b: np.ndarray, c: np.ndarray) -> np.ndarray:
     return np.where((pa <= pb) & (pa <= pc), a, np.where(pb <= pc, b, c))
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
 def png_encode(pixels: np.ndarray, row_filters=None, idat_split: int = 64) -> bytes:
     """Encode an (h, w, 3) RGB or (h, w) grayscale uint8 array as a real
     non-interlaced 8-bit PNG: per-row filtering, one zlib DEFLATE stream, CRC-32 on every chunk.

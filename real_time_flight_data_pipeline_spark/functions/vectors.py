@@ -35,13 +35,3 @@ def cosine(a: Column, b: Column) -> Column:
     d = dot(a, b)
     n = norm(a) * norm(b)
     return F.when(n != 0, d / n)
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(_dbl(a), _dbl(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )

@@ -28,7 +28,7 @@ post task-end events carrying accumulator updates for the probed RDD, and
 if ``_release`` has already unpersisted it (letting the ContextCleaner
 unregister its accumulators) the DAGScheduler logs a benign-but-ugly
 "attempted to access non-existent accumulator" ERROR (observed in the r6
-bench tail during docs_lsh_recall). A full count completes only after
+bench tail during an LSH recall probe). A full count completes only after
 every task of the stage has finished, and deferring the unpersist until
 one MORE round's eager action has run means any straggler event is drained
 long before its accumulators disappear. The probe-side cost is nil: the

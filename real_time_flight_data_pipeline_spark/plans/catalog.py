@@ -30,7 +30,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.normalize import on_time_label, parse_flight_ts
+from ..functions.normalize import on_time_flag, on_time_label, parse_flight_ts
 from ..operators.dedup import distinct_pairs, latest_per_key
 from ..operators.joins import dim_lookup_maps, resolve_dim_id, star_join
 from ..operators.merge import MergePolicy, insert_if_absent, merge_upsert
@@ -57,14 +57,6 @@ class CatalogQuery:
 
 REGISTRY: dict[str, CatalogQuery] = {}
 
-# Retired from the driver rotation (r8): instrumentation twins whose
-# measurement value is banked. They no longer occupy one of the 150 driver
-# window-budget slots (test_driver_window.py pins ceil(N/50) <= 3), but they
-# remain fully oracle-verified by the local replica gate every session
-# (tests/test_retired.py runs the same compare at sf0.01) — retirement
-# changes WHO verifies them (pytest instead of the driver), not WHETHER.
-RETIRED_REGISTRY: dict[str, CatalogQuery] = {}
-
 
 def _register(
     name: str,
@@ -75,26 +67,6 @@ def _register(
 ):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         REGISTRY[name] = CatalogQuery(name, fn, oracle, description, reference, tags)
-        return fn
-
-    return deco
-
-
-def _register_retired(
-    name: str,
-    oracle: str | None,
-    description: str,
-    reference: str = "",
-    tags: tuple[str, ...] = (),
-):
-    """Same contract as _register, but into RETIRED_REGISTRY: the query is
-    excluded from queries()/oracle_sql() (and hence the driver's 50-slot
-    rotation window) while staying pytest-oracle-verified each session."""
-
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        RETIRED_REGISTRY[name] = CatalogQuery(
-            name, fn, oracle, description, reference, tags
-        )
         return fn
 
     return deco
@@ -273,9 +245,8 @@ def q_ingest_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ontime_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    flag = F.when(F.col("value") <= ONTIME_THRESHOLD, 1).otherwise(0)
     return ev.groupBy("event_type").agg(
-        (F.sum(flag).cast("double") / F.count("value")).alias("ontime_rate"),
+        F.avg(on_time_flag(F.col("value"), ONTIME_THRESHOLD)).alias("ontime_rate"),
         F.count(F.lit(1)).alias("n_events"),
     )
 

@@ -30,7 +30,7 @@ from ..operators.dedup import (
     jaccard_pairs,
     shingle_sets,
 )
-from .catalog import _register, _register_retired, _spread, _t
+from .catalog import _register, _spread, _t
 from .northstar import (
     _NEAR_CORPUS_SQL,
     _PACK_TOKENS,
@@ -550,6 +550,7 @@ def q_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 _KM_K = 8
 _KM_SCALE = 1_000_000
+_KM_NPROBE = 4  # IVF cells probed per query
 
 
 def _km_assign(e: DataFrame, cents: DataFrame) -> DataFrame:
@@ -599,8 +600,8 @@ def _km_load(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _km_trained_centroids(e: DataFrame) -> DataFrame:
     """One k-means update from the deterministic init: assign, then the
-    exact scaled-long mean — the trained codebook both q_kmeans_2iter and
-    the trained-IVF recall query consume."""
+    exact scaled-long mean — the trained codebook q_kmeans_2iter reassigns
+    against and the IVF-PQ queries use as their coarse quantizer."""
     c1 = e.filter(F.col("vec_id").between(0, _KM_K - 1)).select(
         F.col("vec_id").alias("cid"), F.col("x").alias("cv")
     )
@@ -674,157 +675,6 @@ def q_kmeans_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("vec_id").alias("member_id_sum"),
         )
         .orderBy("cid")
-    )
-
-
-# ===========================================================================
-# ANN quality measurement: recall@k of the IVF index vs the exact scan
-# ===========================================================================
-def _recall_oracle() -> str:
-    from .catalog import REGISTRY
-
-    exact = REGISTRY["embedding_topk_cosine"].oracle
-    ivf = REGISTRY["embedding_topk_ivf"].oracle
-    return f"""
-    WITH exact_topk AS ({exact}),
-    ivf_topk AS ({ivf})
-    SELECT CAST(10 AS INTEGER) AS k,
-           CAST(count(*) AS BIGINT) AS hits,
-           CAST(count(*) AS DOUBLE) / 10 AS recall_at_10
-    FROM exact_topk
-    WHERE vec_id IN (SELECT vec_id FROM ivf_topk)
-    """
-
-
-@_register_retired(
-    "embedding_ivf_recall",
-    _recall_oracle(),
-    "Measured (not guessed) ANN quality: recall@10 of the IVF index "
-    "against the exact scan for the same query — the number that decides "
-    "whether n_probe/K are tuned right before anyone trusts the "
-    "approximate path at scale. Composes the two existing top-k builders "
-    "and semi-joins their results; the oracle nests both queries' SQL "
-    "verbatim, so the metric is held to the same bit-determinism bar as "
-    "the queries it measures",
-    reference="[NORTH-STAR] ANN evaluation (recall@k, Jegou'11 methodology)",
-    tags=("similarity", "northstar"),
-)
-def q_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog import REGISTRY
-
-    exact = REGISTRY["embedding_topk_cosine"].builder(spark, sf_dir)
-    ivf = REGISTRY["embedding_topk_ivf"].builder(spark, sf_dir)
-    hits = exact.join(ivf.select("vec_id"), "vec_id", "semi")
-    return hits.agg(
-        F.lit(10).alias("k"),
-        F.count(F.lit(1)).alias("hits"),
-        (F.count(F.lit(1)).cast("double") / 10).alias("recall_at_10"),
-    )
-
-
-# ===========================================================================
-# Trained-codebook IVF recall: the k-means -> IVF integration, measured
-# ===========================================================================
-def _trained_recall_oracle() -> str:
-    from .catalog import REGISTRY
-
-    exact = REGISTRY["embedding_topk_cosine"].oracle
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS x FROM embeddings),
-    c1 AS (SELECT vec_id AS cid, x AS cv FROM e WHERE vec_id BETWEEN 0 AND {_KM_K - 1}),
-    a1 AS ({_km_sql_assign("e", "c1")}),
-    comp AS (
-      SELECT a1.cid, generate_subscripts(e.x, 1) AS pos, unnest(e.x) AS v
-      FROM e JOIN a1 USING (vec_id)
-    ),
-    sums AS (
-      SELECT cid, pos, SUM(CAST(round(v * {_KM_SCALE}) AS BIGINT)) AS s,
-             COUNT(*) AS n
-      FROM comp GROUP BY cid, pos
-    ),
-    c2 AS (
-      SELECT cid, list(CAST(s AS DOUBLE) / n / {_KM_SCALE} ORDER BY pos) AS cv
-      FROM sums GROUP BY cid
-    ),
-    cells AS ({_km_sql_assign("e", "c2")}),
-    qx AS (SELECT x AS qx FROM e WHERE vec_id = 0),
-    qc AS (
-      SELECT cid AS cell FROM (
-        SELECT c2.cid,
-               row_number() OVER (ORDER BY
-                 (list_dot_product(qx.qx, qx.qx) - 2*list_dot_product(qx.qx, c2.cv)
-                  + list_dot_product(c2.cv, c2.cv)), c2.cid) AS rn
-        FROM c2 CROSS JOIN qx) WHERE rn <= {_KM_NPROBE}
-    ),
-    ivf AS (
-      SELECT e.vec_id FROM e
-      JOIN cells ON e.vec_id = cells.vec_id AND cells.cid IN (SELECT cell FROM qc)
-      CROSS JOIN qx
-      ORDER BY round(list_dot_product(e.x, qx.qx)
-                     / (sqrt(list_dot_product(e.x, e.x))
-                        * sqrt(list_dot_product(qx.qx, qx.qx))), 6) DESC, e.vec_id
-      LIMIT 10
-    ),
-    exact_topk AS ({exact})
-    SELECT CAST(10 AS INTEGER) AS k,
-           CAST(count(*) AS BIGINT) AS hits,
-           CAST(count(*) AS DOUBLE) / 10 AS recall_at_10
-    FROM exact_topk WHERE vec_id IN (SELECT vec_id FROM ivf)
-    """
-
-
-_KM_NPROBE = 4
-
-
-@_register_retired(
-    "embedding_ivf_recall_trained",
-    _trained_recall_oracle(),
-    "The k-means -> IVF integration, measured: the trained codebook "
-    "(embedding_kmeans_2iter's exact centroid update) replaces the "
-    "training-free one, cells and probes move to the trained L2 space, "
-    "ranking stays exact cosine within the probed cells, and recall@10 is "
-    "computed against the exact scan — the before/after number for "
-    "codebook training (pair with embedding_ivf_recall). Same scale "
-    "shape: broadcast codebook, no corpus shuffle, bounded probes",
-    reference="[NORTH-STAR] IVF codebook training loop (Jegou'11); "
-    "composes embedding_kmeans_2iter + embedding_topk_cosine",
-    tags=("similarity", "northstar", "iterative"),
-)
-def q_ivf_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .catalog import REGISTRY
-
-    e = _km_load(spark, sf_dir)
-    c2 = _km_trained_centroids(e).localCheckpoint(eager=False)
-    cells = _km_assign(e, c2)
-    qx = e.filter(F.col("vec_id") == 0).select(F.col("x").alias("qx"))
-    d2 = (
-        V.dot(F.col("qx"), F.col("qx"))
-        - 2 * V.dot(F.col("qx"), F.col("cv"))
-        + V.dot(F.col("cv"), F.col("cv"))
-    )
-    qc = (
-        c2.join(F.broadcast(qx))
-        .select("cid", d2.alias("d"))
-        .orderBy("d", "cid")
-        .limit(_KM_NPROBE)
-        .select(F.col("cid").alias("cell"))
-    )
-    cand = (
-        e.join(cells.withColumnRenamed("cid", "cell"), "vec_id")
-        .join(F.broadcast(qc), "cell", "semi")
-        .join(F.broadcast(qx))
-    )
-    sim = F.round(V.cosine(F.col("x"), F.col("qx")), 6)
-    ivf10 = (
-        cand.select("vec_id", sim.alias("sim"))
-        .orderBy(F.desc("sim"), "vec_id")
-        .limit(10)
-    )
-    exact = REGISTRY["embedding_topk_cosine"].builder(spark, sf_dir)
-    return exact.join(ivf10.select("vec_id"), "vec_id", "semi").agg(
-        F.lit(10).alias("k"),
-        F.count(F.lit(1)).alias("hits"),
-        (F.count(F.lit(1)).cast("double") / 10).alias("recall_at_10"),
     )
 
 
@@ -2091,180 +1941,31 @@ def _curriculum_keyed(spark: SparkSession, docs: DataFrame) -> DataFrame:
 # stay O(corpus/K)); no all-pairs join exists anywhere in the plan.
 # ===========================================================================
 _SEM_TAU = 0.99
-# The cell count is DATA-DERIVED: K = max(16, ceil(sqrt(n)/2)). SemDeDup's
-# quadratic term is O(cell_size^2) per cell, so a pinned K collapses at
-# scale (K=8 put ~690 vectors per cell at sf0.1: ~1.9M pairwise dots,
-# 12.3 s benched; sqrt-K cut it to ~200k). sqrt scaling balances the
-# n*K assignment cost against the n*cell_size pair cost at O(n^1.5)
-# total — the best a flat (non-hierarchical) codebook can do; a two-level
-# IVF assignment is the documented upgrade to push toward O(n).
+# Floor of the DATA-DERIVED cell count. SemDeDup's quadratic term is
+# O(cell_size^2) per cell, so a pinned K collapses at scale (K=8 put ~690
+# vectors per cell at sf0.1: ~1.9M pairwise dots, 12.3 s benched); the
+# two-level codebook below grows K with n instead.
 _SEM_K_MIN = 16
 
 
-def _sem_oracle() -> str:
-    return f"""
-    WITH corpus AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-      UNION ALL
-      SELECT vec_id + 1000000 AS vec_id,
-             list_transform(embedding::DOUBLE[], x -> x * 1.01) AS v
-      FROM embeddings WHERE vec_id % 10 = 0
-    ),
-    normed AS (
-      SELECT vec_id, list_transform(v, x -> x / n) AS vn
-      FROM (SELECT *, sqrt(list_dot_product(v, v)) AS n FROM corpus)
-    ),
-    kv AS (
-      SELECT greatest({_SEM_K_MIN}, CAST(ceil(sqrt(count(*)) / 2) AS BIGINT)) AS k
-      FROM corpus
-    ),
-    cents AS (
-      SELECT vec_id AS cid, vn AS cv FROM normed CROSS JOIN kv
-      WHERE vec_id < kv.k
-    ),
-    assign AS (
-      SELECT vec_id, cid FROM (
-        SELECT e.vec_id, c.cid,
-               row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                 (list_dot_product(e.vn, e.vn) - 2*list_dot_product(e.vn, c.cv)
-                  + list_dot_product(c.cv, c.cv)), c.cid) AS rn
-        FROM normed e CROSS JOIN cents c) WHERE rn = 1
-    ),
-    cells AS (
-      SELECT a.vec_id, a.cid, n.vn
-      FROM assign a JOIN normed n ON n.vec_id = a.vec_id
-    ),
-    dups AS (
-      SELECT DISTINCT b.vec_id
-      FROM cells a JOIN cells b
-        ON a.cid = b.cid AND a.vec_id < b.vec_id
-      WHERE round(list_dot_product(a.vn, b.vn), 6) >= {_SEM_TAU}
-    )
-    SELECT c.vec_id, c.cid,
-           (c.vec_id IN (SELECT vec_id FROM dups)) AS is_dup
-    FROM cells c
-    """
-
-
-@_register_retired(
-    "embedding_semdedup",
-    _sem_oracle(),
-    "SemDeDup (Abbas'23): semantic near-duplicate removal with the "
-    "quadratic term bounded by CLUSTER blocking. Normalize once behind a "
-    "barrier, assign each vector to its nearest codebook cell (broadcast "
-    "codebook, argmin-L2 with cid tie-break — no corpus shuffle), then "
-    "self-join ONLY within a cell and mark the higher-id member of any "
-    f"pair with cosine >= {_SEM_TAU} as the duplicate to drop (lowest-id "
-    "representative survives, deterministic). The cell count is DATA-"
-    "DERIVED — K = max(16, ceil(sqrt(n)/2)) from a 1-row count broadcast "
-    "so cell size scales as sqrt(n) and total work as O(n^1.5) instead "
-    "of collapsing to O(n^2/K) under a pinned K (SemDeDup's own recipe: "
-    "K must track corpus size; embedding_semdedup_2level is the "
-    "MEASURED upgrade — a fine K=4*sqrt(n) codebook with hierarchical "
-    "assignment, 1.7x faster at the 10x point). Corpus is augmented with scale-"
-    "variant copies (x1.01 of every 10th vector) so the dup set is non-"
-    "trivial, same augmentation as embedding_near_dup_pairs. The cell "
-    "self-join shuffles on cid; the codebook stays a broadcast; the plan "
-    "never materializes O(n^2) candidates",
-    reference="[NORTH-STAR] semantic dedup (SemDeDup, Abbas et al. 2023); "
-    "composes the kmeans/IVF codebook machinery with the near-dup verify",
-    tags=("dedup", "similarity", "northstar"),
-)
-def q_embedding_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = _spread(spark, _t(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    corpus = emb.unionByName(
-        emb.filter(F.col("vec_id") % 10 == 0).select(
-            (F.col("vec_id") + 1000000).alias("vec_id"),
-            F.transform(F.col("v"), lambda x: x * 1.01).alias("v"),
-        )
-    )
-    # Normalize once; barrier so the K cell-distance expressions and both
-    # self-join sides reuse the normalized column instead of re-deriving it
-    # (same CollapseProject guard as embedding_near_dup_pairs).
-    # r16: |vn|^2 is materialized once per row inside the same barrier —
-    # inline it was re-folded for every (row, centroid) pair in the K-cell
-    # assignment below (guide §1.2), and the centroid side reuses the same
-    # stored value as its |cv|^2. Term order in d2 is unchanged, so the
-    # distances and the argmin are bit-identical.
-    normed = (
-        corpus.withColumn("n", V.norm(F.col("v")))
-        .select(
-            "vec_id",
-            F.transform(F.col("v"), lambda x: x / F.col("n")).alias("vn"),
-        )
-        .withColumn("_nn", V.dot(F.col("vn"), F.col("vn")))
-        .localCheckpoint(eager=False)
-    )
-    # K from the cached normed frame (same count as corpus) — deriving it
-    # from `corpus` would re-scan the parquet source per consumer (r7).
-    kdf = normed.agg(
-        F.greatest(
-            F.lit(_SEM_K_MIN),
-            F.ceil(F.sqrt(F.count(F.lit(1))) / 2).cast("long"),
-        ).alias("k")
-    )
-    cents = (
-        normed.join(F.broadcast(kdf))
-        .filter(F.col("vec_id") < F.col("k"))
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("vn").alias("cv"),
-            F.col("_nn").alias("_cc"),
-        )
-    )
-    d2 = (
-        F.col("_nn")
-        - 2 * V.dot(F.col("vn"), F.col("cv"))
-        + F.col("_cc")
-    )
-    # Assignment carries vn THROUGH the argmin aggregate (min_by of a
-    # (cid, vn) struct — vn is constant per vec_id, so the carried value
-    # is deterministic): the n*K broadcast-join explosion collapses
-    # map-side and the old join-back to normed (a second vec_id shuffle
-    # join) disappears entirely (r7, measured −25% on this query).
-    cells = (
-        normed.join(F.broadcast(cents))
-        .groupBy("vec_id")
-        .agg(
-            F.min_by(
-                F.struct(F.col("cid"), F.col("vn")),
-                F.struct(d2.alias("d"), F.col("cid").alias("c")),
-            ).alias("m")
-        )
-        .select("vec_id", F.col("m.cid").alias("cid"), F.col("m.vn").alias("vn"))
-        .localCheckpoint(eager=False)
-    )
-    # ^ lazy barrier: the cell table feeds both self-join sides and the
-    # final projection; it materializes once inside the final job and the
-    # self-join is a pure cid-key shuffle (same measured pattern as the
-    # LSH band table).
-    va = cells.select(F.col("vec_id").alias("a_id"), F.col("vn").alias("a_vn"))
-    vb = cells.select(F.col("vec_id").alias("b_id"), F.col("vn").alias("b_vn"))
-    dups = (
-        blocked_pairs(cells, "vec_id", ("cid",))
-        .join(va, "a_id")
-        .join(vb, "b_id")
-        .filter(F.round(V.dot(F.col("a_vn"), F.col("b_vn")), 6) >= _SEM_TAU)
-        .select(F.col("b_id").alias("vec_id"))
-        .dropDuplicates()
-    )
-    return cells.select("vec_id", "cid").join(
-        dups.withColumn("is_dup", F.lit(True)), "vec_id", "left"
-    ).select(
-        "vec_id", "cid", F.coalesce(F.col("is_dup"), F.lit(False)).alias("is_dup")
-    )
-
-
 # ===========================================================================
-# Product quantization + ADC recall (r6): the memory-bound half of IVF-PQ.
+# Product quantization + ADC recall: the memory-bound half of IVF-PQ.
 # Split each vector into M subspaces, quantize each subspace to a small
 # codebook, score candidates by Asymmetric Distance Computation — the sum
 # of precomputed query-to-centroid subspace distances — and measure
 # recall@10 against the exact L2 scan. Fixed-point (1e-6) subspace
 # distances make the ADC sum exact integer math, so ranking ties and the
 # recall number are bit-identical cross-engine.
+#
+# Real PQ training per Jegou'11 section V (r7): an INDEPENDENT k-means per
+# subquantizer — two assign/update rounds over each subspace's subvectors
+# (exact scaled-long component means, so the trained codebooks are
+# bit-identical cross-engine). Measured recall ladder at
+# sf0.01: 0.3 training-free -> 0.4 after one round -> 0.5 after two (the
+# same before/after discipline as the IVF 0.5 -> 0.9 trained pair). An
+# earlier r7 attempt that just SLICED the full-vector k-means centroids
+# into subspaces measured 0.3 — no better than training-free, which is
+# exactly why PQ trains per subquantizer.
 # ===========================================================================
 _PQ_M = 4          # subspaces
 _PQ_SUB = 16       # dims per subspace (64 / 4)
@@ -2272,181 +1973,6 @@ _PQ_K = 8          # codes per subspace codebook
 _PQ_SCALE = 1_000_000
 
 
-def _pq_oracle() -> str:
-    subs_rows = " UNION ALL ".join(
-        f"SELECT vec_id, {m} AS m, x[{m * _PQ_SUB + 1}:{(m + 1) * _PQ_SUB}] AS xs FROM e"
-        for m in range(_PQ_M)
-    )
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS x FROM embeddings),
-    subs AS ({subs_rows}),
-    cents AS (
-      SELECT m, vec_id AS c, xs AS cs FROM subs
-      WHERE vec_id BETWEEN 0 AND {_PQ_K - 1}
-    ),
-    qs AS (SELECT m, xs AS qsub FROM subs WHERE vec_id = 0),
-    centd AS (
-      SELECT c.m, c.c, c.cs,
-             CAST(round((list_dot_product(q.qsub, q.qsub)
-                         - 2*list_dot_product(q.qsub, c.cs)
-                         + list_dot_product(c.cs, c.cs)) * {_PQ_SCALE})
-                  AS BIGINT) AS qd_fp
-      FROM cents c JOIN qs q ON q.m = c.m
-    ),
-    assign AS (
-      SELECT vec_id, m, qd_fp FROM (
-        SELECT s.vec_id, s.m, cd.qd_fp,
-               row_number() OVER (PARTITION BY s.vec_id, s.m ORDER BY
-                 (list_dot_product(s.xs, s.xs) - 2*list_dot_product(s.xs, cd.cs)
-                  + list_dot_product(cd.cs, cd.cs)), cd.c) AS rn
-        FROM subs s JOIN centd cd ON cd.m = s.m) WHERE rn = 1
-    ),
-    adc AS (
-      SELECT vec_id, CAST(SUM(qd_fp) AS BIGINT) AS adc_fp
-      FROM assign GROUP BY vec_id
-    ),
-    pq10 AS (SELECT vec_id FROM adc ORDER BY adc_fp, vec_id LIMIT 10),
-    qfull AS (SELECT x AS qx FROM e WHERE vec_id = 0),
-    exact10 AS (
-      SELECT e.vec_id FROM e CROSS JOIN qfull
-      ORDER BY round(list_dot_product(e.x, e.x) - 2*list_dot_product(e.x, qx)
-                     + list_dot_product(qx, qx), 6), e.vec_id
-      LIMIT 10
-    )
-    SELECT CAST(10 AS INTEGER) AS k,
-           CAST(count(*) AS BIGINT) AS hits,
-           CAST(count(*) AS DOUBLE) / 10 AS recall_at_10
-    FROM exact10 WHERE vec_id IN (SELECT vec_id FROM pq10)
-    """
-
-
-@_register_retired(
-    "embedding_pq_adc_recall",
-    _pq_oracle(),
-    "RETIRED r12 (shortlist #3, freeing a rotation slot alongside "
-    "user_value_mad for embedding_index_ingest_dedup): the training-free "
-    "rung was scaffolding toward embedding_pq_adc_recall_trained, which "
-    "holds the ADC semantics in the active registry; the 0.3 recall "
-    "floor is banked below in test_retired.py and this query stays "
-    "oracle-verified each session. — "
-    f"Product quantization, measured: {_PQ_M}x{_PQ_SUB}-dim subspaces, "
-    f"{_PQ_K}-code training-free codebooks (low-id subvectors — "
-    "embedding_pq_adc_recall_trained is the measured trained twin, "
-    "0.3 -> 0.5 recall), ADC scoring, "
-    "and recall@10 against the exact L2 scan as the single output row. "
-    "ADC is the memory-bound web-scale ANN trick: each DB vector "
-    "collapses to M one-byte codes, the query precomputes an "
-    f"O({_PQ_M}x{_PQ_K}) distance table (broadcast, tiny), and scoring "
-    "is M table lookups + an integer sum — never touching raw vectors. "
-    "Subspace distances are fixed-pointed to 1e-6 BEFORE summing so the "
-    "ADC total is exact long arithmetic (no float accumulation order "
-    "hazard across the M partials), making rank ties — and therefore "
-    "recall — bit-identical cross-engine. At 100 TB: codes live with "
-    "the data (4 bytes/vector here vs 256 raw), the distance table "
-    "broadcasts, encode is one scan, and top-k is "
-    "TakeOrderedAndProject; pair with IVF cells for the full IVF-PQ",
-    reference="[NORTH-STAR] PQ/ADC (Jegou'11 'Product Quantization for "
-    "Nearest Neighbor Search'); completes the ANN ladder exact -> LSH -> "
-    "IVF -> trained-IVF -> PQ",
-    tags=("similarity", "northstar"),
-)
-def q_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _km_load(spark, sf_dir)
-    subs = e.select(
-        "vec_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(m).alias("m"),
-                        F.slice(F.col("x"), m * _PQ_SUB + 1, _PQ_SUB).alias("xs"),
-                    )
-                    for m in range(_PQ_M)
-                ]
-            )
-        ).alias("s"),
-    ).select("vec_id", "s.m", "s.xs")
-    cents = subs.filter(F.col("vec_id").between(0, _PQ_K - 1)).select(
-        "m", F.col("vec_id").alias("c"), F.col("xs").alias("cs")
-    )
-    qs = subs.filter(F.col("vec_id") == 0).select(
-        "m", F.col("xs").alias("qsub")
-    )
-    qd = (
-        V.dot(F.col("qsub"), F.col("qsub"))
-        - 2 * V.dot(F.col("qsub"), F.col("cs"))
-        + V.dot(F.col("cs"), F.col("cs"))
-    )
-    # r16: |cs|^2 hoisted into the (M x K)-row distance table and |xs|^2
-    # into the per-(vec, m) subvector row — the encode argmin below was
-    # re-evaluating both invariant dots per CANDIDATE PAIR (guide §1.2);
-    # ((xx - 2*x.c) + cc) is term-for-term the old expression, so every
-    # distance and the argmin are bit-identical.
-    centd = (
-        cents.join(F.broadcast(qs), "m")
-        .select(
-            "m",
-            "c",
-            "cs",
-            F.round(qd * _PQ_SCALE).cast("long").alias("qd_fp"),
-            V.dot(F.col("cs"), F.col("cs")).alias("_cc"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    subs_x = subs.withColumn("_xx", V.dot(F.col("xs"), F.col("xs")))
-    d2 = (
-        F.col("_xx")
-        - 2 * V.dot(F.col("xs"), F.col("cs"))
-        + F.col("_cc")
-    )
-    assign = (
-        subs_x.join(F.broadcast(centd), "m")
-        .groupBy("vec_id", "m")
-        .agg(
-            F.min_by(
-                "qd_fp", F.struct(d2.alias("d"), F.col("c").alias("c"))
-            ).alias("qd_fp")
-        )
-    )
-    adc = assign.groupBy("vec_id").agg(F.sum("qd_fp").alias("adc_fp"))
-    pq10 = adc.orderBy("adc_fp", "vec_id").limit(10).select("vec_id")
-    # r16: |qx|^2 hoisted into the 1-row broadcast (was re-evaluated per
-    # corpus row); same term order, bit-identical d.
-    qfull = e.filter(F.col("vec_id") == 0).select(
-        F.col("x").alias("qx"), V.dot(F.col("x"), F.col("x")).alias("_qq")
-    )
-    ed2 = (
-        V.dot(F.col("x"), F.col("x"))
-        - 2 * V.dot(F.col("x"), F.col("qx"))
-        + F.col("_qq")
-    )
-    exact10 = (
-        e.join(F.broadcast(qfull))
-        .select("vec_id", F.round(ed2, 6).alias("d"))
-        .orderBy("d", "vec_id")
-        .limit(10)
-        .select("vec_id")
-    )
-    return exact10.join(pq10, "vec_id", "semi").agg(
-        F.lit(10).alias("k"),
-        F.count(F.lit(1)).alias("hits"),
-        (F.count(F.lit(1)).cast("double") / 10).alias("recall_at_10"),
-    )
-
-
-# ===========================================================================
-# Trained-codebook PQ (r7, r6 verdict #7): the upgrade path the training-
-# free PQ query names, measured. Real PQ training per Jegou'11 section V:
-# an INDEPENDENT k-means per subquantizer — two assign/update rounds over
-# each subspace's subvectors (exact scaled-long component means, so the
-# trained codebooks are bit-identical cross-engine) — then the unchanged
-# ADC scoring + recall@10-vs-exact measurement. Measured recall ladder at
-# sf0.01: 0.3 training-free -> 0.4 after one round -> 0.5 after two (the
-# same before/after discipline as the IVF 0.5 -> 0.9 trained pair). An
-# earlier r7 attempt that just SLICED the full-vector k-means centroids
-# into subspaces measured 0.3 — no better than training-free, which is
-# exactly why PQ trains per subquantizer.
-# ===========================================================================
 def _pq_sql_sub_assign(src_c: str) -> str:
     """Per-(vec_id, m) argmin over a (m, c, cs) subspace codebook."""
     return f"""
@@ -2695,10 +2221,8 @@ def _pq_adc_scores(cand_subs: DataFrame, centd: DataFrame) -> DataFrame:
     "k-means per subquantizer (Jegou'11 section V) — two assign/update "
     "rounds over each subspace's subvectors, exact scaled-long "
     "component means so the trained codebooks are bit-identical "
-    "cross-engine — replaces the training-free low-id codebooks of "
-    "embedding_pq_adc_recall; ADC scoring and the recall@10-vs-exact "
-    "measurement are unchanged, so the pair isolates exactly what "
-    "codebook training buys. Measured ladder at sf0.01: 0.3 training-"
+    "cross-engine — in place of training-free low-id codebooks; ADC "
+    "scoring and recall@10 against the exact scan. Measured ladder at sf0.01: 0.3 training-"
     "free -> 0.4 (one round) -> 0.5 (two rounds); slicing the FULL-"
     "vector k-means centroids instead measured 0.3 — no gain, which is "
     "why PQ trains per subquantizer. Scale shape: each training round "
@@ -2706,8 +2230,7 @@ def _pq_adc_scores(cand_subs: DataFrame, centd: DataFrame) -> DataFrame:
     "corpus-sized), codebooks broadcast, encode is one scan, top-k is "
     "TakeOrderedAndProject",
     reference="[NORTH-STAR] PQ codebook training (Jegou'11 section V: "
-    "k-means per subquantizer); completes embedding_pq_adc_recall's "
-    "named upgrade path",
+    "k-means per subquantizer)",
     tags=("similarity", "northstar", "iterative"),
 )
 def q_pq_adc_recall_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3418,8 +2941,7 @@ def _sem2_oracle() -> str:
     "through the aggregate, so the whole two-level assignment costs ONE "
     "corpus shuffle; all small sides stay broadcasts",
     reference="[NORTH-STAR] hierarchical quantization routing (IVF "
-    "coarse quantizer, Jegou'11) applied to SemDeDup (Abbas'23); pairs "
-    "with embedding_semdedup as its measured scale twin",
+    "coarse quantizer, Jegou'11) applied to SemDeDup (Abbas'23)",
     tags=("dedup", "similarity", "northstar"),
 )
 def q_embedding_semdedup_2level(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4497,143 +4019,6 @@ def q_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# LSH candidate recall, measured (r6): the text-dedup twin of
-# embedding_ivf_recall. Banded MinHash (4 bands x 2 rows) is probabilistic
-# — at the 0.5 Jaccard verify threshold its candidate probability is
-# 1-(1-s^2)^4 ~= 0.68 at s=0.5, rising steeply with s — and this query
-# turns that formula into a measured number on the real corpus: exact
-# shingle-Jaccard ground truth over a doc SAMPLE (the measuring harness,
-# bounded O(sample x inverted-index matches)) vs the production LSH pair
-# set restricted to the same sample.
-# ===========================================================================
-_LSH_RECALL_SAMPLE_MOD = 29
-
-
-def _lsh_recall_oracle() -> str:
-    from .northstar import (
-        _NEAR_CORPUS_SQL,
-        _SQL_SHINGLES,
-        _SQL_TOKS,
-    )
-
-    return f"""
-    WITH corpus AS ({_NEAR_CORPUS_SQL}),
-    tok AS (SELECT doc_id, {_SQL_TOKS} AS toks FROM corpus),
-    shin AS (SELECT doc_id, list_distinct({_SQL_SHINGLES}) AS sh FROM tok),
-    sizes AS (SELECT doc_id, len(sh) AS n_sh FROM shin),
-    post AS (
-      SELECT doc_id, {_sql_md5_long('s')} AS gh
-      FROM (SELECT doc_id, unnest(sh) AS s FROM shin)
-    ),
-    sample_post AS (
-      SELECT doc_id, gh FROM post WHERE doc_id % {_LSH_RECALL_SAMPLE_MOD} = 0
-    ),
-    inter AS (
-      SELECT s.doc_id AS a_id, p.doc_id AS b_id, count(*) AS inter
-      FROM sample_post s JOIN post p
-        ON s.gh = p.gh AND s.doc_id < p.doc_id
-      GROUP BY 1, 2
-    ),
-    truth AS (
-      SELECT i.a_id, i.b_id
-      FROM inter i
-      JOIN sizes sa ON sa.doc_id = i.a_id
-      JOIN sizes sb ON sb.doc_id = i.b_id
-      WHERE CAST(i.inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.inter)
-              >= {JACCARD_THRESHOLD}
-    ),
-    lsh AS (
-      SELECT a_id, b_id FROM ({_near_dup_oracle()})
-      WHERE a_id % {_LSH_RECALL_SAMPLE_MOD} = 0
-    ),
-    hit AS (SELECT t.a_id, t.b_id FROM truth t
-            JOIN lsh l ON l.a_id = t.a_id AND l.b_id = t.b_id)
-    SELECT CAST((SELECT count(*) FROM truth) AS BIGINT) AS n_true,
-           CAST((SELECT count(*) FROM hit) AS BIGINT) AS n_found,
-           CASE WHEN (SELECT count(*) FROM truth) > 0 THEN
-             CAST((SELECT count(*) FROM hit) AS DOUBLE)
-               / (SELECT count(*) FROM truth)
-           END AS recall
-    """
-
-
-@_register_retired(
-    "docs_lsh_recall",
-    _lsh_recall_oracle(),
-    "Measured candidate recall of the banded MinHash-LSH dedup plan: "
-    "exact trigram-shingle Jaccard ground truth for a 1-in-"
-    f"{_LSH_RECALL_SAMPLE_MOD} doc sample (computed on the inverted "
-    "gram index — only pairs sharing a shingle are scored, never "
-    "all-pairs) against the production LSH pair set restricted to the "
-    "same sample anchors. The number quantifies the band/row trade "
-    "(P(candidate) = 1-(1-s^2)^4) exactly as embedding_ivf_recall does "
-    "for the ANN index; raising recall means more bands, costed by the "
-    "same bench. Exact integer counts, one final division",
-    reference="[NORTH-STAR] MMDS ch.3 S-curve; measured-recall pattern "
-    "as embedding_ivf_recall; pair plan as docs_near_dup_pairs",
-    tags=("dedup", "northstar", "measured"),
-)
-def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .northstar import _near_corpus
-
-    corpus = _spread(spark, _near_corpus(spark, sf_dir))
-    toks = corpus.select(
-        "doc_id", TX.tokens(F.col("text")).alias("toks")
-    ).localCheckpoint(eager=False)
-    shin = shingle_sets(toks)
-    sizes = shin.select("doc_id", F.size("sh").alias("n_sh"))
-    post = shin.select(
-        "doc_id", F.explode("sh").alias("s")
-    ).select("doc_id", TX.md5_long(F.col("s")).alias("gh"))
-    sample_post = post.filter(
-        F.col("doc_id") % _LSH_RECALL_SAMPLE_MOD == 0
-    ).withColumnsRenamed({"doc_id": "a_id"})
-    inter = (
-        sample_post.join(
-            post.withColumnsRenamed({"doc_id": "b_id"}), "gh"
-        )
-        .filter(F.col("a_id") < F.col("b_id"))
-        .groupBy("a_id", "b_id")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    truth = (
-        inter.join(
-            sizes.withColumnsRenamed({"doc_id": "a_id", "n_sh": "na"}), "a_id"
-        )
-        .join(
-            sizes.withColumnsRenamed({"doc_id": "b_id", "n_sh": "nb"}), "b_id"
-        )
-        .filter(
-            F.col("inter").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("inter"))
-            >= F.lit(JACCARD_THRESHOLD)
-        )
-        .select("a_id", "b_id")
-        .localCheckpoint(eager=False)
-    )
-    lsh = (
-        q_near_dup_pairs(spark, sf_dir)
-        .filter(F.col("a_id") % _LSH_RECALL_SAMPLE_MOD == 0)
-        .select("a_id", "b_id")
-    )
-    hit = truth.join(lsh, ["a_id", "b_id"], "left_semi")
-    n_true = truth.agg(F.count(F.lit(1)).alias("n_true")).withColumn(
-        "k", F.lit(1)
-    )
-    n_found = hit.agg(F.count(F.lit(1)).alias("n_found")).withColumn(
-        "k", F.lit(1)
-    )
-    return n_true.join(n_found, "k").select(
-        "n_true",
-        "n_found",
-        F.when(
-            F.col("n_true") > 0,
-            F.col("n_found").cast("double") / F.col("n_true"),
-        ).alias("recall"),
-    )
-
-
-# ===========================================================================
 # IVF x PQ (r8, r7 verdict #2): the production ANN composition the ladder
 # (exact -> LSH -> IVF -> trained-IVF -> PQ -> trained-PQ) builds toward.
 # The trained coarse quantizer routes the query to its nprobe nearest
@@ -4641,7 +4026,7 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # in those cells (IVFADC, Jegou'11 section III) — candidate scoring cost
 # drops from O(n) to ~O(n * nprobe / K) while both codebooks stay
 # broadcast-sized. Every stage reuses the measured components verbatim
-# (coarse codebook == embedding_ivf_recall_trained's, PQ codebooks ==
+# (coarse codebook == embedding_kmeans_2iter's, PQ codebooks ==
 # embedding_pq_adc_recall_trained's), so the recall ladder extends one
 # rung with nothing re-derived; tests/test_ivfpq.py banks recall@10 vs
 # the exact scan and vs flat trained-PQ at the same codebooks.
@@ -4736,7 +4121,7 @@ def _ivfpq_oracle() -> str:
     "trained-PQ at the same codebooks is banked in tests/test_ivfpq.py",
     reference="[NORTH-STAR] IVFADC (Jegou'11 'Product Quantization for "
     "Nearest Neighbor Search' section III); composes "
-    "embedding_ivf_recall_trained's coarse routing with "
+    "embedding_kmeans_2iter's coarse codebook with "
     "embedding_pq_adc_recall_trained's codebooks",
     tags=("similarity", "northstar", "iterative"),
 )
@@ -5949,9 +5334,7 @@ def q_docs_near_dup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Tombstone-aware ingest classification (banked r14, REGISTERED r15 when
-# its reserved slot opened — retirement of rfm_purchase_segments_approx
-# from the r12-green cohort, the pre-planned rotation in COVERAGE.md):
+# Tombstone-aware ingest classification (banked r14, registered r15):
 # the oracle-paired spec twin of CorpusStore ingest AGAINST A STORE WITH
 # LIVE TOMBSTONES (r14's delete support, streaming/corpus.delete_docs).
 # Classification is docs_ingest_dedup's with one change — the spec change

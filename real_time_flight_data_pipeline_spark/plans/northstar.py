@@ -30,7 +30,7 @@ from ..operators.dedup import (
     jaccard_pairs,
     shingle_sets,
 )
-from .catalog import _register, _register_retired, _spread, _t
+from .catalog import _register, _spread, _t
 
 # ---------------------------------------------------------------------------
 # Shared SQL fragments (DuckDB dialect)
@@ -722,8 +722,8 @@ def _simhash_df(docs: DataFrame) -> DataFrame:
 
     One md5 per token occurrence, then a single higher-order aggregate
     accumulating all 48 signed bit counters per document — no explode, no
-    shuffle amplification. Shared by the signature query (docs_simhash) and
-    the hamming-banded pair extraction (docs_simhash_near_dup_pairs).
+    shuffle amplification. The hamming-banded pair extraction
+    (docs_simhash_near_dup_pairs) blocks on these signatures.
     """
     hs = F.transform(
         TX.tokens(F.col("text")),
@@ -757,38 +757,6 @@ def _simhash_df(docs: DataFrame) -> DataFrame:
         lambda acc, x: acc + x,
     )
     return out.select("doc_id", packed.alias("simhash"))
-
-
-@_register_retired(
-    "docs_simhash",
-    f"""
-    WITH tok AS (
-      SELECT doc_id, unnest({_SQL_TOKS}) AS tok FROM documents
-    ),
-    h AS (
-      SELECT doc_id, ('0x' || substring(md5(tok), 1, 12))::BIGINT AS h FROM tok
-    ),
-    c AS (
-      SELECT doc_id, b.bit,
-             CASE WHEN (h // CAST(power(2, b.bit) AS BIGINT)) % 2 = 1
-                  THEN 1 ELSE -1 END AS contrib
-      FROM h CROSS JOIN (SELECT unnest(range(0, {_SIMHASH_BITS})) AS bit) b
-    ),
-    s AS (SELECT doc_id, bit, sum(contrib) AS s FROM c GROUP BY 1, 2)
-    SELECT doc_id,
-           CAST(sum(CASE WHEN s >= 0 THEN CAST(power(2, bit) AS BIGINT) ELSE 0 END) AS BIGINT) AS simhash
-    FROM s GROUP BY doc_id
-    """,
-    "48-bit SimHash: one md5 per token occurrence, then a per-document fold "
-    "accumulating the 48 signed bit counters in a single higher-order "
-    "expression — no explode, no shuffle amplification; per-doc cost only. "
-    "(The oracle states the same semantics relationally.) 48-bit hashes keep "
-    "floor(h / 2^b) exact in double math on every engine",
-    reference="[NORTH-STAR] SimHash (Charikar'02) without UDFs",
-    tags=("dedup", "northstar"),
-)
-def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _simhash_df(_spread(spark, _t(spark, sf_dir, "documents")))
 
 
 # ===========================================================================
@@ -1227,205 +1195,9 @@ def q_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Multimodal column plumbing (binary payloads + Pandas-UDF decode stub)
-# ===========================================================================
-_MM_SCHEMA = (
-    "doc_id long, byte_len int, width int, height int, channels int, format string"
-)
-
-
-def _decode_stub(batches):
-    """mapInPandas 'decoder': the real image decode (PIL/ffmpeg) is not in
-    this container, so metadata is derived deterministically from the md5 of
-    the payload bytes — the Arrow batch shape, binary column handling and
-    output schema are exactly what a real decoder would use."""
-    import hashlib
-
-    import pandas as pd
-
-    for pdf in batches:
-        raw = pdf["image_bytes"]
-        digests = [hashlib.md5(bytes(b)).hexdigest() for b in raw]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "byte_len": [len(bytes(b)) for b in raw],
-                "width": [64 + int(d[:4], 16) % 1856 for d in digests],
-                "height": [64 + int(d[4:8], 16) % 1016 for d in digests],
-                "channels": [3] * len(raw),
-                "format": [["png", "jpeg", "webp"][int(d[8], 16) % 3] for d in digests],
-            }
-        )
-
-
-@_register_retired(
-    "multimodal_decode_stub",
-    """
-    SELECT doc_id,
-           strlen(text) AS byte_len,
-           CAST(64 + (('0x' || substring(md5(text), 1, 4))::BIGINT % 1856) AS INTEGER) AS width,
-           CAST(64 + (('0x' || substring(md5(text), 5, 4))::BIGINT % 1016) AS INTEGER) AS height,
-           3 AS channels,
-           CASE (('0x' || substring(md5(text), 9, 1))::BIGINT % 3)
-             WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'webp' END AS format
-    FROM documents
-    """,
-    "Multimodal column plumbing: text re-encoded as an opaque binary "
-    "payload, decoded by an Arrow-batched mapInPandas stub into typed "
-    "metadata (the real PIL/ffmpeg decode is stubbed deterministically; "
-    "schema/partitioning/batch shape are production-real)",
-    reference="[NORTH-STAR] multimodal columns; decode stubbed per round-1 brief",
-    tags=("multimodal", "northstar", "pandas-udf"),
-)
-def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _spread(spark, _t(spark, sf_dir, "documents")).select(
-        "doc_id", F.encode("text", "UTF-8").alias("image_bytes")
-    )
-    return docs.mapInPandas(_decode_stub, schema=_MM_SCHEMA)
-
-
-# frame_indices is emitted as a comma-joined STRING, not array<int>: the
-# driver's correctness comparator pandas-factorizes every output column
-# before hashing, and list-valued cells are unhashable (CORRECTNESS_r02's
-# one red row). The scalar serialization is lossless (strictly increasing
-# ints) and keeps the query oracle-checkable end-to-end.
-_MM2_SCHEMA = (
-    "doc_id long, thumb_w int, thumb_h int, n_frames int, frame_indices string"
-)
-
-
-def _resize_framesample_stub(batches):
-    """mapInPandas resize + frame-sample stage: thumbnail geometry (256-wide,
-    aspect-preserving, integer-exact rounding) and strided frame sampling
-    (every 30th frame, capped at 8). Like the decode stub, pixel/codec work
-    is replaced by md5-derived deterministic arithmetic; the Arrow batch
-    shape and schema are production-real. The sampled indices leave the
-    stage comparator-safe as a comma-joined string (see _MM2_SCHEMA)."""
-    import hashlib
-
-    import pandas as pd
-
-    for pdf in batches:
-        raw = pdf["image_bytes"]
-        digests = [hashlib.md5(bytes(b)).hexdigest() for b in raw]
-        widths = [64 + int(d[:4], 16) % 1856 for d in digests]
-        heights = [64 + int(d[4:8], 16) % 1016 for d in digests]
-        n_frames = [1 + int(d[9:12], 16) % 300 for d in digests]
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "thumb_w": [256] * len(raw),
-                "thumb_h": [(h * 256 + w // 2) // w for w, h in zip(widths, heights)],
-                "n_frames": n_frames,
-                "frame_indices": [
-                    ",".join(str(i) for i in range(0, n, 30)[:8]) for n in n_frames
-                ],
-            }
-        )
-
-
-@_register_retired(
-    "multimodal_resize_framesample_stub",
-    """
-    WITH meta AS (
-      SELECT doc_id,
-             64 + (('0x' || substring(md5(text), 1, 4))::BIGINT % 1856) AS width,
-             64 + (('0x' || substring(md5(text), 5, 4))::BIGINT % 1016) AS height,
-             CAST(1 + (('0x' || substring(md5(text), 10, 3))::BIGINT % 300) AS INTEGER) AS n_frames
-      FROM documents
-    )
-    SELECT doc_id,
-           256 AS thumb_w,
-           CAST((height * 256 + width // 2) // width AS INTEGER) AS thumb_h,
-           n_frames,
-           array_to_string(list_transform(range(0, least((n_frames + 29) // 30, 8)),
-                                          i -> i * 30), ',') AS frame_indices
-    FROM meta
-    """,
-    "Multimodal stage 2: resize (aspect-preserving 256-wide thumbnail, "
-    "integer-exact geometry) + strided frame sampling (every 30th frame, "
-    "max 8) over opaque binary payloads via Arrow mapInPandas — the decode "
-    "arithmetic is deterministically stubbed (no PIL/ffmpeg in container); "
-    "sampled indices serialize to a comma-joined string for the comparator",
-    reference="[NORTH-STAR] multimodal feature-extract/resize/frame-sample plumbing",
-    tags=("multimodal", "northstar", "pandas-udf"),
-)
-def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _spread(spark, _t(spark, sf_dir, "documents")).select(
-        "doc_id", F.encode("text", "UTF-8").alias("image_bytes")
-    )
-    return docs.mapInPandas(_resize_framesample_stub, schema=_MM2_SCHEMA)
-
-
-# ===========================================================================
-# Batch top-k similarity join (multi-query top-k, EDBT'20/ICDE'21 flavor)
-# RETIRED r13 (shortlist #5, rotation-ceiling slot for docs_ingest_dedup):
-# the join-based brute-force baseline whose rung-0 contrast
-# embedding_topk_cosine already provides; stays oracle-verified every
-# session via tests/test_retired.py. Retired from the r10-green cohort
-# deliberately — a never-verified addition enters the driver window
-# immediately, so the oldest cohort must supply its slot to keep every
-# active query's staleness within the 3-round ceiling.
-# ===========================================================================
-@_register_retired(
-    "embedding_topk_join",
-    """
-    WITH corpus AS (
-      SELECT vec_id, list_transform(v, x -> x / n) AS vn
-      FROM (SELECT vec_id, embedding::DOUBLE[] AS v,
-                   sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS n
-            FROM embeddings)
-    ),
-    q AS (SELECT vec_id AS q_id, vn AS qn FROM corpus WHERE vec_id < 8),
-    sims AS (
-      SELECT q.q_id, c.vec_id AS n_id,
-             round(list_dot_product(q.qn, c.vn), 6) AS sim
-      FROM q JOIN corpus c ON c.vec_id != q.q_id
-    )
-    SELECT q_id, n_id, sim FROM (
-      SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id) AS rn
-      FROM sims
-    ) WHERE rn <= 5
-    """,
-    "Top-k similarity JOIN: k nearest corpus vectors for EVERY query in a "
-    "batch (8 queries x top-5). The query side broadcasts; per-query ranking "
-    "is a window over the blocked pair stream — the batch-mode complement "
-    "of the single-probe top-k",
-    reference="[NORTH-STAR] PAPERS.md: top-k similarity search EDBT'20/ICDE'21",
-    tags=("similarity", "northstar"),
-)
-def q_topk_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    emb = _spread(spark, _t(spark, sf_dir, "embeddings")).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    corpus = emb.withColumn("n", V.norm(F.col("v"))).select(
-        "vec_id", F.transform(F.col("v"), lambda x: x / F.col("n")).alias("vn")
-    ).localCheckpoint(eager=False)
-    q = corpus.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("vn").alias("qn")
-    )
-    sims = (
-        corpus.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("n_id"),
-            F.round(V.dot(F.col("qn"), F.col("vn")), 6).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), "n_id")
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("q_id", "n_id", "sim")
-    )
-
-
-# ===========================================================================
 # Multimodal audio: REAL binary decode (r6). PCM is codec-free — 16-bit
-# little-endian samples need numpy, not ffmpeg — so unlike the image/video
-# stubs above, this stage actually decodes its binary column and computes
+# little-endian samples need numpy, not ffmpeg — so this stage actually
+# decodes its binary column and computes
 # real signal features (per-frame energy, zero-crossing rate). The
 # payloads are synthesized from an integer pseudo-signal so the oracle
 # can recompute every feature exactly in SQL: the decode is real, the

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 from .catalog import (
     MERGE_SPLIT_LIT,
     _register,
-    _register_retired,
     _spread,
     _t,
 )
@@ -391,105 +390,6 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         q([F.desc("last_ts"), F.col("user_id")]).alias("r_q"),
         q([F.desc("freq"), F.col("user_id")]).alias("f_q"),
         q([F.desc("monetary"), F.col("user_id")]).alias("m_q"),
-    )
-
-
-_RFM_APPROX_ACC = 10_000  # percentile_approx accuracy: rank error <= n/acc
-_RFM_DIMS = ("recency", "frequency", "monetary")
-_RFM_PS = (0.25, 0.5, 0.75)
-
-
-# Retired r15 (pre-planned rotation, COVERAGE.md cohort math): the window
-# slot freed here is consumed by docs_tombstone_ingest (plans/llm_ext.py).
-# The sketch-vs-exact measurement this twin banked (GK boundaries within
-# n/10_000 rank error of ntile's) stays pinned by the oracle compare in
-# tests/test_retired.py every session.
-@_register_retired(
-    "rfm_purchase_segments_approx",
-    f"""
-    WITH agg AS (
-      SELECT user_id, max(ts) AS last_ts,
-             CAST(count(*) AS BIGINT) AS freq,
-             CAST(SUM(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100
-               AS monetary
-      FROM events WHERE event_type = 'purchase' GROUP BY user_id
-    ),
-    n AS (SELECT CAST(count(*) AS BIGINT) AS c FROM agg)
-    SELECT d.dim, CAST(d.p AS DOUBLE) AS p, n.c AS n_users, true AS cdf_ok
-    FROM n CROSS JOIN (VALUES
-      {", ".join(f"('{d}', {p})" for d in _RFM_DIMS for p in _RFM_PS)}
-    ) AS d(dim, p)
-    """,
-    "The approx-RFM scale fallback rfm_purchase_segments documents, as "
-    "code: quartile boundaries for recency/frequency/monetary come from "
-    "percentile_approx (Greenwald-Khanna sketch, map-combined — NO global "
-    "sort or single-partition window anywhere in the plan), and the engine "
-    "verifies each boundary's discrete-CDF invariant count(x<=b)/n >= p "
-    "and count(x<b)/n <= p within the sketch's documented rank error "
-    f"(n/{_RFM_APPROX_ACC}, plus 1 row of discreteness slack). The oracle "
-    "predicts the exact user count and cdf_ok=true per (dimension, "
-    "quantile) — the approx_distinct_users pattern: a sketch drifting "
-    "outside its own error bound fails the hash match. Bucket ASSIGNMENT "
-    "at 100 TB is then one broadcast join of the 1-row boundary table "
-    "against the user dimension — ntile's global sort never happens",
-    reference="SURVEY.md §2.11 (RFM segmentation — approx variant of "
-    "rfm_purchase_segments per round-5 verdict task 7)",
-    tags=("approx", "window"),
-)
-def q_rfm_segments_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_type") == "purchase")
-    m = ev.groupBy("user_id").agg(
-        F.unix_micros(F.max("ts")).alias("recency"),
-        F.count(F.lit(1)).cast("double").alias("frequency"),
-        (F.sum(F.round(F.col("value") * 100).cast("long")).cast("double") / 100).alias(
-            "monetary"
-        ),
-    )
-    ps = list(_RFM_PS)
-    bounds = m.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[
-            F.percentile_approx(d, ps, _RFM_APPROX_ACC).alias(f"{d}_b")
-            for d in _RFM_DIMS
-        ],
-    )
-    joined = m.crossJoin(F.broadcast(bounds))
-    counts = joined.agg(
-        F.first("n").alias("n"),
-        *[
-            cnt
-            for d in _RFM_DIMS
-            for i in range(len(ps))
-            for cnt in (
-                F.sum(
-                    (F.col(d) <= F.col(f"{d}_b")[i]).cast("long")
-                ).alias(f"le_{d}_{i}"),
-                F.sum(
-                    (F.col(d) < F.col(f"{d}_b")[i]).cast("long")
-                ).alias(f"lt_{d}_{i}"),
-            )
-        ],
-    )
-    # Rank-error band: sketch guarantees |rank(b) - p*n| <= n/accuracy; +1
-    # absorbs the discreteness of count-at-a-value.
-    eps = F.col("n") / _RFM_APPROX_ACC + 1
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(d).alias("dim"),
-                F.lit(p).alias("p"),
-                F.col("n").alias("n_users"),
-                (
-                    (F.col(f"le_{d}_{i}") >= p * F.col("n") - eps)
-                    & (F.col(f"lt_{d}_{i}") <= p * F.col("n") + eps)
-                ).alias("cdf_ok"),
-            )
-            for d in _RFM_DIMS
-            for i, p in enumerate(ps)
-        ]
-    )
-    return counts.select(F.explode(rows).alias("r")).select(
-        "r.dim", "r.p", "r.n_users", "r.cdf_ok"
     )
 
 
@@ -1076,69 +976,8 @@ def q_daily_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Grouped Arrow UDF (applyInPandas) with a true value oracle
+# Per-user median + median absolute deviation from built-in expressions
 # ===========================================================================
-def _mad_fn(pdf):
-    """Per-user robust stats on integer cents: median + median absolute
-    deviation. All intermediates are ints or exact binary halves/quarters,
-    so pandas' interpolating median and DuckDB's quantile_cont agree
-    bit-for-bit — the trick that makes a Python-side grouped operator
-    oracle-checkable at all."""
-    import pandas as pd
-
-    cents = pdf["cents"]
-    med = cents.median()
-    mad = (cents - med).abs().median()
-    return pd.DataFrame(
-        {
-            "user_id": [pdf["user_id"].iloc[0]],
-            "n": [len(pdf)],
-            "median_value": [med / 100],
-            "mad_value": [mad / 100],
-        }
-    )
-
-
-@_register_retired(
-    "user_value_mad",
-    """
-    WITH c AS (
-      SELECT user_id, CAST(round(value * 100) AS BIGINT) AS cents FROM events
-    ),
-    m AS (SELECT user_id, COUNT(*) AS n, median(cents) AS med
-          FROM c GROUP BY user_id),
-    d AS (SELECT c.user_id, abs(c.cents - m.med) AS adev
-          FROM c JOIN m USING (user_id))
-    SELECT m.user_id, m.n,
-           m.med / 100 AS median_value,
-           a.mad / 100 AS mad_value
-    FROM m JOIN (SELECT user_id, median(adev) AS mad FROM d GROUP BY user_id) a
-      USING (user_id)
-    """,
-    "Per-user median + median-absolute-deviation via a grouped Arrow UDF "
-    "(groupBy().applyInPandas): the escape hatch for group-wise logic the "
-    "expression language can't state, done scale-correctly — one shuffle "
-    "on the group key, Arrow batches per group, no driver collect. Exact "
-    "cross-engine because all inputs are integer cents (medians land on "
-    "exact binary halves). The oracle computes the same two-level median "
-    "relationally. RETIRED r12 (shortlist #1, freeing the rotation slot "
-    "for embedding_index_ingest_dedup): the expression-composed twin "
-    "user_value_mad_native holds the semantics in the active registry, "
-    "the UDF-vs-builtin measurement is banked in test_udtf.py, and this "
-    "query stays oracle-verified each session via test_retired.py",
-    reference="[NORTH-STAR] grouped custom operator tier (mapInPandas "
-    "covers per-row in multimodal_*; this covers per-group)",
-    tags=("pandas-udf", "window"),
-)
-def q_user_value_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events").select(
-        "user_id", F.round(F.col("value") * 100).cast("long").alias("cents")
-    )
-    return ev.groupBy("user_id").applyInPandas(
-        _mad_fn, schema="user_id long, n long, median_value double, mad_value double"
-    )
-
-
 @_register(
     "user_value_mad_native",
     """
@@ -1155,14 +994,13 @@ def q_user_value_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM m JOIN (SELECT user_id, median(adev) AS mad FROM d GROUP BY user_id) a
       USING (user_id)
     """,
-    "Built-in twin of user_value_mad: two exact percentile(_, 0.5) passes "
-    "over integer cents (median pass, then median of absolute deviations), "
-    "all JVM-side — no Python worker, no Arrow transfer. Exact cross-engine "
-    "because integer-cent medians land on exact binary halves. Paired with "
-    "the grouped-Arrow-UDF version in the bench so the UDF-vs-builtin trade "
-    "is a measured number, not folklore",
-    reference="[NORTH-STAR] grouped custom operator tier — native comparison "
-    "twin of user_value_mad",
+    "Per-user median + median absolute deviation: two exact "
+    "percentile(_, 0.5) statistics over integer cents (median, then median "
+    "of absolute deviations), all JVM-side — no Python worker, no Arrow "
+    "transfer; measured 3.0x faster than a grouped Arrow UDF at sf0.1. "
+    "Exact cross-engine because integer-cent medians land on exact binary "
+    "halves",
+    reference="[NORTH-STAR] grouped custom operator tier, built-in form",
     tags=("window", "A6"),
 )
 def q_user_value_mad_native(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,10 +20,7 @@ import time
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
-from real_time_flight_data_pipeline_spark.plans.catalog import (  # noqa: E402
-    REGISTRY,
-    RETIRED_REGISTRY,
-)
+from real_time_flight_data_pipeline_spark.plans.catalog import REGISTRY  # noqa: E402
 from real_time_flight_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
@@ -59,10 +56,8 @@ def main() -> None:
                 "overwrite"
             ).save()
 
-    reg = dict(RETIRED_REGISTRY)
-    reg.update(REGISTRY)
     for name in names:
-        q = reg[name]
+        q = REGISTRY[name]
         spark.sparkContext.setJobDescription(f"probe:{name}")
         # one untimed warm run
         q.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()

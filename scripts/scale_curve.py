@@ -52,16 +52,9 @@ sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 
-from real_time_flight_data_pipeline_spark.plans.catalog import (
-    REGISTRY,
-    RETIRED_REGISTRY,
-)
+from real_time_flight_data_pipeline_spark.plans.catalog import REGISTRY
 from real_time_flight_data_pipeline_spark.session import get_spark
 from real_time_flight_data_pipeline_spark.sources.parquet import load_table
-
-# embedding_semdedup retired from the driver rotation in r8 but stays the
-# measured flat baseline of the 2-level variant on this curve.
-_LOOKUP = {**RETIRED_REGISTRY, **REGISTRY}
 
 BASE = "/root/testdata/sf0.1"
 WORK = pathlib.Path("/tmp/flightframe_scale")
@@ -75,13 +68,10 @@ QUERIES = [
     # right stress for the bigram join and the sketch's candidate sets.
     "docs_bigram_plausibility",
     "docs_token_heavy_hitters",
-    # r6b: the two new heavy corpus passes. embedding_semdedup's data-
-    # derived K = ceil(sqrt(n)/2) predicts alpha ~ 1.5 (the flat-codebook
-    # bound); docs_bpe_top_merges should track the token stream ~linearly.
-    "embedding_semdedup",
-    # r7 (r6 verdict #1): the hierarchical-assignment variant must be ON
-    # the curve — its whole reason to exist is winning at scale, so the
-    # 1x/10x pair is the number that decides flat-vs-2level, not a guess.
+    # r7 (r6 verdict #1): the hierarchical-assignment SemDeDup must be ON
+    # the curve — its whole reason to exist is winning at scale (the flat
+    # codebook's banked alpha is 0.65 in scale_curve_results.json);
+    # docs_bpe_top_merges should track the token stream ~linearly.
     "embedding_semdedup_2level",
     "docs_bpe_top_merges",
     # r7: the encode-apply twin — same training rounds plus the per-doc
@@ -116,7 +106,6 @@ N_RUNS = 3
 # Only these four — the flat tier's cheap queries would measure overhead.
 QUERIES_100X = [
     "docs_bigram_plausibility",   # alpha 0.68 at 10x
-    "embedding_semdedup",          # alpha 0.65 (flat codebook, O(n^1.5) model)
     "embedding_semdedup_2level",   # alpha 0.53 (the production regime)
     "docs_curation_funnel",        # alpha 0.42 (bounds the whole pipeline)
     # r8: watchdog-timeout at the first 100x smoke (fixed bucket count ->
@@ -130,7 +119,7 @@ QUERIES_100X = [
     "docs_winnow_fingerprints",
     "docs_minhash_signatures",
 ]
-N_RUNS_100X = 2  # flat semdedup is O(n^1.5): minutes per run at 100x
+N_RUNS_100X = 2  # the heaviest queries take minutes per run at 100x
 
 
 def build_corpus_100x(spark) -> None:
@@ -259,13 +248,13 @@ def run_100x_tier(spark, out: pathlib.Path, run_list: list[str]) -> None:
         sys.exit(f"run the 1x/10x sweep first for {missing}")
     build_corpus_100x(spark)
     for name in run_list:
-        _LOOKUP[name].builder(spark, BASE).write.format(
+        REGISTRY[name].builder(spark, BASE).write.format(
             "noop"
         ).mode("overwrite").save()  # codegen warmup (BASE == the 1x corpus)
         runs = []
         for _ in range(N_RUNS_100X):
             t0 = time.perf_counter()
-            _LOOKUP[name].builder(spark, str(WORK / "sf100x")).write.format(
+            REGISTRY[name].builder(spark, str(WORK / "sf100x")).write.format(
                 "noop"
             ).mode("overwrite").save()
             runs.append(time.perf_counter() - t0)
@@ -370,7 +359,7 @@ def main() -> None:
     build_corpora(spark)
     # Warmup (codegen/classloading) on the small corpus.
     for name in run_list:
-        _LOOKUP[name].builder(spark, str(WORK / "sf1x")).write.format(
+        REGISTRY[name].builder(spark, str(WORK / "sf1x")).write.format(
             "noop"
         ).mode("overwrite").save()
     out = pathlib.Path(__file__).resolve().parent / "scale_curve_results.json"
@@ -383,7 +372,7 @@ def main() -> None:
             runs = []
             for _ in range(N_RUNS):
                 t0 = time.perf_counter()
-                _LOOKUP[name].builder(spark, str(WORK / tag)).write.format(
+                REGISTRY[name].builder(spark, str(WORK / tag)).write.format(
                     "noop"
                 ).mode("overwrite").save()
                 runs.append(time.perf_counter() - t0)

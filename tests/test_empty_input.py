@@ -22,14 +22,10 @@ from real_time_flight_data_pipeline_spark.sources.parquet import load_table
 
 from .conftest import SF_SMOKE
 
-# Data-as-query-argument convenience lookups; see module docstring. The
-# two recall queries compose embedding_topk_cosine and inherit its seed
-# lookup.
+# Data-as-query-argument convenience lookups; see module docstring.
 _NEEDS_SEED_ROW = {
     "embedding_topk_cosine",
     "embedding_topk_lsh",
-    "embedding_ivf_recall",
-    "embedding_ivf_recall_trained",
 }
 
 

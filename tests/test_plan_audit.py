@@ -22,19 +22,13 @@ _BNLJ_ALLOWED = {
     "scalar_subquery_watermark",
     "docs_tfidf_top_terms",
     "embedding_kmeans_2iter",
-    "embedding_ivf_recall",  # composes embedding_topk_ivf, inherits its plan
-    "embedding_ivf_recall_trained",  # composes k-means + IVF, same bounded sides
     "docs_mix_weights",  # 1-row grand-total broadcast cross join (scalar subquery)
-    # (rfm_purchase_segments_approx retired r15 — its 1-row percentile-
-    # boundary allowlist entry moved to test_retired.py with its gating.)
     "docs_token_heavy_hitters",  # 1-row stream-total broadcast cross join
     "events_hourly_gapfill",  # 1-row hour-bounds broadcast cross join (spine)
     "events_hourly_anomalies",  # same 1-row hour-bounds spine broadcast
     "docs_weighted_sample",  # 1-row grand-total broadcast (mix-weight chain)
     "docs_training_order",  # same 1-row grand-total broadcast (mix-weight chain)
     "idle_rich_customer_segments",  # 1-row avg-balance scalar broadcast cross join
-    # (embedding_pq_adc_recall retired r12 — its allowlist entry moved to
-    # test_retired.py with the rest of its gating.)
     "embedding_pq_adc_recall_trained",  # 1-row query-vector broadcast
     # (exact-scan baseline side)
     "docs_bpe_top_merges",  # 1-row top-merge-pair + tokens-after broadcasts per round
@@ -42,7 +36,6 @@ _BNLJ_ALLOWED = {
     "segment_distinct_users_hll",  # 1-row merged-sketch x 1-row grand-total
     # broadcast join (the lit-key equi join constant-folds to a BNLJ of two
     # single-row aggregates — bounded by construction)
-    "docs_lsh_recall",  # same shape: 1-row truth-count x 1-row hit-count
     "events_value_equidepth_hist",  # 1-row quartile-boundary broadcast
     "embedding_ivfpq_topk",  # 1-row query-vector + nprobe-row probe-list broadcasts
     # (embedding_incremental_index left the list when its routing moved to
@@ -77,8 +70,7 @@ def test_no_pathological_joins(built_query, name):
 # over the raw fact table), and only for the documented cases below.
 # --------------------------------------------------------------------------
 _GLOBAL_WINDOW_ALLOWED = {
-    # ntile quartiles post-aggregation over O(purchasing users); the
-    # sort-free scale path is rfm_purchase_segments_approx.
+    # ntile quartiles post-aggregation over O(purchasing users).
     "rfm_purchase_segments",
     # 12-step lag post-aggregation over O(months) rows (~80 at any SF).
     "lineitem_monthly_revenue_yoy",

@@ -1,49 +1,30 @@
-"""Catalog queries banked ahead of their registration window (COVERAGE.md
-"Next catalog addition") and the semantics pinned at banking time.
+"""Catalog queries banked ahead of their registration (COVERAGE.md "Next
+catalog addition") and the semantics pinned at banking time.
 
-`docs_near_dup_ingest` was banked in r13 and registered in r14;
-`docs_tombstone_ingest` was banked in r14 and registered in r15 — each
-when its reserved slot opened (retiring `embedding_topk_join` and
-`rfm_purchase_segments_approx` respectively, always from the due green
-cohort). Once registered, a query's oracle match is covered by the
-registry-wide gate (tests/test_oracle.py); what stays here is the
-planted-status contract each was banked with, so the accept-classification
-semantics can't drift under later refactors.
-
-`docs_curated_ingest` was banked in r15 and registered in r16 (retiring
-`docs_simhash` from the r13-green cohort, per the pre-plan): the
+`docs_near_dup_ingest`, `docs_tombstone_ingest` and `docs_curated_ingest`
+are registered: their oracle match is covered by the registry-wide gate
+(tests/test_oracle.py), and what stays here is the planted-status
+contract each was banked with, so the accept-classification semantics
+can't drift under later refactors. `docs_curated_ingest` is the
 oracle-paired spec twin of the FULL curated streaming policy (decon
 prefilter + quality gate + exact tier + near-dup tier + tombstone
-live-history projection composed). Its oracle match is now covered by
-the registry-wide gate; the planted seven-status contract stays pinned
-here.
+live-history projection composed).
 
-`multimodal_png_pixel_stats` (q_multimodal_png, plans/northstar.py) is
-r16's bank for the R18 window: the first COMPRESSED-codec real decode
+`multimodal_png_pixel_stats` (q_multimodal_png, plans/northstar.py) and
+`embedding_tombstone_ingest` are banked but not registered; both are
+oracle-verified here. The first is the first COMPRESSED-codec real decode
 (stdlib-zlib PNG — per-chunk CRC verification, multi-IDAT reassembly,
-DEFLATE inflate, all five scanline-filter reversals), retiring the
-"compressed codecs are env-blocked" stub line to the codecs that
-genuinely need external libraries. Named r18 retirement (recompute the
-due cohort first, per the standing lesson): `multimodal_pcm_frame_energy`
-— the same-tier audio real-decode, whose oracle compare moves to
-test_retired; the multimodal tier then holds PPM + Y4M + PNG active.
-
-`embedding_tombstone_ingest` is r16's bank for r17: the VECTOR-tier
-analog of docs_tombstone_ingest — the oracle-paired spec twin of
-streaming/vector_index.ingest_batch under delete_vectors tombstones
+DEFLATE inflate, all five scanline-filter reversals). The second is the
+VECTOR-tier analog of docs_tombstone_ingest — the oracle-paired spec twin
+of streaming/vector_index.ingest_batch under delete_vectors tombstones
 (live id guard + live quantized-key guard + the resurrected branch),
 including the PQ-resolution collision property the r15 100x wave replay
-documented. Oracle-verified every session here; r17 flips its @_register
-together with the pre-planned retirement of `distinct_users_exact`
-(r14-green cohort, recomputed r16) and deletes the queue guard.
+documented.
 """
 
 from __future__ import annotations
 
-from real_time_flight_data_pipeline_spark.plans.catalog import (
-    REGISTRY,
-    RETIRED_REGISTRY,
-)
+from real_time_flight_data_pipeline_spark.plans.catalog import REGISTRY
 from real_time_flight_data_pipeline_spark.plans.llm_ext import (
     _docs_curated_ingest_oracle,
     _embedding_tombstone_ingest_oracle,
@@ -62,16 +43,15 @@ def test_near_dup_ingest_registered():
     active registry with its DuckDB oracle attached."""
     assert "docs_near_dup_ingest" in REGISTRY
     assert REGISTRY["docs_near_dup_ingest"].oracle is not None
-    assert len(REGISTRY) == 150  # rotation ceiling fully used again
+    assert len(REGISTRY) == 150  # the 150-query ceiling is fully used
 
 
 def test_tombstone_ingest_registered():
-    """r15 flipped @_register on (VERDICT r14 item 1, the pre-planned
-    rotation): registered with its DuckDB oracle, inside the 150 ceiling
-    (the slot came from retiring rfm_purchase_segments_approx)."""
+    """r15 flipped @_register on (VERDICT r14 item 1): registered with its
+    DuckDB oracle, inside the 150 ceiling."""
     assert "docs_tombstone_ingest" in REGISTRY
     assert REGISTRY["docs_tombstone_ingest"].oracle is not None
-    assert len(REGISTRY) == 150  # rotation ceiling fully used again
+    assert len(REGISTRY) == 150  # the 150-query ceiling is fully used
 
 
 def test_near_dup_ingest_planted_statuses(spark):
@@ -108,15 +88,11 @@ def test_tombstone_ingest_planted_statuses(spark):
 
 
 def test_curated_ingest_registered():
-    """r16 flipped @_register on (VERDICT r15 item 1, the pre-planned
-    rotation): registered with its DuckDB oracle, inside the 150 ceiling
-    (the slot came from retiring docs_simhash, whose signature
-    scaffolding the active docs_simhash_near_dup_pairs composes)."""
+    """r16 flipped @_register on (VERDICT r15 item 1): registered with its
+    DuckDB oracle, inside the 150 ceiling."""
     assert "docs_curated_ingest" in REGISTRY
     assert REGISTRY["docs_curated_ingest"].oracle is not None
-    assert "docs_simhash" in RETIRED_REGISTRY
-    assert "docs_simhash" not in REGISTRY
-    assert len(REGISTRY) == 150  # rotation ceiling fully used again
+    assert len(REGISTRY) == 150  # the 150-query ceiling is fully used
 
 
 def test_curated_ingest_oracle_match(spark):
@@ -200,14 +176,10 @@ def test_embedding_tombstone_ingest_pq_collision_property(spark):
 
 def test_embedding_tombstone_ingest_deliberately_not_registered_yet():
     """The queue decision itself is pinned: the registry is at the
-    150/150 rotation ceiling, and the r17 window slot comes from retiring
-    distinct_users_exact (r14-green cohort — recomputed r16 from the
-    CORRECTNESS artifacts; the HLL production query
-    segment_distinct_users_hll stays active and test_retired keeps the
-    exact/HLL contrast verified). When r17 executes that retirement,
-    flip @_register on and delete this test."""
+    150/150 ceiling, and registering this query means giving up
+    distinct_users_exact's slot. When that happens, flip @_register on
+    and delete this test."""
     assert "embedding_tombstone_ingest" not in REGISTRY
-    assert "embedding_tombstone_ingest" not in RETIRED_REGISTRY
     assert len(REGISTRY) == 150  # ceiling fully used; no free slot
     assert "distinct_users_exact" in REGISTRY  # the named r17 slot
 
@@ -280,14 +252,11 @@ def test_multimodal_png_planted_pixels(spark):
 
 
 def test_multimodal_png_deliberately_not_registered_yet():
-    """Queue decision pinned: the registry is at the 150/150 rotation
-    ceiling and r17's slot is already committed to
-    embedding_tombstone_ingest, so the PNG tier waits for the r18 window.
-    The named r18 retirement is multimodal_pcm_frame_energy (same-tier
-    swap; recompute the due cohort from the CORRECTNESS artifacts before
-    executing). When r18 flips @_register on, delete this test."""
+    """Queue decision pinned: the registry is at the 150/150 ceiling, and
+    registering the PNG tier means giving up the slot of the same-tier
+    multimodal_pcm_frame_energy. When that happens, flip @_register on
+    and delete this test."""
     assert "multimodal_png_pixel_stats" not in REGISTRY
-    assert "multimodal_png_pixel_stats" not in RETIRED_REGISTRY
     assert len(REGISTRY) == 150
     assert "multimodal_pcm_frame_energy" in REGISTRY  # the named r18 slot
 

@@ -37,8 +37,6 @@ def test_time_travel_and_bounded_retention(spark, tmp_path):
     old = t.read(version=vs[0])
     assert {r["v"] for r in old.collect()} == {f"b{i}" for i in range(6)}
     # vacuumed versions are refused, not silently empty
-    import pytest
-
     with pytest.raises(ValueError, match="not in retained history"):
         t.read(version="v_000000000000")
 

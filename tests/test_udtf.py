@@ -1,9 +1,7 @@
 """Python UDTF surface: the last member of the UDF/UDAF/UDTF triple.
 
 The engine's policy is built-in expressions in every hot path (the
-reference has zero UDFs and SURVEY §2.11 says preserve that); the
-measured grouped-Arrow pair (user_value_mad vs _native) quantifies the
-UDF trade. This pins the remaining API member — a table function — works
+reference has zero UDFs and SURVEY §2.11 says preserve that). This pins the remaining API member — a table function — works
 on the session, and that its RELATIONAL twin produces identical rows, so
 the docstring claim "UDTF is the escape hatch, the expression is the hot
 path" is a tested equivalence, not prose. The UDTF here is row-at-a-time
